@@ -186,7 +186,7 @@ object OnnxSessionProvider {
   /** True when the ONNX Runtime classes are loadable in this JVM. */
   lazy val available: Boolean =
     try { Class.forName("ai.onnxruntime.OrtEnvironment"); true }
-    catch { case _: Throwable => false }
+    catch { case _: ReflectiveOperationException | _: LinkageError => false }
 }
 
 /** Deterministic stand-in runtime for zero-egress builds — the codec-stub

@@ -297,64 +297,3 @@ object HashMaskExpr {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(m), setBits))
   }
 }
-
-/** Dictionary shingle bitmask for the exact-vocabulary bitset strategy
-  * ([[graft.operators.Dedup.jaccardPairsBitset]]): each shingle looks up its
-  * position in the driver-collected vocabulary and sets that bit. The
-  * dictionary rides the expression as a broadcast-style reference object
-  * (same closure footprint as the UDF it replaces, minus the row-level
-  * serialization boundary).
-  */
-case class DictMaskExpr(child: Expression, dict: Map[String, Int], nWords: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(s"dict_mask requires ARRAY<STRING>, got $other")
-  }
-
-  // UTF8String-keyed lookup table: generated code hands us UTF8String
-  // elements, so keying by them skips a per-shingle toString
-  @transient private lazy val table: java.util.HashMap[UTF8String, Integer] = {
-    val t = new java.util.HashMap[UTF8String, Integer](dict.size * 2)
-    dict.foreach { case (s, i) => t.put(UTF8String.fromString(s), Integer.valueOf(i)) }
-    t
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    DictMaskExpr.mask(input.asInstanceOf[ArrayData], table, nWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("dictMaskTable", table, "java.util.HashMap")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DictMaskExpr.mask($c, $tableRef, $nWords)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_dict_mask"
-}
-
-object DictMaskExpr {
-  def mask(arr: ArrayData, table: java.util.HashMap[UTF8String, Integer], nWords: Int)
-      : ArrayData = {
-    val m = new Array[Long](nWords)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val idx = table.get(arr.getUTF8String(i))
-        if (idx != null) {
-          val b = idx.intValue()
-          m(b >> 6) |= 1L << (b & 63)
-        }
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(m)
-  }
-}

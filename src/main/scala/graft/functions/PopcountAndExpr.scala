@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** `Σ_i popcount(a[i] & b[i])` over two ARRAY<BIGINT> bitmask columns — the
   * fused set-intersection-cardinality kernel for bitset-encoded shingle
-  * sets ([[graft.operators.Dedup.jaccardPairsBitset]]).
+  * sets ([[graft.operators.Dedup.jaccardPairsBitsetHashed]]).
   *
   * Like [[DotProductExpr]], this exists because the HOF spelling
   * (`aggregate(zip_with(a, b, (x,y) -> bit_count(x & y)), ...)`) allocates

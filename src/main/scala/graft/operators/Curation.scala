@@ -578,8 +578,8 @@ object Curation {
     * An eval split is only honest if no test document has a near-duplicate
     * in train (Lee et al. 2021 "Deduplicating Training Data …" §6.2 shows
     * dup-driven eval inflation — public paper); this composes [[hashSplit]]
-    * with the exact-Jaccard pair machinery ([[Dedup.jaccardPairs]],
-    * prefix-filtered) into the split×split matrix of near-dup pair counts.
+    * with the exact-Jaccard pair machinery into the split×split matrix of
+    * near-dup pair counts.
     * Off-diagonal rows with n_pairs > 0 are the leaks; the diagonal is
     * ordinary within-split redundancy for context.
     *

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *
   *  - EXACT: hash-groupBy on a 128-bit content key. One shuffle on the key;
   *    map-side partial aggregation; no text comparison ever crosses the wire.
-  *  - N-GRAM JACCARD (exact near-dup): explode shingles → equi-join on the
-  *    shingle → count co-occurrences. The join key is the shingle, so only
-  *    docs SHARING a shingle ever meet — no O(n²) cross product. Skewed hot
-  *    shingles can be dropped with `maxDf` (standard df-cap approximation).
+  *  - N-GRAM JACCARD (exact near-dup): a rarest-first prefix filter joins
+  *    docs on shared prefix shingles, so only docs SHARING a shingle ever
+  *    meet — no O(n²) cross product; dense corpora route to a hashed-bitset
+  *    grid instead ([[jaccardPairsAuto]]).
   *  - MINHASH + LSH (approximate near-dup at scale): 32 minhashes → 8 bands
   *    × 4 rows → equi-join on (band, band-signature) → exact-Jaccard verify
   *    of the surviving candidates only. Candidate volume is governed by the
@@ -65,95 +65,59 @@ object Dedup {
 
   // --------------------------------------------------- exact n-gram Jaccard
 
-  /** All pairs (idA < idB) whose n-gram-shingle Jaccard ≥ tau, computed with
-    * the explode→equi-join→count pattern. `maxDf` (optional) drops shingles
-    * appearing in more than that many docs before the join — the standard
-    * hot-key (stop-shingle) cap for skewed corpora; None = exact.
-    */
-  /** All pairs (idA < idB) whose n-gram-shingle Jaccard ≥ tau — EXACT.
-    *
-    * Two physical strategies, same answer; pick by vocabulary statistics:
-    *
-    *  - COUNT-JOIN (`prefixFilter = false`): explode → equi-join on the
-    *    shingle → groupBy-count intersections. Join volume is Σ_s df(s)²,
-    *    but nothing wider than (id, id) crosses the shuffle and partial
-    *    aggregation combines map-side. Wins when the shingle vocabulary is
-    *    SMALL/dense (df high everywhere, e.g. template-generated text) —
-    *    prefix selection can't discriminate there.
-    *  - PREFIX-FILTER (`prefixFilter = true`, the AllPairs/PPJoin family):
-    *    order each doc's shingles rarest-first (global df ascending), join
-    *    only on each doc's first |x| − ⌈tau·|x|⌉ + 1 shingles (any pair with
-    *    J ≥ tau must share a prefix element), verify candidates with the
-    *    true set intersection. Wins on Zipfian NATURAL text, where hot
-    *    shingles dominate Σ df² but never enter a rarest-first prefix.
-    *
-    * `maxDf` additionally DROPS ultra-hot shingles from the similarity
-    * definition itself (an approximation knob; None = exact).
+  /** All pairs (idA < idB) whose n-gram-shingle Jaccard ≥ tau — EXACT, by
+    * PREFIX FILTER (the AllPairs/PPJoin family): order each doc's shingles
+    * rarest-first (global df ascending), join only on each doc's first
+    * |x| − ⌈tau·|x|⌉ + 1 shingles (any pair with J ≥ tau must share a prefix
+    * element), verify candidates with the true set intersection. Wins on
+    * Zipfian NATURAL text, where hot shingles dominate Σ df² but never enter
+    * a rarest-first prefix; dense corpora, where prefix selection can't
+    * discriminate, take [[jaccardPairsBitsetHashed]] ([[jaccardPairsAuto]]
+    * routes between the two).
     */
   def jaccardPairs(
       docs: DataFrame,
       id: Column,
       text: Column,
       n: Int = 2,
-      tau: Double = 0.5,
-      maxDf: Option[Int] = None,
-      prefixFilter: Boolean = true): DataFrame = {
+      tau: Double = 0.5): DataFrame = {
     val sh = docs.select(id.as("id"), shingles(text, n).as("sh"))
       .withColumn("sz", size(col("sh")))
     val exploded = sh.select(col("id"), col("sz"), explode(col("sh")).as("s"))
-    val pruned = maxDf match {
-      case Some(cap) =>
-        val hot = exploded.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") <= cap)
-        exploded.join(hot.select("s"), Seq("s"), "left_semi")
-      case None => exploded
-    }
-    if (!prefixFilter) {
-      val a = pruned.select(col("id").as("id_a"), col("sz").as("sz_a"), col("s"))
-      val b = pruned.select(col("id").as("id_b"), col("sz").as("sz_b"), col("s"))
-      a.join(b, Seq("s"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-        .filter(col("jaccard") >= tau)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    } else {
-      // canonical rarest-first order per doc (ties broken on the shingle).
-      // Round-9 plan shape: df comes from a count window over the same
-      // shingle exchange (the groupBy-joined-back form shingled the corpus
-      // twice), and the ordered table is checkpointed once — it feeds the
-      // prefix self-join plus both verify sides, which are not canonically
-      // identical and would re-run the per-doc sort each
-      val ordered = pruned
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
-        .groupBy("id", "sz")
-        .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("osh"))
-        .withColumn("plen", (col("sz") - ceil(col("sz") * tau) + 1).cast("int"))
-        .withColumn("sh", transform(col("osh"), x => x.getField("s")))
-        .drop("osh")
-        .cut(eager = false)
-      val prefixes = ordered.select(col("id"),
-        explode(slice(col("sh"), lit(1), col("plen"))).as("s"))
-      val cand = prefixes.as("x").join(prefixes.as("y"),
-          col("x.s") === col("y.s") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-      val sets = ordered.select(col("id"), col("sh"), col("sz"))
-      cand
-        .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"), col("sz").as("sz_a")), Seq("id_a"))
-        .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"), col("sz").as("sz_b")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-        .filter(col("jaccard") >= tau)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
+    // canonical rarest-first order per doc (ties broken on the shingle).
+    // Round-9 plan shape: df comes from a count window over the same
+    // shingle exchange (the groupBy-joined-back form shingled the corpus
+    // twice), and the ordered table is checkpointed once — it feeds the
+    // prefix self-join plus both verify sides, which are not canonically
+    // identical and would re-run the per-doc sort each
+    val ordered = exploded
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
+      .groupBy("id", "sz")
+      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("osh"))
+      .withColumn("plen", (col("sz") - ceil(col("sz") * tau) + 1).cast("int"))
+      .withColumn("sh", transform(col("osh"), x => x.getField("s")))
+      .drop("osh")
+      .cut(eager = false)
+    val prefixes = ordered.select(col("id"),
+      explode(slice(col("sh"), lit(1), col("plen"))).as("s"))
+    val cand = prefixes.as("x").join(prefixes.as("y"),
+        col("x.s") === col("y.s") && col("x.id") < col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+      .distinct()
+    val sets = ordered.select(col("id"), col("sh"), col("sz"))
+    cand
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"), col("sz").as("sz_a")), Seq("id_a"))
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"), col("sz").as("sz_b")), Seq("id_b"))
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= tau)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Exact Jaccard pairs with the physical strategy chosen FROM DATA
-    * STATISTICS — the cost-based front door over the oracle-equal trio
-    * ([[jaccardPairs]] count-join / prefix-filter, [[jaccardPairsBitsetHashed]]).
+    * STATISTICS — the cost-based front door over the oracle-equal pair
+    * ([[jaccardPairs]] prefix filter, [[jaccardPairsBitsetHashed]] grid).
     *
     * Decision statistic: the two strategies' actual cost drivers.
     *  - grid-bitset: Θ(n²/blocks) fused popcount kernels — n² is its cost,
@@ -191,7 +155,7 @@ object Dedup {
     // Double arithmetic: nDocs² overflows Long past ~3.04e9 docs (wrapping
     // negative and force-routing every huge corpus to the Θ(n²) grid)
     if (sumDf2 > nDocs.toDouble * nDocs.toDouble / 2.0) jaccardPairsBitsetHashed(docs, id, text, n, tau)
-    else jaccardPairs(docs, id, text, n, tau, prefixFilter = true)
+    else jaccardPairs(docs, id, text, n, tau)
   }
 
   /** The shared routing statistic for pair-join strategy choice: (n docs,
@@ -288,11 +252,7 @@ object Dedup {
     * faster there); [[containmentPairsAuto]] routes between the two from
     * the same Σdf² probe as [[jaccardPairsAuto]].
     *
-    * `maxDf` is an additional screen dial: dropping shingles with df > cap
-    * removes them from the JOIN only, never the denominator, so measured
-    * containment only DECREASES — conservative (may miss pairs whose shared
-    * shingles are all corpus-hot, never a false positive). `minShingles`
-    * suppresses noise pairs from trivially short docs.
+    * `minShingles` suppresses noise pairs from trivially short docs.
     */
   def containmentPairs(
       docs: DataFrame,
@@ -300,21 +260,13 @@ object Dedup {
       text: Column,
       n: Int = 2,
       tau: Double = 0.8,
-      minShingles: Int = 1,
-      maxDf: Option[Int] = None): DataFrame = {
+      minShingles: Int = 1): DataFrame = {
     val sh = docs.select(id.as("id"), shingles(text, n).as("sh"))
       .withColumn("sz", size(col("sh")))
       .filter(col("sz") >= minShingles)
     val exploded = sh.select(col("id"), col("sz"), explode(col("sh")).as("s"))
-    val joined = maxDf match {
-      case Some(cap) =>
-        val rare = exploded.groupBy("s").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap)
-        exploded.join(rare.select("s"), Seq("s"), "left_semi")
-      case None => exploded
-    }
-    val a = joined.select(col("id").as("id_a"), col("sz").as("sz_a"), col("s"))
-    val b = joined.select(col("id").as("id_b"), col("sz").as("sz_b"), col("s"))
+    val a = exploded.select(col("id").as("id_a"), col("sz").as("sz_a"), col("s"))
+    val b = exploded.select(col("id").as("id_b"), col("sz").as("sz_b"), col("s"))
     a.join(b, Seq("s"))
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
@@ -395,62 +347,15 @@ object Dedup {
     else containmentPairs(docs, id, text, n, tau, minShingles)
   }
 
-  /** Exact Jaccard pairs, BITSET strategy — for the dense-small-vocabulary
+  /** Exact Jaccard pairs, hashed-bitset GRID strategy — for the dense
     * regime (template/log-like corpora) where nearly every pair shares
     * shingles, so candidate pruning cannot help and the O(n²) pair space is
-    * output-bound anyway. The right plan there is to make the per-pair
-    * kernel free: encode each doc's shingle set as a bitmask over the
-    * (small, driver-collected) vocabulary and compute |A∩B| as a fused
-    * AND+popcount loop ([[graft.functions.PopcountAndExpr]]).
-    *
-    * Requires |vocab| ≤ 2^20 by construction (the dictionary rides the task
-    * closure); for larger vocabularies use the prefix-filter or MinHash
-    * strategies — this trio is the cost-based-choice story, see
-    * [[jaccardPairs]].
-    */
-  def jaccardPairsBitset(
-      docs: DataFrame,
-      id: Column,
-      text: Column,
-      n: Int = 2,
-      tau: Double = 0.5): DataFrame = {
-    val sh = docs.select(id.as("id"), shingles(text, n).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      .filter(col("sz") > 0)
-    val vocab = sh.select(explode(col("sh")).as("s")).distinct()
-      .orderBy("s").collect().map(_.getString(0))
-    require(vocab.length <= (1 << 20),
-      s"bitset strategy needs a small vocabulary, got ${vocab.length} shingles")
-    val dict = vocab.zipWithIndex.toMap
-    val nWords = math.max(1, (vocab.length + 63) / 64)
-    // native codegen kernel (no UDF serialization boundary); the dictionary
-    // rides the expression as a reference object, same footprint as a closure
-    val dictMask = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.DictMaskExpr(
-        org.apache.spark.sql.graft.Bridge.expression(col("sh")), dict, nWords))
-    val t = sh.select(col("id"), col("sz"), dictMask.as("mask"))
-    val inter = org.apache.spark.sql.graft.Bridge.column(
-      graft.functions.PopcountAndExpr(
-        org.apache.spark.sql.graft.Bridge.expression(col("a.mask")),
-        org.apache.spark.sql.graft.Bridge.expression(col("b.mask"))))
-    // length filter (J ≥ τ ⇒ τ·|B| ≤ |A| and τ·|A| ≤ |B|) inside the join
-    // condition prunes size-incompatible pairs before any row is emitted;
-    // the pair space is enumerated by the grid equi-join, not a cartesian
-    gridSelfJoin(t,
-        col("a.sz") >= lit(tau) * col("b.sz") &&
-          col("b.sz") >= lit(tau) * col("a.sz"))
-      .withColumn("inter", inter)
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("a.sz") + col("b.sz") - col("inter")))
-      .filter(col("jaccard") >= tau)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("jaccard"))
-  }
-
-  /** Vocabulary-free variant of [[jaccardPairsBitset]]: shingles hash into a
-    * fixed `bits`-wide space (fingerprint mod bits), so there is NO
-    * driver-collected dictionary — the piece of the exact-vocab strategy
-    * that cannot scale (a 100 TB corpus's shingle vocabulary neither fits in
-    * nor belongs on the driver).
+    * output-bound anyway. Each doc's shingle set is encoded as a bitmask
+    * and |A∩B| bounded by a fused AND+popcount kernel
+    * ([[graft.functions.PopcountAndExpr]]). Shingles hash into a fixed
+    * `bits`-wide space (fingerprint mod bits), so there is NO
+    * driver-collected dictionary (a 100 TB corpus's shingle vocabulary
+    * neither fits in nor belongs on the driver).
     *
     * Soundness: for a pair (A, B) with per-doc collision losses
     * `coll = |shingles| − popcount(mask)`, the hashed intersection obeys
@@ -1402,10 +1307,8 @@ object Dedup {
     * input shrinks by half or more at zero accuracy cost. Norms are
     * computed over the FULL vector, so the result is the exact full-TF
     * cosine. Join volume is Σ_t df(t)² — the hot-term (stopword) skew is
-    * real; `maxDf` caps it by dropping terms in more than that many docs
-    * from the similarity definition itself (documented approximation knob,
-    * None = exact; the df-ordered prefix-filter of [[jaccardPairs]] does
-    * not transfer because weighted cosine has no set-prefix bound).
+    * real (the df-ordered prefix-filter of [[jaccardPairs]] does not
+    * transfer because weighted cosine has no set-prefix bound).
     *
     * Determinism: tf counts and dot products are exact integers; the only
     * floating-point is the final `dot / (sqrt(n2a)·sqrt(n2b))`, written in
@@ -1416,17 +1319,14 @@ object Dedup {
       docs: DataFrame,
       id: Column,
       text: Column,
-      tau: Double,
-      maxDf: Option[Long] = None): DataFrame = {
+      tau: Double): DataFrame = {
     val tf = docs
       .select(id.as("id"), explode(split(text, "\\s+")).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
     // full-vector squared norm (exact integer), BEFORE any df pruning
     val norms = tf.groupBy("id").agg(sum(col("tf") * col("tf")).as("n2"))
     val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val kept = maxDf.foldLeft(df_.filter(col("df") >= 2)) {
-      (d, cap) => d.filter(col("df") <= cap)
-    }
+    val kept = df_.filter(col("df") >= 2)
     val postings = tf.join(kept.select("term"), Seq("term"))
     val dots = postings.as("a")
       .join(postings.as("b"),
@@ -1447,7 +1347,7 @@ object Dedup {
     * for the corpus shape where the postings join DEGENERATES: template/log
     * text with a tiny global vocabulary (the sf0.1 documents table has 31
     * distinct tokens across 5000 docs, making Σ df² ≈ 4.5·10⁸ join rows —
-    * the same density failure measured for the Jaccard count-join). Each
+    * the same density that routes Jaccard to its grid). Each
     * doc's tf map is pivoted onto the sorted global vocabulary as a dense
     * ARRAY<BIGINT> and pairs run through the 1-Bucket-Theta [[gridSelfJoin]]
     * (even reducer load, `blocks` as the parallelism dial) with a
@@ -1460,26 +1360,20 @@ object Dedup {
     * routes are bit-equal, pair for pair (df-singleton terms contribute 0
     * to every dot here, matching their exact prune there).
     *
-    * `vocab`: pass a pre-collected sorted vocabulary to skip the collect
-    * (the auto router does); must cover every term or require fails.
+    * `vocab`: the sorted global vocabulary. Terms outside it are ignored,
+    * so it must cover every term to match [[tfCosinePairs]];
+    * [[tfCosinePairsAuto]] collects it and checks its size.
     */
   def tfCosinePairsDense(
       docs: DataFrame,
       id: Column,
       text: Column,
       tau: Double,
-      vocab: Option[Seq[String]] = None,
-      maxVocab: Int = 4096,
+      vocab: Seq[String],
       blocks: Int = 32): DataFrame = {
     val tf = docs
       .select(id.as("id"), explode(split(text, "\\s+")).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-    val v = vocab.getOrElse {
-      tf.select("term").distinct().orderBy("term").limit(maxVocab + 1)
-        .collect().map(_.getString(0)).toSeq
-    }
-    require(v.size <= maxVocab,
-      s"vocabulary exceeds maxVocab=$maxVocab — use tfCosinePairs (postings join)")
     // the fused native kernel, not aggregate(zip_with(...)): the HOF form
     // allocates an intermediate array per PAIR — on the O(n²) grid join
     // that allocation is the whole runtime (measured 6.5 s → see kernel
@@ -1492,7 +1386,7 @@ object Dedup {
     val t = tf.groupBy("id")
       .agg(map_from_entries(collect_list(struct(col("term"), col("tf")))).as("m"))
       .select(col("id"),
-        array(v.map(tm => coalesce(element_at(col("m"), lit(tm)), lit(0L))): _*).as("v"))
+        array(vocab.map(tm => coalesce(element_at(col("m"), lit(tm)), lit(0L))): _*).as("v"))
       .withColumn("nrm", sqrt(VF.normSq(col("v"))))
       // both grid sides re-derive their input: cut so the tokenize +
       // tf map pivot runs once (round-9; measured 3.15 -> 2.53 s at sf0.1)
@@ -1509,7 +1403,7 @@ object Dedup {
     * postings join's candidate volume beats the grid's n²/2, and the dense
     * route additionally requires the global vocabulary to fit `maxVocab`
     * (a Σ df²-dense corpus with a LARGE vocabulary — natural text dominated
-    * by stopwords — stays on postings, where `maxDf` is the right lever).
+    * by stopwords — stays on postings).
     */
   def tfCosinePairsAuto(
       docs: DataFrame,
@@ -1525,7 +1419,7 @@ object Dedup {
         .orderBy("term").limit(maxVocab + 1)
         .collect().map(_.getString(0)).toSeq
       if (v.size <= maxVocab)
-        return tfCosinePairsDense(docs, id, text, tau, Some(v), maxVocab, blocks)
+        return tfCosinePairsDense(docs, id, text, tau, v, blocks)
     }
     tfCosinePairs(docs, id, text, tau)
   }

@@ -116,7 +116,7 @@ object Multimodal {
     /** True when the named decoder class is loadable in this JVM. */
     def available(className: String): Boolean =
       try { Class.forName(className); true }
-      catch { case _: Throwable => false }
+      catch { case _: ReflectiveOperationException | _: LinkageError => false }
   }
 
   /** STUB decoder kernel — deterministic fake standing in for a real codec.

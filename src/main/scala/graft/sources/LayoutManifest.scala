@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Versioned manifest commit protocol for the layout tier — the crash-safe
   * replacement for delete-then-rename swaps.
@@ -302,7 +303,7 @@ object LayoutManifest {
             // tasks.foreach(_.get()) and abort bootstrap/commit/zoneMap
             // where the exact scan fallback handles the file fine
             val e = try footerEntry(conf, p, statCols)
-                    catch { case _: Throwable => None }
+                    catch { case NonFatal(_) => None }
             e match {
               case Some(fe) => entries.put(fe.name, fe)
               case None     => failed.set(true)

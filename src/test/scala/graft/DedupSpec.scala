@@ -13,6 +13,23 @@ class DedupSpec extends SparkSpec {
     rows.toDF("id", "text")
   }
 
+  /** Independent exact set-Jaccard reference: collect the rows, shingle
+    * them in plain Scala (word n-grams joined by a space, as
+    * [[Dedup.shingles]]), and score all n² pairs.
+    */
+  private def bruteJaccard(df: org.apache.spark.sql.DataFrame, id: String, text: String,
+      n: Int = 2, tau: Double = 0.5): Set[(Long, Long, Double)] = {
+    val sets = df.select(col(id), col(text)).collect().map { r =>
+      val toks = Option(r.getString(1)).map(_.split("\\s+", -1)).getOrElse(Array.empty[String])
+      r.getLong(0) -> toks.sliding(n).filter(_.length == n).map(_.mkString(" ")).toSet
+    }
+    (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b && sa.nonEmpty && sb.nonEmpty
+      inter = (sa & sb).size
+      j = inter.toDouble / (sa.size + sb.size - inter) if j >= tau
+    } yield (a, b, j)).toSet
+  }
+
   test("shingles: word bigrams, distinct, short-doc guard") {
     import testImplicits._
     val out = Seq("a b c d", "a b a b", "solo", "").toDF("text")
@@ -42,15 +59,6 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(r(0).getAs[Double]("jaccard") - 0.5) < 1e-9)
   }
 
-  test("jaccardPairs: maxDf cap drops hot shingles (approximation knob)") {
-    val d = docs(1L -> "hot hot x", 2L -> "hot hot y", 3L -> "hot hot z")
-    // 'hot hot' appears in all 3 docs; cap df<=2 removes it → no pair survives
-    val capped = Dedup.jaccardPairs(d, col("id"), col("text"), n = 2, tau = 0.1, maxDf = Some(2))
-    assert(capped.isEmpty)
-    val exact = Dedup.jaccardPairs(d, col("id"), col("text"), n = 2, tau = 0.1)
-    assert(exact.count() == 3)
-  }
-
   test("containmentPairs: a quoted subset scores 1.0 where jaccard stays low") {
     // doc 2 is fully contained in doc 1 (a 4-shingle doc inside a
     // 12-shingle doc): containment 1.0, jaccard 4/12 = 0.33
@@ -66,7 +74,7 @@ class DedupSpec extends SparkSpec {
     assert(jac == 0, "jaccard at 0.5 must miss the asymmetric pair")
   }
 
-  test("containmentPairs: minShingles suppresses short docs; maxDf only lowers scores") {
+  test("containmentPairs: minShingles suppresses short docs") {
     val d = docs(
       1L -> "a b c d e f g h i j k",
       2L -> "a b c",            // 2 shingles — below minShingles=3
@@ -76,17 +84,6 @@ class DedupSpec extends SparkSpec {
       tau = 0.5, minShingles = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base == Set((1L, 3L)))
-    // df cap drops shared shingles from the join only: measured containment
-    // can only decrease (conservative screen), never create a new pair
-    val capped = Dedup.containmentPairs(d, col("id"), col("text"),
-      tau = 0.0, minShingles = 3, maxDf = Some(1))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val uncapped = Dedup.containmentPairs(d, col("id"), col("text"),
-      tau = 0.0, minShingles = 3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    capped.foreach { case (pair, c) =>
-      assert(uncapped.contains(pair) && c <= uncapped(pair), s"$pair")
-    }
   }
 
   test("containmentPairs: count-join, grid-bitset, and auto routes agree") {
@@ -116,17 +113,16 @@ class DedupSpec extends SparkSpec {
         .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
           math.round(r.getAs[Double]("jaccard") * 1e9)))
         .toSet
-    def run(prefix: Boolean) = canon(
-      Dedup.jaccardPairs(docs, col("doc_id"), col("text"), n = 2, tau = 0.5, prefixFilter = prefix))
-    val p = run(true)
-    assert(p == run(false))
-    assert(p == canon(Dedup.jaccardPairsBitset(docs, col("doc_id"), col("text"), n = 2, tau = 0.5)))
+    val p = canon(Dedup.jaccardPairs(docs, col("doc_id"), col("text"), n = 2, tau = 0.5))
+    assert(p == bruteJaccard(docs, "doc_id", "text").map { case (a, b, j) =>
+      (a, b, math.round(j * 1e9)) })
     assert(p == canon(Dedup.jaccardPairsBitsetHashed(docs, col("doc_id"), col("text"), n = 2, tau = 0.5)))
     // the hashed prefilter is complete at ANY bit width (collision losses
     // are bounded per pair) — 64 bits forces heavy collisions yet the
     // exact-verify output must not change
     assert(p == canon(Dedup.jaccardPairsBitsetHashed(docs, col("doc_id"), col("text"),
       n = 2, tau = 0.5, bits = 64)))
+    assert(p == canon(Dedup.jaccardPairsAuto(docs, col("doc_id"), col("text"), n = 2, tau = 0.5)))
     assert(p.nonEmpty, "testdata contains planted near-dups")
   }
 
@@ -329,8 +325,7 @@ class DedupSpec extends SparkSpec {
     // routing never changes the answer: dense output equals the exact ground truth
     val auto = Dedup.jaccardPairsAuto(dense, col("id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.jaccardPairs(dense, col("id"), col("text"), prefixFilter = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = bruteJaccard(dense, "id", "text").map { case (a, b, _) => (a, b) }
     assert(auto == exact)
   }
 
@@ -517,7 +512,8 @@ class DedupSpec extends SparkSpec {
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val sparse = collect(Dedup.tfCosinePairs(dense, col("id"), col("text"), tau = 0.5))
-    val grid = collect(Dedup.tfCosinePairsDense(dense, col("id"), col("text"), tau = 0.5))
+    val grid = collect(Dedup.tfCosinePairsDense(dense, col("id"), col("text"), tau = 0.5,
+      vocab = Seq("a", "b", "c")))
     assert(grid == sparse && sparse.nonEmpty)
     val autoPlan = Dedup.tfCosinePairsAuto(dense, col("id"), col("text"), tau = 0.5)
       .queryExecution.executedPlan.toString
@@ -530,18 +526,5 @@ class DedupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!uniqPlan.contains("graft_dot"),
       s"unique-vocab corpus must stay on the postings join:\n$uniqPlan")
-  }
-
-  test("tfCosinePairs maxDf drops hot terms from the similarity definition") {
-    // 'the' is in every doc (df=3); with maxDf=2 it leaves both dot AND the
-    // kept-join — docs sharing only 'the' produce no pair at all
-    val d = docs((1L, "the alpha"), (2L, "the beta"), (3L, "the alpha"))
-    val exact = Dedup.tfCosinePairs(d, col("id"), col("text"), tau = 0.1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact == Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    val capped = Dedup.tfCosinePairs(d, col("id"), col("text"), tau = 0.1,
-        maxDf = Some(2L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped == Set((1L, 3L))) // only the alpha-sharing pair survives
   }
 }

@@ -343,28 +343,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("DictMaskExpr ≡ the UDF closure it replaced, on arbitrary dictionaries") {
-    import testImplicits._
-    import org.apache.spark.sql.graft.Bridge
-    val gen: Gen[(List[String], List[String])] = for {
-      vocabN <- Gen.choose(1, 100)
-      vocab <- Gen.const((0 until vocabN).map(i => s"tok$i").toList)
-      n <- Gen.choose(0, 40)
-      ss <- Gen.listOfN(n, Gen.oneOf(Gen.oneOf(vocab), Gen.const("missing")))
-    } yield (vocab, ss)
-    samples(gen, 25).foreach { case (vocab, ss) =>
-      val dict = vocab.zipWithIndex.toMap
-      val nWords = math.max(1, (vocab.length + 63) / 64)
-      val df = Seq(Tuple1(ss)).toDF("sh")
-      val got = df.select(Bridge.column(
-          graft.functions.DictMaskExpr(Bridge.expression(col("sh")), dict, nWords)).as("m"))
-        .head().getSeq[Long](0).toArray
-      val expect = new Array[Long](nWords)
-      ss.foreach(s => dict.get(s).foreach(i => expect(i >> 6) |= 1L << (i & 63)))
-      assert(java.util.Arrays.equals(got, expect), s"vocab=${vocab.size} ss=$ss")
-    }
-  }
-
   test("GramAgg ≡ brute-force Σ v·vᵀ; partition-count invariant to 1e-9") {
     import testImplicits._
     val gen: Gen[List[List[Float]]] = for {
