@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object AnnEval {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
+    val embs = Parquet.read(spark, s"$sfDir/embeddings.parquet").cache()
     val n = embs.count().toDouble
     val queries: Seq[(Long, Seq[Float])] = embs.filter(col("vec_id") < numQ)
       .select("vec_id", "embedding").collect()

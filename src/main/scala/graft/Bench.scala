@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main — per-query wall time at the given SF dir, one JSON line.
   *
@@ -26,7 +27,7 @@ object Bench {
       try {
         val src = scala.io.Source.fromFile(path)
         try src.getLines().nextOption() finally src.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val memAvailKb = try {
@@ -34,7 +35,7 @@ object Bench {
       try src.getLines().collectFirst {
         case l if l.startsWith("MemAvailable:") => l.split("\\s+")(1).toLong
       }.getOrElse(-1L) finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
     // cgroup v2 ("max 100000" | "200000 100000") or v1 quota/period
     val cpuQuota = readFirst("/sys/fs/cgroup/cpu.max").map { l =>
       val parts = l.split("\\s+")
@@ -62,7 +63,7 @@ object Bench {
         val f = l.trim.split("\\s+").drop(1).map(_.toLong)
         (if (f.length > 7) f(7) else 0L, f.sum)
       } finally src.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   def main(args: Array[String]): Unit = {
     val boxStart = boxConditions()
@@ -82,7 +83,7 @@ object Bench {
     // session startup (measured ~4.5 s on the first action otherwise).
     Seq("q_knn", "q_text_stats", "q_filter_eq", "q_rel_pricing")
       .foreach(n => SparkEntry.queries.get(n).foreach { fn =>
-        try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
+        try { fn(spark, sfDir).count(); () } catch { case NonFatal(_) => () }
       })
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b scopes the run (drift-attribution /
     // regression-bisection tool); the default remains the full suite.
@@ -111,7 +112,7 @@ object Bench {
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => failed += name; false }
+                 catch { case NonFatal(_) => failed += name; false }
         if (rep > 0 && ok) times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
       }
     }

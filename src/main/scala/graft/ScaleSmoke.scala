@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -336,7 +337,7 @@ object ScaleSmoke {
     // volume mult² for what is logically the same dirty drop; 4 hex chars
     // collide between replicas of one name often enough to leak
     // cross-replica matches back in)
-    lazy val custU = spark.read.parquet(s"$sfDir/customer.parquet")
+    lazy val custU = Parquet.read(spark, s"$sfDir/customer.parquet")
       .crossJoin(broadcast(reps))
       .withColumn("__id", col("c_custkey") * mult + col("_rep"))
       .withColumn("c_name", concat(
@@ -487,7 +488,7 @@ object ScaleSmoke {
     }
 
     // ---- embeddings-family ----------------------------------------------
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb0 = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     val embBase = emb0.count()
     lazy val emb = replicate(emb0, Seq("vec_id"), None).localCheckpoint()
     lazy val query = graft.sources.VectorStore.fromEmbeddingsTable(spark, sfDir)

@@ -3,7 +3,7 @@ package graft
 import graft.Checkpoint.CheckpointOps
 import graft.functions.{VectorFunctions => VF}
 import graft.operators._
-import graft.sources.VectorStore
+import graft.sources.{Parquet, VectorStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1406,7 +1406,7 @@ object SparkEntry {
         .orderBy("shard", "bin")
     }),
     "q_pipeline_embed" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val dominated = Dedup.cosinePairsLsh(embs, col("vec_id"), col("embedding"),
           tau = 0.4, planes = AnnSearch.hyperplanes(dim = 64), probeRadius = 2)
         .select(col("id_b").as("vec_id")).distinct()
@@ -1798,7 +1798,7 @@ object SparkEntry {
     // reducer load, `blocks` = scale-out dial); see Dedup.cosinePairs for
     // why LSH blocking cannot be complete at tau=0.4 on this corpus
     "q_dedup_embedding" -> ((s, dir) =>
-      Dedup.cosinePairs(s.read.parquet(s"$dir/embeddings.parquet"),
+      Dedup.cosinePairs(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), tau = 0.4)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b")),
@@ -1807,7 +1807,7 @@ object SparkEntry {
     // cosine verify inside. The oracle replicates the bucket math in SQL
     // (like q_ann_topk), so the check is exact regardless of LSH recall.
     "q_dedup_embedding_lsh" -> ((s, dir) =>
-      Dedup.cosinePairsLsh(s.read.parquet(s"$dir/embeddings.parquet"),
+      Dedup.cosinePairsLsh(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), tau = 0.4,
           planes = AnnSearch.hyperplanes(dim = 64), probeRadius = 2)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
@@ -1816,7 +1816,7 @@ object SparkEntry {
     // path where the bucket becomes a partition key and probing = pruning
     "q_ann_topk" -> ((s, dir) => {
       val planes = AnnSearch.hyperplanes(dim = 64)
-      val indexed = AnnSearch.index(s.read.parquet(s"$dir/embeddings.parquet"),
+      val indexed = AnnSearch.index(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("embedding"), planes)
       AnnSearch.search(indexed, col("vec_id").cast("string"), col("embedding"),
           queryVec(s, dir), planes, k = 10, probeRadius = 2)
@@ -1831,7 +1831,7 @@ object SparkEntry {
     "q_ann_topk_clustered" -> ((s, dir) => {
       val planes = AnnSearch.hyperplanes(dim = 64)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_clustered"
-      AnnSearch.clusteredWrite(s.read.parquet(s"$dir/embeddings.parquet"),
+      AnnSearch.clusteredWrite(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("embedding"), planes, tmp, numFiles = 8)
       // file spans + plane identity resolve from the COMMITTED manifest —
       // the probe read schedules no stats scan at all
@@ -1847,12 +1847,12 @@ object SparkEntry {
     "q_ann_forget" -> ((s, dir) => {
       val planes = AnnSearch.hyperplanes(dim = 64)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_forget"
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 8)
       val tomb = embs.filter(col("vec_id").isin(3L, 7L, 11L, 19L, 42L))
         .select(col("vec_id"), col("embedding"))
       AnnSearch.deleteVectors(s, tmp, "vec_id", tomb, planes)
-      s.read.parquet(tmp).select(col("vec_id"), col("bucket"))
+      Parquet.read(s, tmp).select(col("vec_id"), col("bucket"))
         .orderBy("vec_id")
     }),
     // GDPR forget by BARE IDS (no embeddings in the request): the per-file
@@ -1865,7 +1865,7 @@ object SparkEntry {
       import s.implicits._
       val planes = AnnSearch.hyperplanes(dim = 64)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_forget_id"
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 8)
       graft.sources.Layout.writeBloomSidecar(s, tmp, "vec_id")
       AnnSearch.deleteVectorsById(s, tmp, "vec_id",
@@ -1883,7 +1883,7 @@ object SparkEntry {
       val planes0 = AnnSearch.hyperplanes(dim = 64, numPlanes = 4)
       val planes1 = AnnSearch.hyperplanes(dim = 64, numPlanes = 8)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_rebuild_q"
-      AnnSearch.clusteredWrite(s.read.parquet(s"$dir/embeddings.parquet"),
+      AnnSearch.clusteredWrite(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("embedding"), planes0, tmp, numFiles = 8)
       AnnSearch.rebuildClustered(s, tmp, "embedding", planes1, numFiles = 8)
       AnnSearch.searchClusteredAt(s, tmp, col("vec_id").cast("string"),
@@ -1896,7 +1896,7 @@ object SparkEntry {
     // assignment; production swaps in IvfSearch.train k-means — identical
     // machinery). nprobe/C is the recall dial; scoring stays exact cosine.
     "q_ann_ivf" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = IvfSearch.centroidsFromIds(embs, col("vec_id"), col("embedding"), c = 16)
       val indexed = IvfSearch.index(embs, col("embedding"), cents)
       IvfSearch.search(indexed, col("vec_id").cast("string"), col("embedding"),
@@ -1909,7 +1909,7 @@ object SparkEntry {
     // partition twin of q_ann_topk_clustered. Same dials as q_ann_ivf, so
     // it shares that oracle.
     "q_ann_ivf_clustered" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = IvfSearch.centroidsFromIds(embs, col("vec_id"), col("embedding"), c = 16)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ivf_clustered"
       IvfSearch.clusteredWrite(embs, col("embedding"), cents, tmp, numFiles = 8)
@@ -1926,7 +1926,7 @@ object SparkEntry {
     // identical machinery) and swaps in one manifest commit. The retired
     // centroids are rejected by fingerprint afterwards.
     "q_ann_ivf_rebuild" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents8 = IvfSearch.centroidsFromIds(embs, col("vec_id"), col("embedding"), c = 8)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ivf_rebuild_q"
       IvfSearch.clusteredWrite(embs, col("embedding"), cents8, tmp, numFiles = 8)
@@ -1940,7 +1940,7 @@ object SparkEntry {
     // IVF-PQ: coarse list pruning + residual ADC from codes + exact refine
     // (FAISS IndexIVFPQ shape); codebooks are residuals of vec_ids 8..23
     "q_ann_ivf_pq" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = IvfSearch.centroidsFromIds(embs, col("vec_id"), col("embedding"), c = 8)
       val cb = IvfPq.residualCodebooks(embs, col("vec_id"), col("embedding"),
         cents, m = 8, ks = 16)
@@ -1955,7 +1955,7 @@ object SparkEntry {
     // scalar subquery — proves a spark.sql-only user gets the same engine
     "q_sql_knn" -> ((s, dir) => {
       GraftExtensions.register(s)
-      s.read.parquet(s"$dir/embeddings.parquet").createOrReplaceTempView("sql_vectors")
+      Parquet.read(s, s"$dir/embeddings.parquet").createOrReplaceTempView("sql_vectors")
       s.sql(
         """WITH scored AS (
           |  SELECT CAST(v.vec_id AS STRING) AS id,
@@ -1971,7 +1971,7 @@ object SparkEntry {
     // centroids, oracle-replicable), flag within-cluster cosine near-dups,
     // keep the min-id representative — pair space Σ|cluster|², equi-join
     "q_dedup_semantic" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cents = IvfSearch.centroidsFromIds(embs, col("vec_id"), col("embedding"), c = 16)
       Dedup.semanticDedup(embs, col("vec_id"), col("embedding"), cents, tau = 0.4)
         .orderBy("id")
@@ -2207,7 +2207,7 @@ object SparkEntry {
     // usearch-variant parity: int8 quantized cosine top-k (scale-invariant
     // codes, 4x narrower storage; floor(+0.5) quantization mirrored in SQL)
     "q_knn_quantized" -> ((s, dir) => {
-      val qz = Quantized.quantize(s.read.parquet(s"$dir/embeddings.parquet"), col("embedding"))
+      val qz = Quantized.quantize(Parquet.read(s, s"$dir/embeddings.parquet"), col("embedding"))
       Quantized.search(qz, col("vec_id").cast("string"), queryVec(s, dir), k = 10)
         .withColumn("score", round(col("score"), 6))
         .orderBy(desc("score"), asc("id"))
@@ -2243,7 +2243,7 @@ object SparkEntry {
     // binary (1-bit) quantization: 64 dims in one BIGINT, XOR+popcount
     // Hamming prefilter over all rows, exact cosine rerank of the best 50
     "q_knn_binary" -> ((s, dir) => {
-      val b = Quantized.binarize(s.read.parquet(s"$dir/embeddings.parquet"),
+      val b = Quantized.binarize(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("embedding"), dim = 64)
       Quantized.binarySearch(b, col("vec_id").cast("string"), col("embedding"),
           queryVec(s, dir), k = 10, rerank = 50)
@@ -2256,7 +2256,7 @@ object SparkEntry {
     // the distance list has no ~0 leading entry (relative increases over a
     // near-zero denominator are float-noise-sensitive on BOTH engines).
     "q_knn_quantized_autocut" -> ((s, dir) => {
-      val corpus = s.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") =!= 0)
+      val corpus = Parquet.read(s, s"$dir/embeddings.parquet").filter(col("vec_id") =!= 0)
       val qz = Quantized.quantize(corpus, col("embedding"))
       val d = Quantized.searchDistance(qz, col("vec_id").cast("string"), queryVec(s, dir), k = 10)
       Autocut.ascending(d, col("distance"), col("id"))
@@ -2269,7 +2269,7 @@ object SparkEntry {
     // XOR+popcount pass over 64 bytes/row, exact cosine rerank of the best
     // 50 on the original floats
     "q_knn_binary_wide" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val ev = VF.toDoubleArray(col("embedding"))
       def thr(sl: Int): Double = (sl - 3.5) * 0.04
       val wide = flatten(array((0 until 8).map(sl => transform(ev, x => x - lit(thr(sl)))): _*))
@@ -2287,7 +2287,7 @@ object SparkEntry {
     // Deterministic codebooks (subvectors of the 16 lowest-id vectors) so
     // the oracle replicates encode + ADC arithmetic exactly in SQL.
     "q_knn_pq" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cb = Pq.codebooksFromIds(embs, col("vec_id"), col("embedding"), m = 8, ks = 16)
       val enc = Pq.encode(embs, col("embedding"), cb)
       Pq.search(enc, col("vec_id").cast("string"),
@@ -2299,7 +2299,7 @@ object SparkEntry {
     // rerank of the shortlist — the IVF-PQ-refine shape where float reads
     // are bounded by the rerank budget, not the corpus
     "q_knn_pq_refined" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val cb = Pq.codebooksFromIds(embs, col("vec_id"), col("embedding"), m = 8, ks = 16)
       val enc = Pq.encode(embs, col("embedding"), cb)
       Pq.searchRefined(enc, col("vec_id").cast("string"), col("embedding"),
@@ -2310,7 +2310,7 @@ object SparkEntry {
     // batch k-NN: top-5 per query for 3 query vectors in one corpus scan
     "q_knn_batch" -> ((s, dir) => {
       val store = VectorStore.fromEmbeddingsTable(s, dir)
-      val qs = s.read.parquet(s"$dir/embeddings.parquet")
+      val qs = Parquet.read(s, s"$dir/embeddings.parquet")
         .filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
       Search.findMostSimilarBatch(store, qs, k = 5)
@@ -2321,7 +2321,7 @@ object SparkEntry {
     // equi-join on bucket -> GroupTopK; scored volume is the probed-bucket
     // sizes, not n·Q
     "q_knn_batch_ann" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val planes = AnnSearch.hyperplanes(dim = 64)
       val indexed = AnnSearch.index(embs, col("embedding"), planes)
       val qs = embs.filter(col("vec_id") < 3)
@@ -2336,7 +2336,7 @@ object SparkEntry {
     // the probe-join + GroupTopK ranking runs on the pruned read. Same
     // dials and output as q_knn_batch_ann, so it shares that oracle.
     "q_knn_batch_ann_clustered" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val planes = AnnSearch.hyperplanes(dim = 64)
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_ann_clustered_b"
       AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 8)
@@ -2480,7 +2480,7 @@ object SparkEntry {
       import s.implicits._
       val tombstones = ((50L until 60L) ++ Seq(100L, 200L)).toDF("doc_id")
       Layout.deleteRows(s, tmp, "doc_id", tombstones)
-      s.read.parquet(tmp)
+      Parquet.read(s, tmp)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           md5(col("text")).as("text_md5"))
         .orderBy("doc_id")
@@ -2510,9 +2510,9 @@ object SparkEntry {
       val tomb = (30L until 40L).toDF("doc_id")
       Layout.deleteRows(s, docDir, "doc_id", tomb)
       Layout.deleteRows(s, chunkDir, "id", tomb)
-      val chunkStats = s.read.parquet(chunkDir).groupBy("id")
+      val chunkStats = Parquet.read(s, chunkDir).groupBy("id")
         .agg(count(lit(1)).as("n_chunks"), sum("n_tokens").as("sum_tokens"))
-      s.read.parquet(docDir).select(col("doc_id"))
+      Parquet.read(s, docDir).select(col("doc_id"))
         .join(chunkStats, col("doc_id") === col("id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
@@ -2534,7 +2534,7 @@ object SparkEntry {
         .map(_.getLen).sum
       Layout.compact(s, tmpIn, tmpOut, targetBytes = math.max(1L, total / 4),
         clusterCol = Some("doc_id"))
-      s.read.parquet(tmpOut)
+      Parquet.read(s, tmpOut)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           md5(col("text")).as("text_md5"))
         .orderBy("doc_id")
@@ -2656,7 +2656,7 @@ object SparkEntry {
     // results either way
     "q_text_cosine_pairs" -> ((s, dir) =>
       Dedup.tfCosinePairsAuto(
-          s.read.parquet(s"$dir/documents.parquet"),
+          Parquet.read(s, s"$dir/documents.parquet"),
           col("doc_id"), col("text"), tau = 0.9)
         .orderBy("id_a", "id_b")),
     // key-skew audit: the measurement that decides salting — one
@@ -2693,7 +2693,7 @@ object SparkEntry {
         .orderBy("lang", "lang_pred")
     }),
     "q_eval_ann_recall" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val store = VectorStore.fromEmbeddingsTable(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -2732,7 +2732,7 @@ object SparkEntry {
     // id), the master-data consolidation shape; 1-in-10 key sample keeps
     // the oracle's brute-force quadratic ground truth tractable at sf0.1
     "q_er_clusters" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Parquet.read(s, s"$dir/customer.parquet")
         .filter(pmod(col("c_custkey"), lit(10)) === 0)
       val pos = pmod(col("c_custkey"), length(col("c_name")).cast("long"))
       val recs = cust
@@ -2749,7 +2749,7 @@ object SparkEntry {
         .orderBy("id")
     }),
     "q_er_names" -> ((s, dir) => {
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = Parquet.read(s, s"$dir/customer.parquet")
       val pos = pmod(col("c_custkey"), length(col("c_name")).cast("long"))
       val dirty = cust.select(col("c_custkey").as("dirty_id"),
         concat(col("c_name").substr(lit(1), pos.cast("int")),
@@ -2811,7 +2811,7 @@ object SparkEntry {
     // probe — BOTH reach the scan (PushedFilters carries label + bucket IN)
     "q_ann_topk_filtered" -> ((s, dir) => {
       val planes = AnnSearch.hyperplanes(dim = 64)
-      val indexed = AnnSearch.index(s.read.parquet(s"$dir/embeddings.parquet"),
+      val indexed = AnnSearch.index(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("embedding"), planes)
       AnnSearch.search(indexed.filter(col("label") === 3),
           col("vec_id").cast("string"), col("embedding"),
@@ -2834,13 +2834,13 @@ object SparkEntry {
     "q_profile_fanout" -> ((s, dir) =>
       Profile.fanoutHistogram(
           graft.sources.Testdata.orders(s, dir), col("o_custkey"),
-          s.read.parquet(s"$dir/customer.parquet"), col("c_custkey"))
+          Parquet.read(s, s"$dir/customer.parquet"), col("c_custkey"))
         .orderBy("n_children")),
     // 2-component PCA map: deflated power iteration (2·iters+1 map-side
     // aggregation scans, dim-length driver vectors, per-iteration 6-dp
     // rounding) — per-vector (p1, p2) scatter coordinates + abtt-2 residual
     "q_embed_pca2" -> ((s, dir) =>
-      EmbedQc.pcaTop2(s.read.parquet(s"$dir/embeddings.parquet"),
+      EmbedQc.pcaTop2(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), iters = 8)
         .withColumnRenamed("id", "vec_id")
         .orderBy("vec_id")),
@@ -2930,7 +2930,7 @@ object SparkEntry {
     // collisions (each pair collides in exactly one probe bucket), same
     // GroupTopK + mutual epilogue
     "q_embed_knn_graph_lsh" -> ((s, dir) =>
-      Search.knnGraphMutualLsh(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.knnGraphMutualLsh(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"),
           AnnSearch.hyperplanes(dim = 64), k = 6, probeRadius = 2)
         .withColumnRenamed("id", "vec_id")
@@ -3028,7 +3028,7 @@ object SparkEntry {
     // grid (no corpus broadcast), GroupTopK partial heaps cut the exchange
     // to <= n·k edges, mutual = self-semi-join on the edge list
     "q_embed_knn_graph" -> ((s, dir) =>
-      Search.knnGraphMutual(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.knnGraphMutual(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), k = 6)
         .withColumnRenamed("id", "vec_id")
         .orderBy("vec_id")),
@@ -3036,14 +3036,14 @@ object SparkEntry {
     // neighbors' labels — integer counts over the one-off grid edge
     // build; agree_frac < 0.5 flags a likely mislabel for re-annotation
     "q_embed_label_noise" -> ((s, dir) =>
-      Search.labelAgreement(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.labelAgreement(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), col("label"), k = 6)
         .withColumnRenamed("id", "vec_id")),
     // greedy k-center coreset (farthest-point traversal): 8 diverse
     // centers covering the corpus — one state scan per round, the
     // argmax a TakeOrderedAndProject, dist = the shrinking cover radius
     "q_embed_kcenter" -> ((s, dir) =>
-      Search.kCenterCoreset(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.kCenterCoreset(Parquet.read(s, s"$dir/embeddings.parquet"),
           col("vec_id"), col("embedding"), k = 8)
         .withColumnRenamed("id", "vec_id")
         .orderBy("round")),
@@ -3051,7 +3051,7 @@ object SparkEntry {
     // (broadcast k-row table, GroupTopK argmin), per-center count + max
     // assigned distance = the realized cover radius
     "q_embed_kcenter_assign" -> ((s, dir) =>
-      Search.kCenterAssign(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.kCenterAssign(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("vec_id"), col("embedding"), k = 8)),
     // label propagation (clamped seeds, 2 synchronous rounds) over the
     // symmetrized exact k-NN graph: 25% seed labels spread to the bulk by
@@ -3059,7 +3059,7 @@ object SparkEntry {
     // corpus-sized work is the one-off grid edge build, each round touches
     // only the <= 2nk edge list
     "q_embed_label_prop" -> ((s, dir) =>
-      Search.labelPropagate(s.read.parquet(s"$dir/embeddings.parquet"),
+      Search.labelPropagate(Parquet.read(s, s"$dir/embeddings.parquet"),
         col("vec_id"), col("embedding"), col("label"),
         col("vec_id") % 4 === 0, k = 6, rounds = 2)
         .withColumnRenamed("id", "vec_id")),
@@ -3067,7 +3067,7 @@ object SparkEntry {
     // λ·rel − (1−λ)·max-sim selection, candidate generation distributed,
     // k−1 tiny argmax jobs over the checkpointed shortlist
     "q_knn_mmr" -> ((s, dir) => {
-      val embs = s.read.parquet(s"$dir/embeddings.parquet")
+      val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val q = broadcast(embs.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv"),
           sqrt(VF.normSq(col("embedding"))).as("qnrm")))

@@ -121,7 +121,7 @@ object Layout {
         LayoutManifest.statsDf(spark, path, LayoutManifest.Manifest(
           -1L, Map.empty, entries), statCols)
       case _ =>
-        val df = spark.read.parquet(path)
+        val df = Parquet.read(spark, path)
         df.select(col("_metadata.file_path").as("file") +: statCols.map(col): _*)
           .groupBy("file")
           .agg(min(col(statCols.head)).as(s"${statCols.head}_min"),
@@ -151,15 +151,17 @@ object Layout {
     require(rows.nonEmpty, "prunedRead over an EMPTY manifest — the layout " +
       "lists no files (zoneMap over a dir with no parquet, or a manifest " +
       "committed with zero entries)")
-    val files = rows.filter(_.getBoolean(1)).map(_.getString(0))
-    if (files.isEmpty) {
-      // every file pruned: empty result, schema taken from one file's
-      // footer (a metadata-only read — no data task runs)
-      val any = rows.head.getString(0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(any).schema)
-    } else spark.read.parquet(files.toIndexedSeq: _*)
+    readKept(spark, rows.filter(_.getBoolean(1)).map(_.getString(0)).toIndexedSeq,
+      rows.head.getString(0))
   }
+
+  /** The files a prune kept; when it kept none, an empty frame with the
+    * schema of `any` file, read from its footer on the driver (no job).
+    */
+  private def readKept(spark: SparkSession, files: Seq[String], any: String): DataFrame =
+    if (files.nonEmpty) Parquet.read(spark, files: _*)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      Parquet.schema(spark, any))
 
   /** Membership prune: keep files whose [min, max] span contains at least
     * one of `values` — the probe-read primitive for bucket-clustered
@@ -176,12 +178,8 @@ object Layout {
     val rows = manifest.select("file").collect()
     require(rows.nonEmpty, "prunedReadIn over an EMPTY manifest — the " +
       "layout lists no files")
-    val files = filesSpanning(manifest, statCol, values)
-    if (files.isEmpty) {
-      val any = rows.head.getString(0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(any).schema)
-    } else spark.read.parquet(files.toIndexedSeq: _*)
+    readKept(spark, filesSpanning(manifest, statCol, values).toIndexedSeq,
+      rows.head.getString(0))
   }
 
   /** Files whose [min, max] span of `statCol` contains at least one of
@@ -376,7 +374,7 @@ object Layout {
     // affected entries replaces what used to be a full COUNT read of the
     // affected files (one whole scan job per delete, round-9 optimization)
     val nBefore = snapshot.files.filter(e => affectedNames(e.name)).map(_.rows).sum
-    val before = spark.read.parquet(affected.toIndexedSeq: _*)
+    val before = Parquet.read(spark, affected.toIndexedSeq: _*)
     val kept = before.join(
       broadcast(tombstones.select(tombstones(tsCol).cast("long").as(idCol)).distinct()),
       Seq(idCol), "left_anti")
@@ -440,7 +438,7 @@ object Layout {
       buf.toArray
     }
     val nOut = math.max(1, math.ceil(parts.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(inPath)
+    val df = Parquet.read(spark, inPath)
     val packed = clusterCol match {
       case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
       case None    => df.repartition(nOut)
@@ -599,7 +597,7 @@ object Layout {
     val liveBytes = snapshot.files.map(e => fs.getFileStatus(
       new org.apache.hadoop.fs.Path(path, e.name)).getLen).sum
     val nOut = math.max(1, math.ceil(liveBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(
+    val df = Parquet.read(spark,
       snapshot.files.map(e => LayoutManifest.dataPath(path, e.name)): _*)
     val packed = clusterCol match {
       case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
@@ -665,7 +663,7 @@ object Layout {
         math.max(1L, es.map(_.rows).max), fpp)
       val agg = org.apache.spark.sql.functions.udaf(
         new graft.functions.BloomBitsAgg(numWords, k))
-      spark.read.parquet(es.map(e => LayoutManifest.dataPath(path, e.name)): _*)
+      Parquet.read(spark, es.map(e => LayoutManifest.dataPath(path, e.name)): _*)
         .select(col("_metadata.file_path").as("__file"),
           graft.functions.Bloom.mix64Col(col(colName)).as("__fp"))
         .groupBy("__file")
@@ -693,7 +691,7 @@ object Layout {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
-    else Some(spark.read.parquet(p))
+    else Some(Parquet.read(spark, p))
   }
 
   /** Files that MIGHT contain at least one of `values` in `colName`, per

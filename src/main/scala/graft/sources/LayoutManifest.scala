@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,7 +231,7 @@ object LayoutManifest {
       statCols: Seq[String]): Seq[FileEntry] = {
     if (paths.isEmpty) return Seq.empty
     footerEntries(spark, paths, statCols).getOrElse {
-      val df = spark.read.parquet(paths: _*)
+      val df = Parquet.read(spark, paths: _*)
       val present = statCols.filter(df.columns.contains)
       val aggs = count(lit(1)).as("__rows") +:
         present.flatMap(c => Seq(
@@ -253,38 +253,14 @@ object LayoutManifest {
     }
   }
 
-  /** The concrete .parquet files under `paths` when every path is a flat
-    * file or flat directory — None when any directory nests subdirectories
-    * (hive-partitioned layout: partition-value columns live in dir names,
-    * not footers, so the scan path must handle it).
-    */
-  private def flatParquetFiles(f: FileSystem, paths: Seq[String]): Option[Seq[Path]] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Path]
-    paths.foreach { p =>
-      val st = try f.getFileStatus(new Path(p)) catch {
-        case _: java.io.FileNotFoundException => return None
-      }
-      if (st.isFile) out += st.getPath
-      else {
-        val children = f.listStatus(st.getPath)
-        if (children.exists(c => c.isDirectory && !c.getPath.getName.startsWith("_")
-            && !c.getPath.getName.startsWith("."))) return None
-        out ++= children.filter(c => c.isFile &&
-          c.getPath.getName.endsWith(".parquet")).map(_.getPath)
-      }
-    }
-    Some(out.toSeq)
-  }
-
   /** Footer-only [[entriesFor]] — Some(entries) when the fast path is
     * valid for every file and every requested column, None to fall back.
     */
   private[sources] def footerEntries(spark: SparkSession, paths: Seq[String],
       statCols: Seq[String]): Option[Seq[FileEntry]] = {
-    val f = fs(spark, paths.head)
-    val files = flatParquetFiles(f, paths).getOrElse(return None)
-    if (files.isEmpty) return None
     val conf = spark.sparkContext.hadoopConfiguration
+    val files = Parquet.flatParquetFiles(conf, paths).getOrElse(return None)
+    if (files.isEmpty) return None
     // footer reads are metadata-scale (KBs per file) but latency-bound;
     // a driver-side pool covers the 100k-file case in seconds — the same
     // cost class as the file listing the planner already does
@@ -293,7 +269,7 @@ object LayoutManifest {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(32, math.max(1, files.size)))
     try {
-      val tasks = files.map { p =>
+      val tasks = files.map { st =>
         pool.submit(new Runnable {
           override def run(): Unit = {
             if (failed.get()) return
@@ -302,7 +278,7 @@ object LayoutManifest {
             // the commit": an exception here used to propagate out of
             // tasks.foreach(_.get()) and abort bootstrap/commit/zoneMap
             // where the exact scan fallback handles the file fine
-            val e = try footerEntry(conf, p, statCols)
+            val e = try footerEntry(conf, st, statCols)
                     catch { case NonFatal(_) => None }
             e match {
               case Some(fe) => entries.put(fe.name, fe)
@@ -320,10 +296,10 @@ object LayoutManifest {
   }
 
   private def footerEntry(conf: org.apache.hadoop.conf.Configuration,
-      p: Path, statCols: Seq[String]): Option[FileEntry] = {
+      st: FileStatus, statCols: Seq[String]): Option[FileEntry] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
     try {
       val footer = reader.getFooter
       val schema = footer.getFileMetaData.getSchema
@@ -367,7 +343,7 @@ object LayoutManifest {
         }
         // column absent from the (flat) schema: scan path skips it too
       }
-      Some(FileEntry(p.getName, rows, stats.toMap))
+      Some(FileEntry(st.getPath.getName, rows, stats.toMap))
     } finally reader.close()
   }
 
@@ -412,10 +388,10 @@ object LayoutManifest {
   def readData(spark: SparkSession, path: String): DataFrame =
     current(spark, path) match {
       case Some(m) if m.files.nonEmpty =>
-        spark.read.parquet(m.files.map(e => dataPath(path, e.name)): _*)
+        Parquet.read(spark, m.files.map(e => dataPath(path, e.name)): _*)
       case Some(_) =>
         throw new IllegalStateException(s"manifest at $path lists no files")
-      case None => spark.read.parquet(path)
+      case None => Parquet.read(spark, path)
     }
 
   /** A SPECIFIC committed version, if still retained. */
@@ -437,7 +413,7 @@ object LayoutManifest {
   def readDataAt(spark: SparkSession, path: String, version: Long): DataFrame =
     at(spark, path, version) match {
       case Some(m) if m.files.nonEmpty =>
-        spark.read.parquet(m.files.map(e => dataPath(path, e.name)): _*)
+        Parquet.read(spark, m.files.map(e => dataPath(path, e.name)): _*)
       case Some(_) =>
         throw new IllegalStateException(
           s"manifest v$version at $path lists no files")
@@ -470,13 +446,13 @@ object LayoutManifest {
     val onlyNew = b.fileNames.diff(a.fileNames).toSeq.sorted
     def readOr(names: Seq[String], schemaFrom: Seq[String]): DataFrame =
       if (names.nonEmpty)
-        spark.read.parquet(names.map(dataPath(path, _)): _*)
+        Parquet.read(spark, names.map(dataPath(path, _)): _*)
       else {
         val any = schemaFrom.headOption.getOrElse(throw new IllegalStateException(
           s"diffVersions at $path: both versions list no files"))
-        val schema = spark.read.parquet(dataPath(path, any)).schema
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          Parquet.schema(spark, dataPath(path, any)))
       }
     val all = (onlyOld ++ onlyNew) ++ b.fileNames.toSeq
     val oldRows = readOr(onlyOld, all)

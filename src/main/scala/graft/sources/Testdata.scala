@@ -27,7 +27,7 @@ object Testdata {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = Parquet.read(spark, s"$sfDir/$name.parquet")
     tsColumns.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       d.schema(c).dataType match {
         case LongType => d.withColumn(c, timestamp_micros(expr(s"$c div 1000")))

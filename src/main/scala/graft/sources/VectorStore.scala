@@ -3,6 +3,7 @@ package graft.sources
 import graft.functions.{JsonMeta, VectorFunctions => VF}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** The engine's one logical table — the reference's
@@ -36,10 +37,13 @@ final case class VectorStore(df: DataFrame) {
   def count(): Long = df.count()
 
   /** Point lookup (reference `get_vector`, vector_database.py:49-55).
-    * Raises if absent, with the reference's message.
+    * Raises if absent, with the reference's message. One job: each
+    * partition stops at its first match, so the driver receives at most one
+    * row per partition (`take(1)` would scan up over several jobs).
     */
   def getVector(uniqueId: String): Array[Float] = {
-    val rows = df.filter(col("id") === lit(uniqueId)).select("embedding").take(1)
+    val rows = Bridge.localLimit(
+      df.filter(col("id") === lit(uniqueId)).select("embedding"), 1).collect()
     if (rows.isEmpty) throw new NoSuchElementException("Unique ID does not exist.")
     rows(0).getSeq[Float](0).toArray
   }
@@ -121,7 +125,7 @@ object VectorStore {
 
   /** Open a persisted store. */
   def load(spark: SparkSession, path: String): VectorStore =
-    VectorStore(spark.read.parquet(path))
+    VectorStore(Parquet.read(spark, path))
 
   /** Ingest from JSON-lines records `{"id": …, "embedding": [...], "metadata": {...}}`
     * — the interchange format a reference user would export to. The open
@@ -173,7 +177,7 @@ object VectorStore {
     * pure built-ins here (no UDF) since the schema is known.
     */
   def fromEmbeddingsTable(spark: SparkSession, sfDir: String): VectorStore = {
-    val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val raw = Parquet.read(spark, s"$sfDir/embeddings.parquet")
     val df = raw.select(
       col("vec_id").cast(StringType).as("id"),
       col("embedding").cast(ArrayType(FloatType)).as("embedding"),

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Checkpoint.CheckpointOps
-import graft.sources.VectorStore
+import graft.sources.{Parquet, VectorStore}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -173,7 +173,7 @@ object Streaming {
   def loadVersioned(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("_seq").desc)
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1 && !col("deleted"))
       .drop("_rn", "_seq", "deleted")
@@ -291,7 +291,7 @@ object Streaming {
     * batch stamp is maintenance metadata, not index content.
     */
   def loadAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch_id")
+    Parquet.read(spark, path).drop("batch_id")
 
   /** Streaming maintenance of a MANIFEST-COMMITTED clustered ANN layout
     * ([[graft.operators.AnnSearch.clusteredWrite]]) — the deployable
@@ -382,7 +382,7 @@ object Streaming {
     * .index]]) carries.
     */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch_id")
+    Parquet.read(spark, path).drop("batch_id")
       .withColumn("list_id", col("list_id").cast("long"))
 
   /** IVF twin of [[startClusteredAnnIndexMaintenance]]: arriving vectors
@@ -455,7 +455,7 @@ object Streaming {
 
   /** Read the maintained IVF-PQ index back ([[loadIvfIndex]] typing rules). */
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch_id")
+    Parquet.read(spark, path).drop("batch_id")
       .withColumn("list_id", col("list_id").cast("long"))
 
   /** Streaming cardinality maintenance: per micro-batch, reduce arriving
@@ -502,7 +502,7 @@ object Streaming {
   def loadHllEstimate(spark: org.apache.spark.sql.SparkSession, path: String,
       p: Int, wide: Boolean = false): DataFrame =
     graft.operators.Sketches.hllEstimate(
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
         .groupBy("grp", "bucket").agg(max(col("rho")).as("rho")), p, wide)
 
   /** Streaming count-min maintenance: per micro-batch, reduce arriving
@@ -542,7 +542,7 @@ object Streaming {
     * re-reading any raw data (bounded d·w rows regardless of history).
     */
   def loadCmCounters(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
       .groupBy("i", "cell").agg(sum(col("cnt")).as("cnt"))
 
   /** Streaming volume monitor: per micro-batch, reduce arriving events to
@@ -688,13 +688,13 @@ object Streaming {
     */
   def loadDatasetCard(spark: org.apache.spark.sql.SparkSession,
       path: String, p: Int = 12): DataFrame = {
-    val agg = spark.read.parquet(s"$path/agg")
+    val agg = Parquet.read(spark, s"$path/agg")
     // before the first micro-batch commits (missing/empty hll/ state) the
     // estimate is 0, keeping the loader DataFrame-shaped like the other
     // load* readers instead of throwing at .head()
     val est = (try {
       graft.operators.Sketches.hllEstimate(
-          spark.read.parquet(s"$path/hll")
+          Parquet.read(spark, s"$path/hll")
             .groupBy("grp", "bucket").agg(max(col("rho")).as("rho")),
           p, wide = true)
         .select(col("est")).collect().headOption.map(_.getDouble(0))
@@ -896,7 +896,7 @@ object Streaming {
       spark: org.apache.spark.sql.SparkSession, path: String,
       bucketMinutes: Int, histBuckets: Int = 24, minHist: Int = 6): DataFrame =
     graft.operators.Relational.anomalyScoresFromCounts(
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
         .groupBy("g", "b").agg(sum(col("n_events")).as("n_events")),
       bucketMinutes, histBuckets, minHist)
 
@@ -1014,7 +1014,7 @@ object Streaming {
     * (file paths are absolute, so the batch partitioning is transparent).
     */
   def loadZoneMap(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch_id")
+    Parquet.read(spark, path).drop("batch_id")
 
   /** Session-window stats per user (native session_window operator): the
     * streaming twin of [[graft.operators.Relational.sessionize]] — state is

@@ -1,14 +1,55 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
-/** Minimal accessor for the `private[sql]` Column ⇄ Expression conversions —
-  * the supported way for external libraries to mount custom Catalyst
-  * expressions into the public Column API on Spark 4.
+/** Minimal accessors for `private[sql]` and session-internal APIs: the
+  * Column ⇄ Expression conversions (the supported way for external
+  * libraries to mount custom Catalyst expressions into the public Column
+  * API on Spark 4), the session's Parquet schema rules, and a per-partition
+  * limit.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  private def classic(spark: SparkSession): ClassicSession =
+    spark.asInstanceOf[ClassicSession]
+
+  /** The Hadoop configuration Spark's own file sources use for this session. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    classic(spark).sessionState.newHadoopConf()
+
+  /** The Spark schema of one Parquet file, converted exactly as Spark's
+    * schema inference converts each footer: the session conf's
+    * binary-as-string, INT96, NTZ-inference and nanosAsLong rules, with the
+    * Spark row-metadata schema winning when the writer stored one. All
+    * fields nullable, as every file-source relation reports them.
+    */
+  def parquetFileSchema(spark: SparkSession, file: FileStatus,
+      conf: Configuration): StructType = {
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf)).asNullable
+  }
+
+  /** At most `n` rows from EACH partition of `df`: the per-partition half of
+    * a limit, without the global half. Collecting it is one job whose
+    * driver result is bounded by `n` × partitions, where `take(n)` scans up
+    * partition by partition and may run several jobs.
+    */
+  def localLimit(df: DataFrame, n: Int): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[_]]
+    Dataset.ofRows(ds.sparkSession, LocalLimit(Literal(n), ds.logicalPlan))
+  }
 }
