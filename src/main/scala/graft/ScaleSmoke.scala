@@ -652,13 +652,13 @@ object ScaleSmoke {
       graft.sources.Layout.zorderWrite(evNarrow, "user_id", "event_id", layoutDir, nFiles)
       base * mult
     }
-    var manifest: DataFrame = null
+    var manifest: graft.sources.LayoutManifest.Manifest = null
     timeOrSetup("zone-map manifest (2 cols)") {
-      // the build IS the cost being measured: one column-pruned scan of the
-      // two stat columns, map-side combined to one row per (task x file)
-      manifest = graft.sources.Layout
-        .zoneMap(spark, layoutDir, Seq("user_id", "event_id")).localCheckpoint()
-      manifest.count()
+      // the build IS the cost being measured: per-file spans of the two
+      // stat columns from the parquet footers (or one column-pruned scan)
+      manifest = graft.sources.LayoutManifest
+        .bootstrap(spark, layoutDir, Seq("user_id", "event_id"))
+      manifest.files.size.toLong
     }
     // eager: forcing it inside the timed body would add an untimed-by-
     // design agg scan to the measured region (the section gate already
@@ -666,7 +666,7 @@ object ScaleSmoke {
     val maxUser = evNarrow.agg(max("user_id")).head().getLong(0)
     time("pruned read (1% user slice)") {
       val hi = maxUser / 100
-      graft.sources.Layout.prunedRead(spark, manifest, "user_id", 0L, hi)
+      graft.sources.Layout.prunedRead(spark, layoutDir, manifest, "user_id", 0L, hi)
         .filter(col("user_id").between(0L, hi)).count()
     }
     } // end zorder chain gate
@@ -684,18 +684,15 @@ object ScaleSmoke {
         .write.mode("overwrite").parquet(delDir)
       base * mult
     }
-    // production shape: the manifest is MAINTAINED (per-batch, streaming
-    // op), not rebuilt per delete — passing it makes the delete cost purely
-    // the bounded affected-file rewrite
-    // eager for the same reason: the row measures the delete with a
-    // MAINTAINED manifest — building it inside the timed body would
-    // charge the delete for the build
-    val delManifest = graft.sources.Layout.zoneMap(spark, delDir, Seq("user_id"))
-      .localCheckpoint()
+    // production shape: the manifest is COMMITTED at write time, not
+    // rebuilt per delete — the delete cost is purely the bounded
+    // affected-file rewrite. Eager for the same reason: the row measures
+    // the delete with a maintained manifest — building it inside the timed
+    // body would charge the delete for the build
+    graft.sources.Layout.commitLayout(spark, delDir, Seq("user_id"))
     time("targeted delete (5 users, key-clustered, maintained manifest)") {
       val tomb = spark.range(5).select((col("id") * mult).as("user_id"))
-      val (_, _, d) = graft.sources.Layout.deleteRows(spark, delDir, "user_id", tomb,
-        knownManifest = Some(delManifest))
+      val (_, _, d) = graft.sources.Layout.deleteRows(spark, delDir, "user_id", tomb)
       d
     }
     } // end delete chain gate
@@ -727,12 +724,11 @@ object ScaleSmoke {
         annPlanes, annDir, nFiles)
       embBase * mult
     }
-    // maintained manifest (per-batch streaming op in production) — eager
-    // and untimed, same reasoning as the delete chain's manifest
-    val annManifest = graft.sources.Layout.zoneMap(spark, annDir, Seq("bucket"))
-      .localCheckpoint()
+    // the manifest clusteredWrite committed — read untimed, same reasoning
+    // as the delete chain's manifest
+    val annManifest = graft.operators.AnnSearch.loadManifest(spark, annDir)
     time("ann probe read (radius-2 multiprobe, zone-map pruned)") {
-      graft.operators.AnnSearch.searchClustered(spark, annManifest,
+      graft.operators.AnnSearch.searchClustered(spark, annDir, annManifest,
         col("vec_id").cast("string"), col("embedding"), query, annPlanes,
         k = 10, probeRadius = 2).count()
     }
@@ -749,7 +745,7 @@ object ScaleSmoke {
       val qs = emb0.filter(col("vec_id") < 8)
         .select((col("vec_id") * mult).as("query_id"),
           col("embedding").as("query_vec"))
-      graft.operators.AnnSearch.searchClusteredBatch(spark, annManifest,
+      graft.operators.AnnSearch.searchClusteredBatch(spark, annDir, annManifest,
         col("vec_id").cast("string"), col("embedding"), qs, annPlanes,
         k = 10, probeRadius = 2).count()
     }
@@ -759,7 +755,7 @@ object ScaleSmoke {
       val tomb = emb0.filter(col("vec_id") < 5)
         .select((col("vec_id") * mult).as("vec_id"), col("embedding"))
       val (_, _, d) = graft.operators.AnnSearch.deleteVectors(spark, annDir,
-        "vec_id", tomb, annPlanes, knownManifest = Some(annManifest))
+        "vec_id", tomb, annPlanes)
       d
     }
     // the bare-id forget path: sidecar build is the one-linear-pass

@@ -2345,7 +2345,7 @@ object SparkEntry {
       val manifest = AnnSearch.loadManifest(s, tmp)
       val qs = embs.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      AnnSearch.searchClusteredBatch(s, manifest, col("vec_id").cast("string"),
+      AnnSearch.searchClusteredBatch(s, tmp, manifest, col("vec_id").cast("string"),
           col("embedding"), qs, planes, k = 5, probeRadius = 2)
         .select(col("query_id"), col("rank"), col("id"), round(col("score"), 6).as("score"))
         .orderBy("query_id", "rank")
@@ -2461,8 +2461,9 @@ object SparkEntry {
       val li = graft.sources.Testdata.table(s, dir, "lineitem")
       val tmp = System.getProperty("java.io.tmpdir") + "/graft_layout_zorder"
       Layout.zorderWrite(li, "l_partkey", "l_suppkey", tmp, numFiles = 8)
-      val manifest = Layout.zoneMap(s, tmp, Seq("l_partkey", "l_suppkey"))
-      Layout.prunedRead(s, manifest, "l_partkey", 100L, 300L)
+      val manifest = graft.sources.LayoutManifest
+        .bootstrap(s, tmp, Seq("l_partkey", "l_suppkey"))
+      Layout.prunedRead(s, tmp, manifest, "l_partkey", 100L, 300L)
         .filter(col("l_partkey").between(100, 300))
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
         // (orderkey, linenumber) is NOT unique in the synthetic lineitem —

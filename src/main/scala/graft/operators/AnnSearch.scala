@@ -164,18 +164,15 @@ object AnnSearch {
         "planes_hash" -> planesHash(planes)))
   }
 
-  /** The committed layout's per-file bucket-span stats as the zone-map
-    * DataFrame shape [[searchClustered]]/[[searchClusteredBatch]] consume —
-    * resolved from the manifest, NO scan (vs `Layout.zoneMap`, which
-    * aggregates over the data files).
+  /** The committed manifest of a [[clusteredWrite]] layout — the per-file
+    * bucket spans [[searchClustered]]/[[searchClusteredBatch]] prune with,
+    * read on the driver (no job).
     */
   def loadManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
+      path: String): graft.sources.LayoutManifest.Manifest =
+    graft.sources.LayoutManifest.current(spark, path).getOrElse(
       throw new IllegalStateException(
         s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-    graft.sources.LayoutManifest.statsDf(spark, path, m, Seq("bucket"))
-  }
 
   /** Fail-loudly guard: when `path` carries a committed manifest with a
     * plane fingerprint, the caller's planes must match it — a delete or
@@ -209,7 +206,8 @@ object AnnSearch {
     */
   def searchClustered(
       spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("bucket"))
+      path: String,
+      manifest: graft.sources.LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
       id: Column,
       vec: Column,
       query: Seq[Float],
@@ -219,7 +217,7 @@ object AnnSearch {
     val qb = bucketOf(query, planes)
     val probes = probeBuckets(qb, planes.length, probeRadius)
     graft.sources.Layout
-      .prunedReadIn(spark, manifest, "bucket", probes.map(_.toLong))
+      .prunedReadIn(spark, path, manifest, "bucket", probes.map(_.toLong))
       .filter(col("bucket").isin(probes: _*)) // zone maps prune files, not rows
       .withColumn("score", VF.cosine(vec, typedLit(query)))
       .select(id.as("id"), col("score"))
@@ -242,8 +240,8 @@ object AnnSearch {
       k: Int = 5,
       probeRadius: Int = 1): DataFrame = {
     validatePlanes(spark, path, planes)
-    searchClustered(spark, loadManifest(spark, path), id, vec, query, planes,
-      k, probeRadius)
+    searchClustered(spark, path, loadManifest(spark, path), id, vec, query,
+      planes, k, probeRadius)
   }
 
   /** GDPR forget for a [[clusteredWrite]] index: delete the tombstoned
@@ -268,8 +266,7 @@ object AnnSearch {
       path: String,
       idColName: String,
       tombstones: DataFrame,    // (id, embedding) — a bounded forget batch
-      planes: Seq[Seq[Double]],
-      knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
+      planes: Seq[Seq[Double]]): (Int, Int, Long) = {
     validatePlanes(spark, path, planes)
     val tsId = tombstones.columns.head
     val tsVec = tombstones.columns(1)
@@ -277,7 +274,7 @@ object AnnSearch {
       .select(bucketCol(col(tsVec), planes).as("b")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq
     graft.sources.Layout.deleteRowsIn(spark, path, "bucket", buckets,
-      idColName, tombstones.select(col(tsId)), knownManifest)
+      idColName, tombstones.select(col(tsId)))
   }
 
   /** Approximate top-k: prune to the probe buckets (Hamming ≤ probeRadius
@@ -357,7 +354,8 @@ object AnnSearch {
     */
   def searchClusteredBatch(
       spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("bucket"))
+      path: String,
+      manifest: graft.sources.LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
       id: Column,
       vec: Column,
       queries: DataFrame,       // (query_id, query_vec) — a BOUNDED batch
@@ -372,7 +370,7 @@ object AnnSearch {
       .distinct()
       .collect().map(_.getLong(0)).toSeq
     val pruned = graft.sources.Layout
-      .prunedReadIn(spark, manifest, "bucket", probeUnion)
+      .prunedReadIn(spark, path, manifest, "bucket", probeUnion)
     searchBatch(pruned, id, vec, queries, planes, k, probeRadius)
   }
 

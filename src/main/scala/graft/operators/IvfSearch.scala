@@ -219,7 +219,8 @@ object IvfSearch {
     */
   def searchClustered(
       spark: org.apache.spark.sql.SparkSession,
-      manifest: DataFrame,      // Layout.zoneMap(spark, path, Seq("list_id"))
+      path: String,
+      manifest: graft.sources.LayoutManifest.Manifest, // with `list_id` spans
       id: Column,
       vec: Column,
       query: Seq[Float],
@@ -227,7 +228,7 @@ object IvfSearch {
       k: Int = 5,
       nprobe: Int = 4): DataFrame = {
     val probes = probeLists(query, centroids, nprobe)
-    graft.sources.Layout.prunedReadIn(spark, manifest, "list_id", probes)
+    graft.sources.Layout.prunedReadIn(spark, path, manifest, "list_id", probes)
       .filter(col("list_id").isin(probes: _*)) // zone maps prune files, not rows
       .withColumn("score", VF.cosine(vec, typedLit(query)))
       .select(id.as("id"), col("score"))
@@ -252,9 +253,7 @@ object IvfSearch {
     val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
       throw new IllegalStateException(
         s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-    searchClustered(spark,
-      graft.sources.LayoutManifest.statsDf(spark, path, m, Seq("list_id")),
-      id, vec, query, centroids, k, nprobe)
+    searchClustered(spark, path, m, id, vec, query, centroids, k, nprobe)
   }
 
   /** ONE Lloyd (k-means) update round surfaced as a DataFrame: assign every

@@ -8,9 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale notes: ORC and parquet are equivalent for this engine's access
   * patterns — both columnar, splittable by stripe/row-group, with min/max
-  * stats the scan consults ([[Layout.zoneMap]]'s planning-time pruning
-  * works unchanged: `_metadata.file_path` is format-agnostic). Vectorized
-  * reads and predicate pushdown are on by default for both in Spark 4.
+  * stats the scan consults per task. Vectorized reads and predicate
+  * pushdown are on by default for both in Spark 4. The planning-time file
+  * pruning of the layout tier ([[LayoutManifest]] spans) covers parquet
+  * layouts only.
   * Parquet stays the internal format (the zone-map/zorder tier and every
   * persisted index use it); ORC is egress/ingest interop only.
   */

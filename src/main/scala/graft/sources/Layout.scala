@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,14 +21,15 @@ import org.apache.spark.sql.functions._
   *    pure column algebra (integer scale + shift/mask interleave —
   *    codegen'd, no UDF), and the layout job is ONE range exchange, the
   *    same cost as any global sort.
-  *  - ZONE MAP: per-file min/max stats collected in one column-pruned
-  *    aggregate over `_metadata.file_path` (only the stat columns are
-  *    read). Parquet footers already hold these stats, but Spark consults
-  *    them per-task AFTER scheduling; a manifest consulted at PLANNING
-  *    time schedules no task at all for a pruned file — at 100 TB /
-  *    ~100k files the difference between a 3-file job and a 100k-task
-  *    job whose tasks mostly read a footer and exit. The manifest is tiny
-  *    (one row per file) and rebuilt incrementally per written partition.
+  *  - ZONE MAP: the per-file min/max spans of a [[LayoutManifest]]'s
+  *    entries (from parquet footers, or one column-pruned aggregate).
+  *    Spark consults footer stats per-task AFTER scheduling; a manifest
+  *    consulted at PLANNING time schedules no task at all for a pruned
+  *    file — at 100 TB / ~100k files the difference between a 3-file job
+  *    and a 100k-task job whose tasks mostly read a footer and exit. The
+  *    manifest is tiny (one entry per file) and lives on the driver, so
+  *    every prune, delete and compaction decision over it is plain Scala,
+  *    not a job.
   *  - COMPACTION: streaming ingest and fine-grained writes leave files far
   *    below the scan's `maxPartitionBytes`, and task-scheduling overhead
   *    then dominates reads. Compaction bin-packs by TOTAL BYTES (not file
@@ -106,62 +108,36 @@ object Layout {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Zone-map manifest: one row per data file with min/max of each stat
-    * column. One aggregate over the hidden `_metadata.file_path` column;
-    * only `statCols` are read (column pruning), and the map-side combine
-    * means one partial row per (task x file) crosses the exchange.
+  /** Planning-time file pruning: keep only the files of `manifest` whose
+    * [min, max] span of `statCol` intersects [lo, hi] (a file may still
+    * contain no matching row — the zone map has no false negatives, like
+    * any bloom/minmax skip index), then read exactly those files of the
+    * layout at `path`. The prune is plain Scala over the driver-side
+    * entries: no job, and no task is ever scheduled for a skipped file.
+    * Callers re-apply the row-level predicate: zone maps prune FILES, not
+    * rows. A file without a span for `statCol` (stats unknown) is KEPT:
+    * pruning may never produce a false negative.
     */
-  def zoneMap(spark: SparkSession, path: String, statCols: Seq[String]): DataFrame = {
-    // Footer fast path (round-9): identical spans straight from parquet
-    // metadata when every stat column is a plain int — no scan job. The
-    // scan aggregation remains the exact fallback for partitioned layouts
-    // and non-integer columns (see LayoutManifest.entriesFor).
-    LayoutManifest.footerEntries(spark, Seq(path), statCols) match {
-      case Some(entries) if entries.forall(e => statCols.forall(e.stats.contains)) =>
-        LayoutManifest.statsDf(spark, path, LayoutManifest.Manifest(
-          -1L, Map.empty, entries), statCols)
-      case _ =>
-        val df = Parquet.read(spark, path)
-        df.select(col("_metadata.file_path").as("file") +: statCols.map(col): _*)
-          .groupBy("file")
-          .agg(min(col(statCols.head)).as(s"${statCols.head}_min"),
-               max(col(statCols.head)).as(s"${statCols.head}_max") +:
-               statCols.tail.flatMap(c =>
-                 Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"))): _*)
-    }
-  }
-
-  /** Planning-time file pruning: keep only files whose [min, max] span
-    * intersects [lo, hi] (a file may still contain no matching row — the
-    * zone map has no false negatives, like any bloom/minmax skip index),
-    * then read exactly those files. The manifest is one row per file, so
-    * the prune itself is a driver-side filter over a tiny collect; no task
-    * is ever scheduled for a skipped file. Callers re-apply the row-level
-    * predicate: zone maps prune FILES, not rows. A file with NULL bounds
-    * (span unknown — e.g. a manifest entry written without stats for this
-    * column) is KEPT: pruning may never produce a false negative.
-    */
-  def prunedRead(spark: SparkSession, manifest: DataFrame, statCol: String,
-                 lo: Long, hi: Long): DataFrame = {
-    val mn = col(s"${statCol}_min"); val mx = col(s"${statCol}_max")
-    val rows = manifest
-      .select(col("file"), ((mn <= hi && mx >= lo) ||
-        mn.isNull || mx.isNull).as("keep"))
-      .collect()
-    require(rows.nonEmpty, "prunedRead over an EMPTY manifest — the layout " +
-      "lists no files (zoneMap over a dir with no parquet, or a manifest " +
-      "committed with zero entries)")
-    readKept(spark, rows.filter(_.getBoolean(1)).map(_.getString(0)).toIndexedSeq,
-      rows.head.getString(0))
-  }
+  def prunedRead(spark: SparkSession, path: String,
+      manifest: LayoutManifest.Manifest, statCol: String,
+      lo: Long, hi: Long): DataFrame =
+    readKept(spark, path, manifest, manifest.files.filter(
+      _.stats.get(statCol).forall { case (mn, mx) => mn <= hi && mx >= lo }))
 
   /** The files a prune kept; when it kept none, an empty frame with the
-    * schema of `any` file, read from its footer on the driver (no job).
+    * schema of the manifest's first file, read from its footer on the
+    * driver (no job).
     */
-  private def readKept(spark: SparkSession, files: Seq[String], any: String): DataFrame =
-    if (files.nonEmpty) Parquet.read(spark, files: _*)
+  private def readKept(spark: SparkSession, path: String,
+      manifest: LayoutManifest.Manifest,
+      kept: Seq[LayoutManifest.FileEntry]): DataFrame = {
+    require(manifest.files.nonEmpty, s"pruned read over an EMPTY manifest " +
+      s"at $path — the layout lists no files")
+    if (kept.nonEmpty)
+      Parquet.read(spark, kept.map(e => LayoutManifest.dataPath(path, e.name)): _*)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Parquet.schema(spark, any))
+      Parquet.schema(spark, LayoutManifest.dataPath(path, manifest.files.head.name)))
+  }
 
   /** Membership prune: keep files whose [min, max] span contains at least
     * one of `values` — the probe-read primitive for bucket-clustered
@@ -169,170 +145,165 @@ object Layout {
     * radius-r multiprobe set is ~1+b+C(b,2) SCATTERED bucket ids, not an
     * interval (a [min(values), max(values)] range prune would keep nearly
     * every file, since xor-neighbor buckets span the whole id space).
-    * Same contract as [[prunedRead]]: driver-side over the one-row-per-
-    * file manifest (binary search per file span), no false negatives,
-    * callers re-apply the row-level predicate.
+    * Same contract as [[prunedRead]]: driver-side over the manifest
+    * entries (binary search per file span), no false negatives, callers
+    * re-apply the row-level predicate.
     */
-  def prunedReadIn(spark: SparkSession, manifest: DataFrame, statCol: String,
-                   values: Seq[Long]): DataFrame = {
-    val rows = manifest.select("file").collect()
-    require(rows.nonEmpty, "prunedReadIn over an EMPTY manifest — the " +
-      "layout lists no files")
-    readKept(spark, filesSpanning(manifest, statCol, values).toIndexedSeq,
-      rows.head.getString(0))
-  }
+  def prunedReadIn(spark: SparkSession, path: String,
+      manifest: LayoutManifest.Manifest, statCol: String,
+      values: Seq[Long]): DataFrame =
+    readKept(spark, path, manifest, filesSpanning(manifest, statCol, values))
 
-  /** Files whose [min, max] span of `statCol` contains at least one of
+  /** Entries whose [min, max] span of `statCol` contains at least one of
     * `values` — the driver-side membership prune shared by
     * [[prunedReadIn]] and [[deleteRowsIn]] (binary search per file span
-    * over the sorted value set). A NULL span (stats unknown for this
-    * column) keeps the file: the prune may never claim a value is absent
+    * over the sorted value set). A file without a span (stats unknown for
+    * this column) is kept: the prune may never claim a value is absent
     * from a file it knows nothing about.
     */
-  private def filesSpanning(manifest: DataFrame, statCol: String,
-      values: Seq[Long]): Array[String] = {
+  private def filesSpanning(manifest: LayoutManifest.Manifest, statCol: String,
+      values: Seq[Long]): Seq[LayoutManifest.FileEntry] = {
     val sorted = values.distinct.sorted.toArray
     def spanHasValue(lo: Long, hi: Long): Boolean = {
       var i = java.util.Arrays.binarySearch(sorted, lo)
       if (i < 0) i = -i - 1 // insertion point: first value >= lo
       i < sorted.length && sorted(i) <= hi
     }
-    manifest
-      .select(col("file"), col(s"${statCol}_min").cast("long"),
-        col(s"${statCol}_max").cast("long"))
-      .collect()
-      .filter(r => r.isNullAt(1) || r.isNullAt(2) ||
-        spanHasValue(r.getLong(1), r.getLong(2)))
-      .map(_.getString(0))
+    manifest.files.filter(_.stats.get(statCol).forall { case (lo, hi) =>
+      spanHasValue(lo, hi) })
   }
 
-  /** Layout-health audit over a zone-map manifest — the "has my
-    * clustering decayed?" gate that decides when to re-run
-    * [[compact]]/[[zorderWrite]]: per-file span statistics of `statCol`
-    * as fractions of the global range (avg + max), plus the number of
-    * OVERLAPPING span pairs. A freshly range-clustered layout reads
-    * near-zero overlap and span fractions ~1/F; a hash-scattered or
-    * update-churned layout reads span fractions ~1 and ~C(F,2) overlaps —
-    * the regime where every [[prunedRead]]/[[deleteRows]] degrades toward
-    * a full scan or rewrite. The manifest is one row per file, so the
-    * overlap self-join is F²-bounded manifest-scale work, never corpus
-    * work. Returns ONE row: `(n_files, span_frac_avg, span_frac_max,
-    * overlap_pairs)`; a single-point global range reads fractions 0.
+  /** [[manifestStats]]'s result: file count, span fractions of the global
+    * range (avg, max; rounded to 6 decimals) and overlapping span pairs.
+    */
+  final case class ManifestStats(nFiles: Long, spanFracAvg: Double,
+      spanFracMax: Double, overlapPairs: Long)
+
+  /** Layout-health audit over a manifest — the "has my clustering
+    * decayed?" gate that decides when to re-run [[compact]]/[[zorderWrite]]:
+    * per-file span statistics of `statCol` as fractions of the global range
+    * (avg + max), plus the number of OVERLAPPING span pairs. A freshly
+    * range-clustered layout reads near-zero overlap and span fractions
+    * ~1/F; a hash-scattered or update-churned layout reads span fractions
+    * ~1 and ~C(F,2) overlaps — the regime where every
+    * [[prunedRead]]/[[deleteRows]] degrades toward a full scan or rewrite.
+    * Runs on the driver over the entries, O(F log F). Files without a span
+    * count in `nFiles` only; a single-point global range reads fractions 0.
     *
     * Spec-pinned rather than driver-oracled: the spans depend on Spark's
     * range-partitioner SAMPLING boundaries, which no SQL oracle can
     * replicate.
     */
-  def manifestStats(manifest: DataFrame, statCol: String): DataFrame = {
-    val lo = col(s"${statCol}_min").cast("double")
-    val hi = col(s"${statCol}_max").cast("double")
-    val g = manifest.agg(min(lo).as("glo"), max(hi).as("ghi"),
-      count(lit(1)).as("n_files"))
-    val spans = manifest.select(col("file"), lo.as("lo"), hi.as("hi"))
-    // Overlap-pair COUNT via an endpoint sweep instead of the former
-    // O(F²) theta self-join (BNLJ): sort the 2F interval endpoints (starts
-    // before ends at equal coordinate — spans are closed, touching counts),
-    // and at every start event add the number of currently-open intervals
-    // (= starts so far − ends so far, both over STRICTLY PRECEDING events).
-    // Each unordered overlapping pair is counted exactly once, at the
-    // later interval's start. O(F log F) — manifest-scale even at the
-    // 100k-file extrapolation where the join form was ~5·10⁹ pair tests.
-    // NULL spans never joined under the old form (NULL comparisons are
-    // false); the sweep drops them identically.
-    val ev = spans.filter(col("lo").isNotNull && col("hi").isNotNull)
-      .select(col("lo").as("x"), lit(0).as("t"))
-      .unionAll(spans.filter(col("lo").isNotNull && col("hi").isNotNull)
-        .select(col("hi").as("x"), lit(1).as("t")))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("x"), col("t"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val overlaps = ev
-      .withColumn("open",
-        coalesce(sum(when(col("t") === 0, 1L).otherwise(-1L)).over(w), lit(0L)))
-      .filter(col("t") === 0)
-      .agg(coalesce(sum(col("open")), lit(0L)).as("overlap_pairs"))
-    spans.crossJoin(broadcast(g))
-      .select(col("n_files"),
-        when(col("ghi") > col("glo"),
-          (col("hi") - col("lo")) / (col("ghi") - col("glo")))
-          .otherwise(lit(0.0)).as("frac"))
-      .groupBy("n_files")
-      .agg(round(avg(col("frac")), 6).as("span_frac_avg"),
-        round(max(col("frac")), 6).as("span_frac_max"))
-      .crossJoin(broadcast(overlaps))
+  def manifestStats(manifest: LayoutManifest.Manifest, statCol: String): ManifestStats = {
+    val spans = manifest.files.flatMap(_.stats.get(statCol))
+    val nFiles = manifest.files.size.toLong
+    if (spans.isEmpty) return ManifestStats(nFiles, 0.0, 0.0, 0L)
+    val glo = spans.map(_._1).min.toDouble
+    val ghi = spans.map(_._2).max.toDouble
+    val fracs =
+      if (ghi > glo) spans.map { case (lo, hi) => (hi.toDouble - lo.toDouble) / (ghi - glo) }
+      else Seq(0.0)
+    // Overlap-pair count by an endpoint sweep: sort the 2F endpoints
+    // (starts before ends at equal coordinate — spans are closed, touching
+    // counts), and at every start add the number of currently-open
+    // intervals. Each unordered overlapping pair is counted exactly once,
+    // at the later interval's start.
+    var open = 0L; var pairs = 0L
+    (spans.map(s => (s._1, 0)) ++ spans.map(s => (s._2, 1))).sorted.foreach {
+      case (_, 0) => pairs += open; open += 1
+      case _      => open -= 1
+    }
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    ManifestStats(nFiles, round6(fracs.sum / fracs.size), round6(fracs.max), pairs)
+  }
+
+  /** The manifest a write path decides over: the committed one, or a
+    * [[LayoutManifest.bootstrap]] of the directory when none is committed.
+    * A committed entry without a span of a `statCols` column gets one from
+    * [[LayoutManifest.entriesFor]] over the snapshot's OWN files (the
+    * footer path: usually no job). It never lists the directory, so a file
+    * no manifest commits — the orphan of a crashed rewrite — can never be
+    * rewritten back into the table.
+    */
+  private def snapshot(spark: SparkSession, path: String,
+      statCols: Seq[String]): LayoutManifest.Manifest =
+    LayoutManifest.current(spark, path) match {
+      case None => LayoutManifest.bootstrap(spark, path, statCols)
+      case Some(m) =>
+        val lacking = m.files.filterNot(e => statCols.forall(e.stats.contains))
+        val filled = LayoutManifest.entriesFor(spark,
+          lacking.map(e => LayoutManifest.dataPath(path, e.name)), statCols)
+          .map(e => e.name -> e.stats).toMap
+        m.copy(files = m.files.map(e =>
+          e.copy(stats = filled.getOrElse(e.name, Map.empty) ++ e.stats)))
+    }
+
+  /** Phase 1 of every rewrite: write `df` to a dot-prefixed temp dir inside
+    * the layout, rename each part in as `<tag>_<name>`, drop the temp dir.
+    * The renamed files stay invisible orphans until a manifest commit lists
+    * them. Returns their names.
+    */
+  private def stageIn(df: DataFrame, path: String, prefix: String): Seq[String] = {
+    val fs = LayoutManifest.fs(df.sparkSession, path)
+    val tag = prefix + java.util.UUID.randomUUID().toString.take(8)
+    val tmp = new Path(path, s".stage_$tag")
+    df.write.parquet(tmp.toString)
+    val names = fs.listStatus(tmp).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map { s =>
+        val nn = s"${tag}_${s.getPath.getName}"
+        require(fs.rename(s.getPath, new Path(path, nn)), s"rename-in failed: $nn")
+        nn
+      }
+    fs.delete(tmp, true)
+    names
   }
 
   /** Targeted row deletion (the GDPR/right-to-be-forgotten shape):
-    * rewrite ONLY the files whose zone-map [min, max] span can contain a
+    * rewrite ONLY the files whose [min, max] span of `idCol` can contain a
     * tombstoned id, leave every other file physically untouched. At 100 TB
     * a delete of a few thousand ids touches a handful of files on an
     * id-clustered layout — the full-table rewrite (or full anti-join
     * rewrite) this replaces is ~six orders of magnitude more IO.
     *
-    * Mechanics: per-file id spans from [[zoneMap]] (one manifest row per
-    * file) are range-joined to the tombstone set to pick affected files
-    * (zone maps have no false negatives, so unaffected files provably hold
-    * no tombstoned row); the affected files alone are read, anti-joined
-    * against the broadcast tombstones, and swapped in via the
-    * [[LayoutManifest]] commit protocol — new files are fully written and
-    * renamed in BEFORE the one-rename manifest commit makes them live, and
-    * the superseded files are deleted only AFTER it, so no crash point
-    * loses a surviving row and a concurrent manifest reader sees either
-    * the old or the new complete file set, never a mix.
+    * Mechanics: [[deleteRowsIn]] on the id column itself. The tombstone
+    * ids are collected once (the rewrite broadcasts them anyway, so they
+    * are driver-sized) and pruned by membership in each file's span; the
+    * affected files alone are read, anti-joined against the
+    * broadcast tombstones, and swapped in via the [[LayoutManifest]] commit
+    * protocol (see [[rewriteWithout]]): no crash point loses a surviving
+    * row, and a concurrent manifest reader sees either the old or the new
+    * complete file set, never a mix.
     * Returns (filesTotal, filesRewritten, rowsDeleted).
     */
   def deleteRows(spark: SparkSession, path: String, idCol: String,
-                 tombstones: DataFrame,
-                 knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
-    val tsCol = tombstones.columns.head
-    // committed manifest first (no scan); else without a maintained zone
-    // map it is rebuilt here — one column-pruned scan of the whole table,
-    // the dominant cost of a small delete as the table grows. Production
-    // passes the incrementally maintained manifest (see
-    // Streaming.startZoneMapMaintenance) or commits one at write time
-    // (commitLayout) and the delete cost is then bounded by the affected
-    // files alone.
-    val snapshot = LayoutManifest.current(spark, path)
-      .getOrElse(LayoutManifest.bootstrap(spark, path, Seq(idCol)))
-    val manifest = knownManifest.getOrElse {
-      if (snapshot.files.exists(_.stats.contains(idCol)))
-        LayoutManifest.statsDf(spark, path, snapshot, Seq(idCol))
-      else zoneMap(spark, path, Seq(idCol))
-    }
-    val mn = col(s"${idCol}_min").cast("long")
-    val mx = col(s"${idCol}_max").cast("long")
-    val affected = manifest
-      .join(tombstones,
-        tombstones(tsCol).cast("long").between(mn, mx) ||
-          mn.isNull || mx.isNull, // unknown span: must be treated as affected
-        "left_semi")
-      .select("file").collect().map(_.getString(0))
-    rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
+                 tombstones: DataFrame): (Int, Int, Long) = {
+    // deduplicated by the membership prune; a local tombstone frame
+    // collects with no job
+    val ids = tombstones.select(tombstones(tombstones.columns.head).cast("long"))
+      .collect().collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSeq
+    deleteRowsIn(spark, path, idCol, ids, idCol, tombstones)
   }
 
   /** Targeted deletion on a layout CLUSTERED BY A DIFFERENT COLUMN than
     * the delete key — the ANN-index forget shape
     * ([[graft.operators.AnnSearch.deleteVectors]]): the index is clustered
     * by LSH `bucket`, tombstones are vector IDS, and on such a layout the
-    * id spans per file are near-total, so [[deleteRows]]'s range prune
-    * would rewrite everything. The caller resolves the tombstones'
-    * CLUSTER values (`clusterValues` — a pure function of the vector, or
-    * a lookup against the id-clustered primary store) and files are
-    * pruned by MEMBERSHIP of those values in each file's span; the
-    * rewrite then anti-joins on the true id column as usual.
+    * id spans per file are near-total, so a prune on the id spans would
+    * rewrite everything. The caller resolves the tombstones' CLUSTER values
+    * (`clusterValues` — a pure function of the vector, or a lookup against
+    * the id-clustered primary store) and files are pruned by MEMBERSHIP of
+    * those values in each file's span; the rewrite then anti-joins on the
+    * true id column as usual. Spans come from the write-path snapshot: the
+    * committed manifest (no scan), or a bootstrap when none is committed.
     */
   def deleteRowsIn(spark: SparkSession, path: String, clusterCol: String,
                    clusterValues: Seq[Long], idCol: String,
-                   tombstones: DataFrame,
-                   knownManifest: Option[DataFrame] = None): (Int, Int, Long) = {
-    val snapshot = LayoutManifest.current(spark, path)
-      .getOrElse(LayoutManifest.bootstrap(spark, path, Seq(clusterCol)))
-    val manifest = knownManifest.getOrElse {
-      if (snapshot.files.exists(_.stats.contains(clusterCol)))
-        LayoutManifest.statsDf(spark, path, snapshot, Seq(clusterCol))
-      else zoneMap(spark, path, Seq(clusterCol))
-    }
-    val affected = filesSpanning(manifest, clusterCol, clusterValues)
-    rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
+                   tombstones: DataFrame): (Int, Int, Long) = {
+    val snap = snapshot(spark, path, Seq(clusterCol))
+    rewriteWithout(spark, path, snap, filesSpanning(snap, clusterCol, clusterValues),
+      idCol, tombstones)
   }
 
   /** Shared delete mechanics under the [[LayoutManifest]] commit protocol.
@@ -361,40 +332,22 @@ object Layout {
     */
   private[graft] def rewriteWithout(spark: SparkSession, path: String,
       snapshot: LayoutManifest.Manifest,
-      affected: Array[String], idCol: String,
+      affected: Seq[LayoutManifest.FileEntry], idCol: String,
       tombstones: DataFrame, crashPoint: Int = 0): (Int, Int, Long) = {
-    import org.apache.hadoop.fs.Path
     val tsCol = tombstones.columns.head
     val total = snapshot.files.size
     if (affected.isEmpty) return (total, 0, 0L)
-    val affectedNames = affected
-      .map(f => new Path(new java.net.URI(f).getPath).getName).toSet
-
+    val gone = affected.map(_.name).toSet
     // the manifest already carries exact per-file row counts — summing the
-    // affected entries replaces what used to be a full COUNT read of the
-    // affected files (one whole scan job per delete, round-9 optimization)
-    val nBefore = snapshot.files.filter(e => affectedNames(e.name)).map(_.rows).sum
-    val before = Parquet.read(spark, affected.toIndexedSeq: _*)
-    val kept = before.join(
-      broadcast(tombstones.select(tombstones(tsCol).cast("long").as(idCol)).distinct()),
-      Seq(idCol), "left_anti")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val tag = s"rw${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = s"$path/.rewrite_$tag"
-    // keep the rewrite at the affected-file granularity (no global shuffle)
-    kept.coalesce(math.max(1, affected.length)).write.parquet(tmp)
-    // phase 1: rename fully-written files IN under fresh names (invisible
-    // to manifest readers until the commit below)
-    val newNames = fs.listStatus(new Path(tmp))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val nn = s"${tag}_${s.getPath.getName}"
-        require(fs.rename(s.getPath, new Path(path, nn)), s"rename-in failed: $nn")
-        nn
-      }.toSeq
-    fs.delete(new Path(tmp), true)
-    if (crashPoint == 1) return (total, affected.length, -1L)
+    // affected entries replaces a COUNT read of the affected files
+    val nBefore = affected.map(_.rows).sum
+    val kept = Parquet.read(spark,
+        affected.map(e => LayoutManifest.dataPath(path, e.name)): _*)
+      .join(broadcast(tombstones.select(tombstones(tsCol).cast("long").as(idCol))
+        .distinct()), Seq(idCol), "left_anti")
+    // phase 1, at the affected-file granularity (no global shuffle)
+    val newNames = stageIn(kept.coalesce(affected.size), path, "rw")
+    if (crashPoint == 1) return (total, affected.size, -1L)
 
     // phase 2: stats for the new files, then the atomic manifest commit
     val statCols = (snapshot.statCols :+ idCol).distinct
@@ -403,13 +356,27 @@ object Layout {
     val nAfter = newEntries.map(_.rows).sum
     LayoutManifest.commit(spark, path, LayoutManifest.Manifest(
       snapshot.version + 1, snapshot.props,
-      snapshot.files.filterNot(e => affectedNames(e.name)) ++ newEntries))
-    if (crashPoint == 2) return (total, affected.length, nBefore - nAfter)
+      snapshot.files.filterNot(e => gone(e.name)) ++ newEntries))
+    if (crashPoint == 2) return (total, affected.size, nBefore - nAfter)
 
     // phase 3: GC the superseded files + old manifests
-    affected.foreach(f => fs.delete(new Path(new java.net.URI(f).getPath), false))
+    val fs = LayoutManifest.fs(spark, path)
+    gone.foreach(n => fs.delete(new Path(path, n), false))
     LayoutManifest.gc(spark, path)
-    (total, affected.length, nBefore - nAfter)
+    (total, affected.size, nBefore - nAfter)
+  }
+
+  /** `df` packed into ceil(`bytes` / `targetBytes`) outputs: range-
+    * partitioned and sorted on `clusterCol` when set (restoring zone-map
+    * tightness), a plain repartition otherwise.
+    */
+  private def pack(df: DataFrame, bytes: Long, targetBytes: Long,
+      clusterCol: Option[String]): DataFrame = {
+    val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    clusterCol match {
+      case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
+      case None    => df.repartition(nOut)
+    }
   }
 
   /** Bin-pack small files into ~`targetBytes` outputs. File count comes
@@ -421,14 +388,13 @@ object Layout {
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long, clusterCol: Option[String] = None): (Int, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inPath), spark.sparkContext.hadoopConfiguration)
+    val fs = LayoutManifest.fs(spark, inPath)
     // RECURSIVE listing: a streaming-maintained index is hive-partitioned
     // (bucket=X/batch_id=Y/part-*.parquet), and a top-level listStatus
     // would see only directories — sizing the output from 0 bytes and
     // reporting filesBefore = 0
     val parts = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(inPath), true)
+      val it = fs.listFiles(new Path(inPath), true)
       val buf = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.hadoop.fs.LocatedFileStatus]
       while (it.hasNext) {
@@ -437,14 +403,9 @@ object Layout {
       }
       buf.toArray
     }
-    val nOut = math.max(1, math.ceil(parts.map(_.getLen).sum.toDouble / targetBytes).toInt)
-    val df = Parquet.read(spark, inPath)
-    val packed = clusterCol match {
-      case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
-      case None    => df.repartition(nOut)
-    }
-    packed.write.mode("overwrite").parquet(outPath)
-    val after = fs.listStatus(new org.apache.hadoop.fs.Path(outPath))
+    pack(Parquet.read(spark, inPath), parts.map(_.getLen).sum, targetBytes, clusterCol)
+      .write.mode("overwrite").parquet(outPath)
+    val after = fs.listStatus(new Path(outPath))
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     (parts.length, after)
   }
@@ -481,7 +442,6 @@ object Layout {
     */
   def appendCommitted(df: DataFrame, path: String,
       batchId: Option[Long] = None): Long = {
-    import org.apache.hadoop.fs.Path
     val spark = df.sparkSession
     def snapshotNow(): LayoutManifest.Manifest =
       LayoutManifest.current(spark, path).getOrElse(
@@ -491,19 +451,7 @@ object Layout {
       batchId.exists(b => s.props.get("last_batch_id").exists(_.toLong >= b))
     var snapshot = snapshotNow()
     if (alreadySeen(snapshot)) return 0L
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val tag = s"ap${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = s"$path/.append_$tag"
-    df.write.parquet(tmp)
-    val newNames = fs.listStatus(new Path(tmp))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val nn = s"${tag}_${s.getPath.getName}"
-        require(fs.rename(s.getPath, new Path(path, nn)), s"rename-in failed: $nn")
-        nn
-      }.toSeq
-    fs.delete(new Path(tmp), true)
+    val newNames = stageIn(df, path, "ap")
     val newEntries = LayoutManifest.entriesFor(spark,
       newNames.map(n => LayoutManifest.dataPath(path, n)), snapshot.statCols)
     var attempts = 0
@@ -550,34 +498,21 @@ object Layout {
   private[graft] def replaceLayout(spark: SparkSession, path: String,
       newData: DataFrame, statCols: Seq[String], props: Map[String, String],
       crashPoint: Int = 0): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val snapshot = LayoutManifest.current(spark, path)
-      .getOrElse(LayoutManifest.bootstrap(spark, path, statCols))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val tag = s"rb${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = s"$path/.rebuild_$tag"
-    newData.write.parquet(tmp)
-    val newNames = fs.listStatus(new Path(tmp))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val nn = s"${tag}_${s.getPath.getName}"
-        require(fs.rename(s.getPath, new Path(path, nn)), s"rename-in failed: $nn")
-        nn
-      }.toSeq
-    fs.delete(new Path(tmp), true)
-    if (crashPoint == 1) return (snapshot.files.size, newNames.size)
+    val snap = snapshot(spark, path, Nil)
+    val newNames = stageIn(newData, path, "rb")
+    if (crashPoint == 1) return (snap.files.size, newNames.size)
 
     val newEntries = LayoutManifest.entriesFor(spark,
       newNames.map(n => LayoutManifest.dataPath(path, n)), statCols)
     LayoutManifest.commit(spark, path, LayoutManifest.Manifest(
-      snapshot.version + 1, snapshot.props ++ props, newEntries))
-    if (crashPoint == 2) return (snapshot.files.size, newEntries.size)
+      snap.version + 1, snap.props ++ props, newEntries))
+    if (crashPoint == 2) return (snap.files.size, newEntries.size)
 
-    snapshot.fileNames.diff(newNames.toSet).foreach(n =>
+    val fs = LayoutManifest.fs(spark, path)
+    snap.fileNames.diff(newNames.toSet).foreach(n =>
       fs.delete(new Path(path, n), false))
     LayoutManifest.gc(spark, path)
-    (snapshot.files.size, newEntries.size)
+    (snap.files.size, newEntries.size)
   }
 
   /** [[compact]] IN PLACE under the manifest protocol: read the live file
@@ -589,22 +524,15 @@ object Layout {
     */
   def compactInPlace(spark: SparkSession, path: String, targetBytes: Long,
       clusterCol: Option[String] = None): (Int, Int) = {
-    val snapshot = LayoutManifest.current(spark, path).getOrElse(
-      LayoutManifest.bootstrap(spark, path, clusterCol.toSeq))
-    require(snapshot.files.nonEmpty, s"compactInPlace over an empty layout: $path")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val liveBytes = snapshot.files.map(e => fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(path, e.name)).getLen).sum
-    val nOut = math.max(1, math.ceil(liveBytes.toDouble / targetBytes).toInt)
-    val df = Parquet.read(spark,
-      snapshot.files.map(e => LayoutManifest.dataPath(path, e.name)): _*)
-    val packed = clusterCol match {
-      case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
-      case None    => df.repartition(nOut)
-    }
-    val statCols = (snapshot.statCols ++ clusterCol.toSeq).distinct
-    replaceLayout(spark, path, packed, statCols, snapshot.props)
+    val snap = snapshot(spark, path, Nil)
+    require(snap.files.nonEmpty, s"compactInPlace over an empty layout: $path")
+    val fs = LayoutManifest.fs(spark, path)
+    val files = snap.files.map(e => LayoutManifest.dataPath(path, e.name))
+    val liveBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+    val statCols = (snap.statCols ++ clusterCol.toSeq).distinct
+    replaceLayout(spark, path,
+      pack(Parquet.read(spark, files: _*), liveBytes, targetBytes, clusterCol),
+      statCols, snap.props)
   }
 
   /** Per-file BLOOM sidecar over `col` — the point-lookup skip index zone
@@ -688,9 +616,7 @@ object Layout {
   private def readSidecarDf(spark: SparkSession, path: String, version: Long,
       colName: String): Option[DataFrame] = {
     val p = sidecarPath(path, version, colName)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
+    if (!LayoutManifest.fs(spark, path).exists(new Path(p))) None
     else Some(Parquet.read(spark, p))
   }
 
@@ -733,7 +659,8 @@ object Layout {
     val tsCol = tombstones.columns.head
     val ids = tombstones.select(tombstones(tsCol).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val affected = bloomPrunedFiles(spark, path, idCol, ids)
+    val hit = bloomPrunedFiles(spark, path, idCol, ids).map(f => new Path(f).getName).toSet
+    val affected = snapshot.files.filter(e => hit(e.name))
     val result = rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
     if (affected.nonEmpty) {
       // maintain the sidecar at the NEW version: re-bloom only the
@@ -744,8 +671,7 @@ object Layout {
       // banded aggregation, each file sized to its own row count)
       val m2 = LayoutManifest.current(spark, path).get
       val old = readSidecarDf(spark, path, snapshot.version, idCol).get
-      val affectedNames = affected.map(f => new org.apache.hadoop.fs.Path(
-        new java.net.URI(f).getPath).getName).toSet
+      val affectedNames = affected.map(_.name).toSet
       // the sidecar at snapshot.version covers exactly snapshot.fileNames
       // (bloomPrunedFiles already threw if versions diverged), so the
       // kept/dropped split is manifest arithmetic — no job to list it
@@ -775,39 +701,31 @@ object Layout {
 
   /** The wired recompaction gate: measure layout health via
     * [[manifestStats]] and RUN [[compactInPlace]] when clustering has
-    * decayed past the thresholds — the decision loop that previously lived
-    * only in a docstring. Thresholds come from the manifestStats regimes: a
-    * freshly range-clustered layout reads span fractions ~1/F and ~zero
-    * overlap; a churned/appended one drifts toward fractions ~1 and ~C(F,2)
-    * overlaps, where every pruned read/delete degrades toward a full scan.
-    * Defaults (avg span > 0.5 of the global range, or > 25% of file pairs
-    * overlapping) trigger when pruning has lost roughly half its power —
-    * early enough that the rewrite is amortized by the reads it saves, late
-    * enough that steady appends don't thrash rewrites. A maintenance
-    * schedule calls this after every append wave; the no-op path costs one
-    * manifest-scale aggregate, no scan, when the layout carries a committed
-    * manifest with `statCol` stats.
+    * decayed past the thresholds. Thresholds come from the manifestStats
+    * regimes: a freshly range-clustered layout reads span fractions ~1/F
+    * and ~zero overlap; a churned/appended one drifts toward fractions ~1
+    * and ~C(F,2) overlaps, where every pruned read/delete degrades toward a
+    * full scan. Defaults (avg span > 0.5 of the global range, or > 25% of
+    * file pairs overlapping) trigger when pruning has lost roughly half its
+    * power — early enough that the rewrite is amortized by the reads it
+    * saves, late enough that steady appends don't thrash rewrites. A layout
+    * of fewer than two files is never decayed: its one span IS the global
+    * range. A maintenance schedule calls this after every append wave; the
+    * no-op decision reads the committed manifest on the driver and fires
+    * no job when its entries carry `statCol` spans.
     */
   def maintainCompaction(spark: SparkSession, path: String, statCol: String,
       targetBytes: Long, spanFracAvgMax: Double = 0.5,
       overlapFracMax: Double = 0.25): CompactionDecision = {
-    val committed = LayoutManifest.current(spark, path)
-    val statsSrc = committed match {
-      case Some(m) if m.files.exists(_.stats.contains(statCol)) =>
-        LayoutManifest.statsDf(spark, path, m, Seq(statCol))
-      case _ => zoneMap(spark, path, Seq(statCol))
-    }
-    val s = manifestStats(statsSrc, statCol).head()
-    val nFiles = s.getLong(0)
-    val pairs = nFiles * (nFiles - 1) / 2
-    val overlapFrac =
-      if (pairs == 0) 0.0 else s.getLong(3).toDouble / pairs
-    val decayed = s.getDouble(1) > spanFracAvgMax || overlapFrac > overlapFracMax
+    val s = manifestStats(snapshot(spark, path, Seq(statCol)), statCol)
+    val pairs = s.nFiles * (s.nFiles - 1) / 2
+    val overlapFrac = if (pairs == 0) 0.0 else s.overlapPairs.toDouble / pairs
+    val decayed = s.nFiles >= 2 &&
+      (s.spanFracAvg > spanFracAvgMax || overlapFrac > overlapFracMax)
     val filesAfter =
-      if (decayed)
-        compactInPlace(spark, path, targetBytes, Some(statCol))._2
-      else nFiles.toInt
-    CompactionDecision(decayed, nFiles, s.getDouble(1), s.getDouble(2),
-      s.getLong(3), overlapFrac, filesAfter)
+      if (decayed) compactInPlace(spark, path, targetBytes, Some(statCol))._2
+      else s.nFiles.toInt
+    CompactionDecision(decayed, s.nFiles, s.spanFracAvg, s.spanFracMax,
+      s.overlapPairs, overlapFrac, filesAfter)
   }
 }

@@ -31,11 +31,11 @@ import scala.util.control.NonFatal
   *
   * Contents: one entry per live data file (name, row count, per-column
   * min/max zone stats) plus a string property map. The zone stats make the
-  * manifest double as the planning-time prune index
-  * ([[Layout.prunedRead]]/[[Layout.prunedReadIn]] consume [[statsDf]]), so
-  * a probe read over a committed layout schedules ZERO scan tasks to
-  * discover file spans. The props carry index identity (LSH plane
-  * count/hash, IVF centroid hash) so a delete/search against a layout
+  * manifest the layout's only zone map: [[Layout.prunedRead]]/
+  * [[Layout.prunedReadIn]], the deletes and the compaction gate all decide
+  * over the driver-side entries, so a probe read over a committed layout
+  * runs no job to discover file spans. The props carry index identity
+  * (LSH plane count/hash, IVF centroid hash) so a delete/search against a layout
   * written with DIFFERENT dials fails loudly instead of silently missing
   * rows ([[graft.operators.AnnSearch.deleteVectors]] validates).
   *
@@ -76,7 +76,7 @@ object LayoutManifest {
       files.flatMap(_.stats.keys).distinct.sorted
   }
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
+  private[sources] def fs(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
 
@@ -276,7 +276,7 @@ object LayoutManifest {
             // any footer-read failure (corrupt footer, unexpected stats
             // encoding, IO error) means "fast path unavailable", not "fail
             // the commit": an exception here used to propagate out of
-            // tasks.foreach(_.get()) and abort bootstrap/commit/zoneMap
+            // tasks.foreach(_.get()) and abort bootstrap/commit
             // where the exact scan fallback handles the file fine
             val e = try footerEntry(conf, st, statCols)
                     catch { case NonFatal(_) => None }
@@ -350,35 +350,6 @@ object LayoutManifest {
   /** Absolute path of a manifest-listed data file. */
   def dataPath(path: String, name: String): String =
     new Path(path, name).toString
-
-  /** The committed manifest as the zone-map DataFrame shape
-    * ([[Layout.zoneMap]]'s contract: `file` + `<col>_min`/`<col>_max` per
-    * stat column) — a local one-row-per-file frame, no scan. Files with an
-    * unknown span for a column carry NULL bounds; [[Layout]]'s prunes keep
-    * such files (no false negatives).
-    */
-  def statsDf(spark: SparkSession, path: String, m: Manifest,
-      statCols: Seq[String]): DataFrame = {
-    val rows = m.files.map { e =>
-      org.apache.spark.sql.Row.fromSeq(
-        dataPath(path, e.name) +: statCols.flatMap { c =>
-          e.stats.get(c) match {
-            case Some((lo, hi)) => Seq[Any](lo, hi)
-            case None           => Seq[Any](null, null)
-          }
-        })
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      statCols.flatMap(c => Seq(
-        org.apache.spark.sql.types.StructField(s"${c}_min",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(s"${c}_max",
-          org.apache.spark.sql.types.LongType, nullable = true))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
-  }
 
   /** Read exactly the files the current manifest lists (the isolated-reader
     * contract: a rewrite in progress — new files renamed in but not yet

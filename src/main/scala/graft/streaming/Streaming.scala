@@ -971,10 +971,11 @@ object Streaming {
 
   /** Streaming zone-map maintenance — the layout-tier analog of the index
     * maintenance screens above: each micro-batch lands in its own
-    * `batch_id` data partition AND contributes its per-file min/max rows
-    * to a manifest at the same time, so [[graft.sources.Layout.prunedRead]]
+    * `batch_id` data partition AND contributes its files' manifest entries
+    * ([[graft.sources.LayoutManifest.entriesFor]], named relative to
+    * `dataPath`) at the same time, so [[graft.sources.Layout.prunedRead]]
     * keeps pruning at planning time over everything ever ingested without
-    * any manifest rebuild (the manifest for a batch is derived from that
+    * any manifest rebuild (the entries for a batch are derived from that
     * batch's files only — no rescan of history, the invariant that makes
     * this viable at a 100 TB accumulated table).
     *
@@ -999,8 +1000,11 @@ object Streaming {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(dataPath)
-        graft.sources.Layout
-          .zoneMap(batch.sparkSession, s"$dataPath/batch_id=$batchId", statCols)
+        val spark = batch.sparkSession
+        val entries = graft.sources.LayoutManifest
+          .entriesFor(spark, Seq(s"$dataPath/batch_id=$batchId"), statCols)
+          .map(e => e.copy(name = s"batch_id=$batchId/${e.name}"))
+        spark.createDataFrame(entries)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -1011,10 +1015,17 @@ object Streaming {
       .start()
 
   /** The maintained manifest, ready for [[graft.sources.Layout.prunedRead]]
-    * (file paths are absolute, so the batch partitioning is transparent).
+    * over the data path (entry names are relative to it, so the batch
+    * partitioning is transparent). It was never committed, so it carries
+    * version -1 and no props.
     */
-  def loadZoneMap(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    Parquet.read(spark, path).drop("batch_id")
+  def loadZoneMap(spark: org.apache.spark.sql.SparkSession,
+      path: String): graft.sources.LayoutManifest.Manifest = {
+    import spark.implicits._
+    graft.sources.LayoutManifest.Manifest(-1L, Map.empty,
+      Parquet.read(spark, path).drop("batch_id")
+        .as[graft.sources.LayoutManifest.FileEntry].collect().toSeq.sortBy(_.name))
+  }
 
   /** Session-window stats per user (native session_window operator): the
     * streaming twin of [[graft.operators.Relational.sessionize]] — state is

@@ -70,11 +70,11 @@ class AnnSearchSpec extends SparkSpec {
     // result parity at the oracled dials (6 planes, radius 2)
     val planes = AnnSearch.hyperplanes(dim = 64)
     AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 8)
-    val manifest = Layout.zoneMap(spark, tmp, Seq("bucket"))
+    val manifest = AnnSearch.loadManifest(spark, tmp)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP)))
-    val got = rows(AnnSearch.searchClustered(spark, manifest,
+    val got = rows(AnnSearch.searchClustered(spark, tmp, manifest,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
     val want = rows(AnnSearch.search(
@@ -88,19 +88,19 @@ class AnnSearchSpec extends SparkSpec {
     val planes10 = AnnSearch.hyperplanes(dim = 64, numPlanes = 10)
     val tmp10 = java.nio.file.Files.createTempDirectory("graft_ann_clust10").toString
     AnnSearch.clusteredWrite(embs, col("embedding"), planes10, tmp10, numFiles = 32)
-    val man10 = Layout.zoneMap(spark, tmp10, Seq("bucket"))
-    val totalFiles = man10.count()
+    val man10 = AnnSearch.loadManifest(spark, tmp10)
+    val totalFiles = man10.files.size
     val probes = AnnSearch
       .probeBuckets(AnnSearch.bucketOf(q, planes10), 10, radius = 1)
       .map(_.toLong)
-    val readFiles = Layout.prunedReadIn(spark, man10, "bucket", probes)
+    val readFiles = Layout.prunedReadIn(spark, tmp10, man10, "bucket", probes)
       .select(col("_metadata.file_path")).distinct().count()
     assert(readFiles >= 1 && readFiles <= 2L * probes.size,
       s"read $readFiles of $totalFiles files")
     assert(readFiles < totalFiles,
       s"probe read must skip files: read $readFiles of $totalFiles")
     // and the pruned+filtered result still equals the full-index search
-    val got10 = rows(AnnSearch.searchClustered(spark, man10,
+    val got10 = rows(AnnSearch.searchClustered(spark, tmp10, man10,
       col("vec_id").cast("string"), col("embedding"), q, planes10,
       k = 10, probeRadius = 1))
     val want10 = rows(AnnSearch.search(
@@ -116,7 +116,7 @@ class AnnSearchSpec extends SparkSpec {
     val planes = AnnSearch.hyperplanes(dim = 64, numPlanes = 10)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ann_cb").toString
     AnnSearch.clusteredWrite(embs, col("embedding"), planes, tmp, numFiles = 32)
-    val man = Layout.zoneMap(spark, tmp, Seq("bucket"))
+    val man = AnnSearch.loadManifest(spark, tmp)
     val qs = embs.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
@@ -124,7 +124,7 @@ class AnnSearchSpec extends SparkSpec {
         round(col("score"), 6).as("score"))
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
-    val got = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val got = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qs, planes,
       k = 5, probeRadius = 1))
     val want = rows(AnnSearch.searchBatch(
@@ -139,14 +139,13 @@ class AnnSearchSpec extends SparkSpec {
       AnnSearch.probeBuckets(
         AnnSearch.bucketOf(r.getSeq[Float](1), planes), 10, radius = 1)
     }.distinct.toSeq.map(_.toLong)
-    val readFiles = Layout.prunedReadIn(spark, man, "bucket", probeUnion)
+    val readFiles = Layout.prunedReadIn(spark, tmp, man, "bucket", probeUnion)
       .select(col("_metadata.file_path")).distinct().count()
-    assert(readFiles < man.count(),
-      s"batch probe read must skip files: read $readFiles of ${man.count()}")
+    assert(readFiles < man.files.size,
+      s"batch probe read must skip files: read $readFiles of ${man.files.size}")
   }
 
   test("deleteVectors: bucket-membership prune rewrites few files; survivors equal the filtered twin") {
-    import graft.sources.Layout
     val embs = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = VectorStore.fromEmbeddingsTable(spark, dir).getVector("0").toSeq
     // 10 planes / 32 files so 5 tombstone buckets can only span <= 10 files
@@ -163,13 +162,13 @@ class AnnSearchSpec extends SparkSpec {
       s"bucket prune must bound the rewrite: $rewritten of $total files")
     assert(spark.read.parquet(tmp).filter(col("vec_id").isin(tombIds: _*)).count() == 0)
     // the surviving index still answers searches exactly like a fresh
-    // index over the corpus minus the tombstones (manifest rebuilt —
-    // production maintains it per delete)
-    val man = Layout.zoneMap(spark, tmp, Seq("bucket"))
+    // index over the corpus minus the tombstones (the delete committed
+    // the new manifest with bucket spans for the rewritten files)
+    val man = AnnSearch.loadManifest(spark, tmp)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSeq
-    val got = rows(AnnSearch.searchClustered(spark, man,
+    val got = rows(AnnSearch.searchClustered(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
     val want = rows(AnnSearch.search(
@@ -190,20 +189,20 @@ class AnnSearchSpec extends SparkSpec {
     sp.range(100).select((col("id") * 2).as("bucket"), col("id").as("v"))
       .repartitionByRange(4, col("bucket")).sortWithinPartitions("bucket")
       .write.mode("overwrite").parquet(tmp)
-    val man = Layout.zoneMap(sp, tmp, Seq("bucket"))
-    assert(man.count() == 4)
+    val man = graft.sources.LayoutManifest.bootstrap(sp, tmp, Seq("bucket"))
+    assert(man.files.size == 4)
     // two present values far apart: exactly their two files read
-    val hit = Layout.prunedReadIn(sp, man, "bucket", Seq(4L, 154L))
+    val hit = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(4L, 154L))
     val spans = hit.select(col("_metadata.file_path")).distinct().count()
     assert(spans == 2)
     assert(hit.filter(col("bucket").isin(4L, 154L)).count() == 2)
     // an absent value inside a span still keeps its covering file (no
     // false negatives; the caller's row-level predicate then drops it)
-    val cover = Layout.prunedReadIn(sp, man, "bucket", Seq(27L))
+    val cover = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(27L))
     assert(cover.select(col("_metadata.file_path")).distinct().count() == 1)
     assert(cover.filter(col("bucket") === 27L).count() == 0)
     // no value in any span: zero files, schema preserved
-    val none = Layout.prunedReadIn(sp, man, "bucket", Seq(999L))
+    val none = Layout.prunedReadIn(sp, tmp, man, "bucket", Seq(999L))
     assert(none.count() == 0 && none.columns.toSeq == Seq("bucket", "v"))
   }
 
@@ -295,15 +294,16 @@ class AnnSearchSpec extends SparkSpec {
     assert(m.props("planes_n") == "6")
     assert(m.props("planes_hash") == AnnSearch.planesHash(planes))
     assert(m.files.size == 8 && m.totalRows == embs.count())
-    // the manifest-resolved search equals the zone-map-scan one
+    // the manifest-resolved search equals one over spans re-derived from
+    // the directory
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSeq
     val got = rows(AnnSearch.searchClusteredAt(spark, tmp,
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
-    val want = rows(AnnSearch.searchClustered(spark,
-      graft.sources.Layout.zoneMap(spark, tmp, Seq("bucket")),
+    val want = rows(AnnSearch.searchClustered(spark, tmp,
+      LayoutManifest.bootstrap(spark, tmp, Seq("bucket")),
       col("vec_id").cast("string"), col("embedding"), q, planes,
       k = 10, probeRadius = 2))
     assert(got == want)
@@ -345,10 +345,10 @@ class AnnSearchSpec extends SparkSpec {
         round(col("score"), 6).as("score"))
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
-    val gotD = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val gotD = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qsD, planes,
       k = 5, probeRadius = 1))
-    val gotF = rows(AnnSearch.searchClusteredBatch(spark, man,
+    val gotF = rows(AnnSearch.searchClusteredBatch(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), qsF, planes,
       k = 5, probeRadius = 1))
     assert(gotD == gotF && gotF.nonEmpty)
@@ -371,10 +371,8 @@ class AnnSearchSpec extends SparkSpec {
     // on this bucket-clustered layout the id spans are near-total: a span
     // prune would mark essentially every file affected — the bloom prune
     // must name only the true holders plus fpp noise
-    val spanAffected = {
-      val m = Layout.zoneMap(sp, tmp, Seq("vec_id"))
-      m.filter(col("vec_id_min") <= 44L && col("vec_id_max") >= 5L).count()
-    }
+    val spanAffected = LayoutManifest.bootstrap(sp, tmp, Seq("vec_id")).files
+      .count { e => val (lo, hi) = e.stats("vec_id"); lo <= 44L && hi >= 5L }
     val tombIds = Seq(5L, 13L, 21L, 33L, 44L)
     val bloomAffected = Layout.bloomPrunedFiles(sp, tmp, "vec_id", tombIds).length
     assert(spanAffected >= 24, s"span prune must be useless here: $spanAffected of 32")

@@ -84,11 +84,11 @@ class IvfSpec extends SparkSpec {
     import graft.sources.Layout
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_clust").toString
     IvfSearch.clusteredWrite(embs, col("embedding"), cents, tmp, numFiles = 8)
-    val man = Layout.zoneMap(spark, tmp, Seq("list_id"))
+    val man = graft.sources.LayoutManifest.current(spark, tmp).get
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), BigDecimal(r.getDouble(1))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSeq
-    val got = rows(IvfSearch.searchClustered(spark, man,
+    val got = rows(IvfSearch.searchClustered(spark, tmp, man,
       col("vec_id").cast("string"), col("embedding"), query, cents,
       k = 10, nprobe = 4))
     val want = rows(IvfSearch.search(
@@ -99,11 +99,11 @@ class IvfSpec extends SparkSpec {
     // 4 probed lists against 8 files covering 16 lists (~2 per file): the
     // read must schedule at most 2 files per probe and skip the rest
     val probes = IvfSearch.probeLists(query, cents, nprobe = 4)
-    val readFiles = Layout.prunedReadIn(spark, man, "list_id", probes)
+    val readFiles = Layout.prunedReadIn(spark, tmp, man, "list_id", probes)
       .select(col("_metadata.file_path")).distinct().count()
     assert(readFiles >= 1 && readFiles <= 2L * probes.size)
-    assert(readFiles < man.count(),
-      s"probe read must skip files: read $readFiles of ${man.count()}")
+    assert(readFiles < man.files.size,
+      s"probe read must skip files: read $readFiles of ${man.files.size}")
   }
 
   test("rebuild-and-cutover: retrained quantizer swaps in one commit; stale centroids fail loudly") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.Layout
+import org.apache.spark.sql.graft.JobCount
+import graft.sources.{Layout, LayoutManifest}
 
 class LayoutSpec extends SparkSpec {
 
@@ -54,8 +55,8 @@ class LayoutSpec extends SparkSpec {
     li.repartitionByRange(8, col("l_partkey")).sortWithinPartitions("l_partkey")
       .write.mode("overwrite").parquet(sdir)
     def meanSpan(path: String, c: String): Double = {
-      val m = Layout.zoneMap(spark, path, Seq(c))
-      m.agg(avg(col(s"${c}_max") - col(s"${c}_min"))).head().getDouble(0)
+      val spans = LayoutManifest.bootstrap(spark, path, Seq(c)).files.map(_.stats(c))
+      spans.map { case (lo, hi) => (hi - lo).toDouble }.sum / spans.size
     }
     // the partkey-sorted layout leaves suppkey spans ~global (rows in a file
     // see every suppkey); z-order must cut the suppkey span while keeping
@@ -72,21 +73,20 @@ class LayoutSpec extends SparkSpec {
     val li = graft.sources.Testdata.table(spark, "/root/testdata/sf0.001", "lineitem")
     val zdir = tmp("zonemap")
     Layout.zorderWrite(li, "l_partkey", "l_suppkey", zdir, numFiles = 8)
-    val manifest = Layout.zoneMap(spark, zdir, Seq("l_partkey", "l_suppkey"))
-    assert(manifest.count() == 8)
+    val manifest = LayoutManifest.bootstrap(spark, zdir, Seq("l_partkey", "l_suppkey"))
+    assert(manifest.files.size == 8)
     // a selective partkey range must actually skip files on a z-ordered layout
-    val kept = manifest
-      .filter(col("l_partkey_min") <= 120 && col("l_partkey_max") >= 100)
-      .count()
+    val kept = manifest.files.count { e =>
+      val (lo, hi) = e.stats("l_partkey"); lo <= 120 && hi >= 100 }
     assert(kept < 8, s"no files pruned ($kept of 8 kept)")
-    val pruned = Layout.prunedRead(spark, manifest, "l_partkey", 100L, 120L)
+    val pruned = Layout.prunedRead(spark, zdir, manifest, "l_partkey", 100L, 120L)
       .filter(col("l_partkey").between(100, 120))
     val full = li.filter(col("l_partkey").between(100, 120))
     assert(pruned.count() == full.count())
     assert(pruned.agg(sum("l_quantity")).head().getDouble(0)
       == full.agg(sum("l_quantity")).head().getDouble(0))
     // range outside every file span -> empty result, schema intact
-    val empty = Layout.prunedRead(spark, manifest, "l_partkey", 1000000L, 2000000L)
+    val empty = Layout.prunedRead(spark, zdir, manifest, "l_partkey", 1000000L, 2000000L)
     assert(empty.count() == 0)
     assert(empty.schema.fieldNames.toSet == li.schema.fieldNames.toSet)
   }
@@ -126,10 +126,11 @@ class LayoutSpec extends SparkSpec {
       Seq(10000000L).toDF("doc_id"))
     assert(rw2 == 0 && d2 == 0L)
     assert(files() == after)
-    // the maintained-manifest path (production shape) deletes identically
-    val m = graft.sources.Layout.zoneMap(spark, dir, Seq("doc_id"))
+    // the committed-manifest path (production shape: the first delete
+    // committed one) deletes identically
+    assert(LayoutManifest.current(spark, dir).isDefined)
     val (_, rw3, d3) = graft.sources.Layout.deleteRows(spark, dir, "doc_id",
-      Seq(70L).toDF("doc_id"), knownManifest = Some(m))
+      Seq(70L).toDF("doc_id"))
     assert(rw3 == 1 && d3 == 1L)
     assert(spark.read.parquet(dir).filter(col("doc_id") === 70L).count() == 0L)
   }
@@ -159,13 +160,11 @@ class LayoutSpec extends SparkSpec {
       .head().getDecimal(0)
     assert(a == b)
     // cluster order restored: doc_id zone spans disjoint across files
-    val zm = Layout.zoneMap(spark, out, Seq("doc_id"))
-      .orderBy("doc_id_min").collect()
+    val zm = LayoutManifest.bootstrap(spark, out, Seq("doc_id")).files
+      .map(_.stats("doc_id")).sortBy(_._1)
     zm.sliding(2).foreach {
-      case Array(lo, hi) =>
-        assert(lo.getLong(zm.head.fieldIndex("doc_id_max"))
-          < hi.getLong(zm.head.fieldIndex("doc_id_min")),
-          "doc_id zones overlap after clustered compaction")
+      case Seq(lo, hi) =>
+        assert(lo._2 < hi._1, "doc_id zones overlap after clustered compaction")
       case _ =>
     }
   }
@@ -190,11 +189,9 @@ class LayoutSpec extends SparkSpec {
       case _ =>
     }
     assert(spans.head._1 == 0L && spans.last._2 == 99L)
-    // statsDf is the zone-map shape prunedRead consumes
-    val sdf = LayoutManifest.statsDf(sp, dir, m0, Seq("k"))
-    assert(sdf.columns.toSeq == Seq("file", "k_min", "k_max"))
-    assert(Layout.prunedRead(sp, sdf, "k", 10L, 20L).count() == 25 ||
-      Layout.prunedRead(sp, sdf, "k", 10L, 20L)
+    // the committed entries are the zone map prunedRead consumes
+    assert(Layout.prunedRead(sp, dir, m0, "k", 10L, 20L).count() == 25 ||
+      Layout.prunedRead(sp, dir, m0, "k", 10L, 20L)
         .filter(col("k").between(10, 20)).count() == 11)
     // a second commit takes the next version; readers take the max
     val v1 = LayoutManifest.commit(sp, dir, m0.copy(version = m0.version + 1,
@@ -223,10 +220,8 @@ class LayoutSpec extends SparkSpec {
     Layout.commitLayout(sp, dir, Seq("doc_id"))
     val n = docs.count()
     val tomb = (50L until 60L).toDF("doc_id")
-    def affectedOf(m: LayoutManifest.Manifest): Array[String] =
-      LayoutManifest.statsDf(sp, dir, m, Seq("doc_id"))
-        .filter(col("doc_id_min") <= 59L && col("doc_id_max") >= 50L)
-        .select("file").collect().map(_.getString(0))
+    def affectedOf(m: LayoutManifest.Manifest): Seq[LayoutManifest.FileEntry] =
+      m.files.filter { e => val (lo, hi) = e.stats("doc_id"); lo <= 59L && hi >= 50L }
 
     // ---- crash AFTER phase 1 (new files renamed in, manifest NOT committed)
     val snap0 = LayoutManifest.current(sp, dir).get
@@ -476,48 +471,38 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("prune guards: empty manifest throws a clear error; NULL spans are kept, never pruned") {
-    import org.apache.spark.sql.types._
     val sp = spark
-    val schema = StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("k_min", LongType, nullable = true),
-      StructField("k_max", LongType, nullable = true)))
-    val empty = sp.createDataFrame(
-      sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullspan").toString
+    val empty = LayoutManifest.Manifest(-1L, Map.empty, Seq.empty)
     val e1 = intercept[IllegalArgumentException] {
-      Layout.prunedRead(sp, empty, "k", 0L, 10L)
+      Layout.prunedRead(sp, dir, empty, "k", 0L, 10L)
     }
     assert(e1.getMessage.contains("EMPTY manifest"))
     val e2 = intercept[IllegalArgumentException] {
-      Layout.prunedReadIn(sp, empty, "k", Seq(1L))
+      Layout.prunedReadIn(sp, dir, empty, "k", Seq(1L))
     }
     assert(e2.getMessage.contains("EMPTY manifest"))
     // a file with NULL bounds (stats unknown) must be KEPT by both prunes
     // and treated as affected by the delete prune — no false negatives
-    val dir = java.nio.file.Files.createTempDirectory("graft_nullspan").toString
     sp.range(10).select(col("id").as("k"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), sp.sparkContext.hadoopConfiguration)
     val file = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .head.getPath.toString
-    val nullSpan = sp.createDataFrame(
-      sp.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row(file, null, null)), 1), schema)
-    assert(Layout.prunedRead(sp, nullSpan, "k", 100L, 200L).count() == 10)
-    assert(Layout.prunedReadIn(sp, nullSpan, "k", Seq(999L)).count() == 10)
+      .head.getPath.getName
+    val nullSpan = LayoutManifest.Manifest(-1L, Map.empty,
+      Seq(LayoutManifest.FileEntry(file, 10L, Map.empty)))
+    assert(Layout.prunedRead(sp, dir, nullSpan, "k", 100L, 200L).count() == 10)
+    assert(Layout.prunedReadIn(sp, dir, nullSpan, "k", Seq(999L)).count() == 10)
   }
 
   test("manifestStats: clustered layout reads tight disjoint spans; a scattered one reads full-range overlap") {
-    import graft.sources.Layout
     val sp = spark
-    import sp.implicits._
     val rows = sp.range(10000).select(col("id").as("k"), (col("id") * 3).as("v"))
     def stats(path: String): (Long, Double, Double, Long) = {
-      val m = Layout.manifestStats(Layout.zoneMap(sp, path, Seq("k")), "k")
-        .head()
-      (m.getLong(0), m.getDouble(1), m.getDouble(2), m.getLong(3))
+      val m = Layout.manifestStats(LayoutManifest.bootstrap(sp, path, Seq("k")), "k")
+      (m.nFiles, m.spanFracAvg, m.spanFracMax, m.overlapPairs)
     }
     val tidy = java.nio.file.Files.createTempDirectory("graft_mstats_c").toString
     rows.repartitionByRange(8, col("k")).sortWithinPartitions("k")
@@ -543,43 +528,31 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("manifestStats sweep: overlap count equals the pairwise join form on scattered/clustered/mixed/null manifests") {
-    // the O(F log F) endpoint sweep replaced the O(F²) theta self-join
-    // (round-9); this pins count equality against a brute-force pair count
-    // on adversarial span sets: duplicates, touching endpoints, containment
+    // pins the endpoint sweep's count against a brute-force pair count on
+    // adversarial span sets: duplicates, touching endpoints, containment
     // nesting, point spans, NULL spans
-    val sp = spark
-    val cases: Seq[Seq[(Any, Any)]] = Seq(
+    val cases: Seq[Seq[Option[(Long, Long)]]] = Seq(
       // clustered: disjoint
-      Seq((0L, 9L), (10L, 19L), (20L, 29L), (30L, 39L)),
+      Seq(Some((0L, 9L)), Some((10L, 19L)), Some((20L, 29L)), Some((30L, 39L))),
       // scattered: all overlap
-      Seq((0L, 100L), (1L, 99L), (2L, 98L), (3L, 97L)),
+      Seq(Some((0L, 100L)), Some((1L, 99L)), Some((2L, 98L)), Some((3L, 97L))),
       // mixed: touching endpoints count (closed spans), nesting, duplicates
-      Seq((0L, 10L), (10L, 20L), (21L, 30L), (5L, 7L), (5L, 7L), (7L, 7L),
-        (25L, 40L), (41L, 41L)),
+      Seq(Some((0L, 10L)), Some((10L, 20L)), Some((21L, 30L)), Some((5L, 7L)),
+        Some((5L, 7L)), Some((7L, 7L)), Some((25L, 40L)), Some((41L, 41L))),
       // null spans never pair
-      Seq((0L, 5L), (null, null), (3L, 8L), (null, null)),
+      Seq(Some((0L, 5L)), None, Some((3L, 8L)), None),
       // single file / empty-range
-      Seq((4L, 4L)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("k_min",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("k_max",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+      Seq(Some((4L, 4L))))
+    def manifest(spans: Seq[Option[(Long, Long)]]) = LayoutManifest.Manifest(-1L,
+      Map.empty, spans.zipWithIndex.map { case (span, i) =>
+        LayoutManifest.FileEntry(f"f$i%03d", 1L, span.map("k" -> _).toMap) })
+    def brute(spans: Seq[(Long, Long)]): Long = (for {
+      ((alo, ahi), i) <- spans.zipWithIndex; ((blo, bhi), j) <- spans.zipWithIndex
+      if i < j && alo <= bhi && blo <= ahi
+    } yield 1).size.toLong
     cases.zipWithIndex.foreach { case (spans, ci) =>
-      val rows = spans.zipWithIndex.map { case ((lo, hi), i) =>
-        org.apache.spark.sql.Row(f"f$i%03d", lo, hi)
-      }
-      val m = sp.createDataFrame(sp.sparkContext.parallelize(rows, 1), schema)
-      val got = Layout.manifestStats(m, "k").head().getLong(3)
-      val defined = spans.zipWithIndex.collect {
-        case ((lo: Long, hi: Long), i) => (i, lo, hi)
-      }
-      val want = (for {
-        (i, alo, ahi) <- defined; (j, blo, bhi) <- defined
-        if i < j && alo <= bhi && blo <= ahi
-      } yield 1).size.toLong
+      val got = Layout.manifestStats(manifest(spans), "k").overlapPairs
+      val want = brute(spans.flatten)
       assert(got == want, s"case $ci: sweep=$got join=$want spans=$spans")
     }
     // randomized cross-check: 200 spans, brute force vs sweep
@@ -587,15 +560,69 @@ class LayoutSpec extends SparkSpec {
     val rspans = Seq.fill(200) {
       val lo = rnd.nextInt(1000).toLong; (lo, lo + rnd.nextInt(200).toLong)
     }
-    val rrows = rspans.zipWithIndex.map { case ((lo, hi), i) =>
-      org.apache.spark.sql.Row(f"f$i%03d", lo, hi) }
-    val rm = sp.createDataFrame(sp.sparkContext.parallelize(rrows, 1), schema)
-    val rgot = Layout.manifestStats(rm, "k").head().getLong(3)
-    val rwant = (for {
-      ((alo, ahi), i) <- rspans.zipWithIndex; ((blo, bhi), j) <- rspans.zipWithIndex
-      if i < j && alo <= bhi && blo <= ahi
-    } yield 1).size.toLong
+    val rgot = Layout.manifestStats(manifest(rspans.map(Some(_))), "k").overlapPairs
+    val rwant = brute(rspans)
     assert(rgot == rwant, s"random: sweep=$rgot brute=$rwant")
+  }
+
+  test("deleteRows on a column the manifest has no span for never rewrites an orphan into the table") {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_orphan_del").toString
+    sp.range(1000).select(col("id").as("a"), (col("id") * 3).as("b"))
+      .repartitionByRange(4, col("a")).sortWithinPartitions("a")
+      .write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(sp, dir, Seq("a"))
+    // a crashed rewrite's leftover: a renamed-in copy of the live file
+    // holding b = 3 (a = 1), which no manifest lists
+    val live = LayoutManifest.current(sp, dir).get.files
+      .find { e => val (lo, hi) = e.stats("a"); lo <= 1L && hi >= 1L }.get.name
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), sp.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir, live),
+      fs, new org.apache.hadoop.fs.Path(dir, s"rwdead000_$live"), false,
+      sp.sparkContext.hadoopConfiguration)
+    val (total, rewritten, deleted) = Layout.deleteRows(sp, dir, "b", Seq(3L).toDF("b"))
+    assert((total, rewritten, deleted) == ((4, 1, 1L)))
+    val after = LayoutManifest.readData(sp, dir)
+    assert(after.count() == 999)
+    assert(after.filter(col("b") === 3L).count() == 0)
+    // the delete's commit carries the filled-in spans of the new column
+    assert(LayoutManifest.current(sp, dir).get.files.forall(_.stats.contains("b")))
+  }
+
+  test("maintainCompaction: a one-file layout is never decayed, so repeated calls do not rewrite it") {
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_onefile").toString
+    sp.range(1000).select(col("id").as("k")).coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val v = Layout.commitLayout(sp, dir, Seq("k"))
+    (1 to 3).foreach { _ =>
+      val d = Layout.maintainCompaction(sp, dir, "k", targetBytes = 1L << 30)
+      assert(!d.compacted && d.nFiles == 1 && d.filesAfter == 1, s"$d")
+    }
+    assert(LayoutManifest.current(sp, dir).get.version == v)
+  }
+
+  test("decisions over a committed layout fire no jobs: compaction no-op, prunedRead and prunedReadIn file choice") {
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_nojobs").toString
+    sp.range(10000).select(col("id").as("k"), (col("id") % 97).as("v"))
+      .repartitionByRange(8, col("k")).sortWithinPartitions("k")
+      .write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(sp, dir, Seq("k"))
+    val m = LayoutManifest.current(sp, dir).get
+    val (d, gateJobs) = JobCount(sp)(
+      Layout.maintainCompaction(sp, dir, "k", targetBytes = 1L << 30))
+    assert(!d.compacted && d.nFiles == 8)
+    assert(gateJobs == 0, s"no-op compaction decision ran $gateJobs jobs")
+    val (range, rangeJobs) = JobCount(sp)(Layout.prunedRead(sp, dir, m, "k", 10L, 20L))
+    assert(rangeJobs == 0, s"prunedRead file choice ran $rangeJobs jobs")
+    val (in, inJobs) = JobCount(sp)(Layout.prunedReadIn(sp, dir, m, "k", Seq(5L, 9000L)))
+    assert(inJobs == 0, s"prunedReadIn file choice ran $inJobs jobs")
+    // and the choices are right: one file, then two
+    assert(range.select(col("_metadata.file_path")).distinct().count() == 1)
+    assert(in.select(col("_metadata.file_path")).distinct().count() == 2)
   }
 
   test("footer-based manifest entries: rows and int spans equal the scan aggregation; non-int columns fall back correctly") {

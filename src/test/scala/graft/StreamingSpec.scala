@@ -589,11 +589,11 @@ class StreamingSpec extends SparkSpec {
     val (before, after) = Layout.compact(sp, s"$out/idx", s"$out/clustered",
       targetBytes = 1L << 30, clusterCol = Some("bucket"))
     assert(before >= 2 && after >= 1)
-    val man = Layout.zoneMap(sp, s"$out/clustered", Seq("bucket"))
+    val man = graft.sources.LayoutManifest.bootstrap(sp, s"$out/clustered", Seq("bucket"))
     val qv = Seq(1f, 0f, 0f, 0f)
     def res(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val got = res(AnnSearch.searchClustered(sp, man, col("id"),
+    val got = res(AnnSearch.searchClustered(sp, s"$out/clustered", man, col("id"),
       col("embedding"), qv, planes, k = 3))
     val twin = res(AnnSearch.search(
       AnnSearch.index((b1 ++ b2).toDF("id", "embedding"), col("embedding"), planes),
@@ -885,23 +885,23 @@ class StreamingSpec extends SparkSpec {
       in.addData((1L, 10L), (2L, 20L), (3L, 30L))
       q.processAllAvailable()
       val m1 = Streaming.loadZoneMap(sp, s"$out/manifest")
-      val files1 = m1.count()
+      val files1 = m1.files.size
       assert(files1 >= 1)
       in.addData((4L, 1000L), (5L, 2000L))
       q.processAllAvailable()
       val m2 = Streaming.loadZoneMap(sp, s"$out/manifest")
-      assert(m2.count() > files1, "second batch must add manifest rows")
+      assert(m2.files.size > files1, "second batch must add manifest rows")
       // pruned read over the accumulated table: only first-batch spans
       // intersect [0, 100], and the result equals the row-level filter
-      val pruned = Layout.prunedRead(sp, m2, "k", 0L, 100L)
+      val pruned = Layout.prunedRead(sp, s"$out/data", m2, "k", 0L, 100L)
         .filter(col("k").between(0L, 100L))
         .select("id").collect().map(_.getLong(0)).toSet
       assert(pruned == Set(1L, 2L, 3L))
       // the prune actually skipped the second batch's files
-      val kept = m2.filter(col("k_min") <= 100L && col("k_max") >= 0L).count()
-      assert(kept < m2.count(), "no files pruned")
+      val kept = m2.files.count { e => val (lo, hi) = e.stats("k"); lo <= 100L && hi >= 0L }
+      assert(kept < m2.files.size, "no files pruned")
       // high-range probe reads only the later arrivals
-      val hi = Layout.prunedRead(sp, m2, "k", 1500L, 3000L)
+      val hi = Layout.prunedRead(sp, s"$out/data", m2, "k", 1500L, 3000L)
         .filter(col("k").between(1500L, 3000L))
         .select("id").collect().map(_.getLong(0)).toSet
       assert(hi == Set(5L))
