@@ -1529,12 +1529,8 @@ object SparkEntry {
     // retrieval probe; the window spelling would sort every label group)
     "q_knn_per_label" -> ((s, dir) => {
       val emb = graft.sources.Testdata.table(s, dir, "embeddings")
-      val q = queryVec(s, dir)
-      val qNorm = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
       val scored = emb.select(col("label"), col("vec_id").cast("string").as("id"),
-        (graft.functions.VectorFunctions.dot(col("embedding"), typedLit(q)) /
-          (sqrt(graft.functions.VectorFunctions.dot(col("embedding"), col("embedding"))) *
-            lit(qNorm))).as("score"))
+        graft.functions.VectorFunctions.cosineTo(col("embedding"), queryVec(s, dir)).as("score"))
       org.apache.spark.sql.graft.GroupTopK
         .perGroup(scored, Seq(col("label")), Seq(col("score").desc, col("id").asc), 3)
         .select(col("label"), col("id"), round(col("score"), 6).as("score"))

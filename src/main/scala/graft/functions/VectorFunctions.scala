@@ -61,4 +61,20 @@ object VectorFunctions {
     */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(normSq(a)) * sqrt(normSq(b)))
+
+  /** [[cosine]] of a vector column against one driver-side query vector,
+    * with the same doubles. The query's norm is computed here
+    * ([[queryNorm]]) and bound with [[BoundParam.param]]: `cosine(v,
+    * typedLit(q))` would fold it into an inlined literal, so every new query
+    * would compile new code.
+    */
+  def cosineTo(v: Column, query: Seq[Float]): Column =
+    dot(v, typedLit(query)) / (sqrt(normSq(v)) * BoundParam.param(queryNorm(query)))
+
+  /** `sqrt(normSq(q))` of a driver-side vector, in the kernel's fold order
+    * ([[DotProductExpr]]: left to right from 0.0, each element widened to
+    * double first), so it equals the folded column expression bit for bit.
+    */
+  def queryNorm(query: Seq[Float]): Double =
+    math.sqrt(query.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
 }

@@ -219,7 +219,7 @@ object AnnSearch {
     graft.sources.Layout
       .prunedReadIn(spark, path, manifest, "bucket", probes.map(_.toLong))
       .filter(col("bucket").isin(probes: _*)) // zone maps prune files, not rows
-      .withColumn("score", VF.cosine(vec, typedLit(query)))
+      .withColumn("score", VF.cosineTo(vec, query))
       .select(id.as("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)
@@ -279,6 +279,9 @@ object AnnSearch {
 
   /** Approximate top-k: prune to the probe buckets (Hamming ≤ probeRadius
     * around the query's bucket), then exact cosine ranking inside them.
+    * The probe set stays an `IN` of int literals, which Parquet pushes
+    * down; generated code spells such values out, so a warm process
+    * compiles once per query bucket (at most 2^planes), not once per query.
     */
   def search(
       indexed: DataFrame,
@@ -292,7 +295,7 @@ object AnnSearch {
     val probes = probeBuckets(qb, planes.length, probeRadius)
     indexed
       .filter(col("bucket").isin(probes: _*))
-      .withColumn("score", VF.cosine(vec, typedLit(query)))
+      .withColumn("score", VF.cosineTo(vec, query))
       .select(id.as("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)

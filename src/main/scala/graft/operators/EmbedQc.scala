@@ -316,7 +316,7 @@ object EmbedQc {
         case None => (vec, query)
       }
       embs.select(id.cast("string").as("id"),
-          VF.cosine(vcol, typedLit(q)).as("score"))
+          VF.cosineTo(vcol, q).as("score"))
         .orderBy(desc("score"), asc("id"))
         .limit(k)
         .collect().map(_.getString(0)).toSeq

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.JsonMeta
+import graft.functions.BoundParam.param
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -103,13 +104,17 @@ object FilterDsl {
     * numbers compare numerically across int/float; strings/bools/lists
     * compare only against their own type (a quoted fragment never casts to
     * double, so the cast-null path rejects cross-type matches).
+    *
+    * Numeric comparands are bound (`param`), never inlined, here and in
+    * [[cmpPred]], so filters that differ only in their constants share
+    * compiled code; string comparands already reach it as references.
     */
   private def eqPred(kv: Column, key: String, v: MetaValue): Column = {
     val f = frag(kv, key)
     // try_cast: non-numeric fragments (quoted strings, bools) become null —
     // the comparison is then null ⇒ row filtered, matching Python `==` being
     // False across types (ANSI cast would instead throw).
-    if (isNumeric(v)) f.try_cast("double") === lit(numeric(v))
+    if (isNumeric(v)) f.try_cast("double") === param(numeric(v))
     else f === lit(v.enc)
   }
 
@@ -131,7 +136,7 @@ object FilterDsl {
         // fragments (type-strict).
         array_contains(JsonMeta.jsonArr(f), lit(v.enc))
       case "$gt" | "$gte" | "$lt" | "$lte" =>
-        if (isNumeric(v)) cmp(f.try_cast("double"), lit(numeric(v)))
+        if (isNumeric(v)) cmp(f.try_cast("double"), param(numeric(v)))
         else v match {
           case MStr(raw) =>
             // String (incl. ISO-8601 datetime) ordering on RAW strings, as

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.functions.BoundParam.param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -138,19 +139,19 @@ object IvfPq {
       (cid, Pq.lut(qr.toSeq, cb), qrNormSq)
     }
     val adist = branches.tail.foldLeft(
-      when(col("list_id") === lit(branches.head._1),
-        Pq.adcCol(col("pq_codes"), branches.head._2, cb.ks) + lit(branches.head._3))) {
+      when(col("list_id") === param(branches.head._1),
+        Pq.adcCol(col("pq_codes"), branches.head._2, cb.ks) + param(branches.head._3))) {
       case (acc, (cid, lutFlat, n2)) =>
-        acc.when(col("list_id") === lit(cid),
-          Pq.adcCol(col("pq_codes"), lutFlat, cb.ks) + lit(n2))
+        acc.when(col("list_id") === param(cid),
+          Pq.adcCol(col("pq_codes"), lutFlat, cb.ks) + param(n2))
     }
     indexed
-      .filter(col("list_id").isin(probes: _*))
+      .filter(IvfSearch.probeFilter(col("list_id"), probes))
       .withColumn("adist", adist)
       .withColumn("id", id)
       .orderBy(asc("adist"), asc("id"))
       .limit(rerank)
-      .withColumn("score", VF.cosine(vec, typedLit(query)))
+      .withColumn("score", VF.cosineTo(vec, query))
       .select(col("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)

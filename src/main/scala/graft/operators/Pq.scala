@@ -204,7 +204,7 @@ object Pq {
       .withColumn("id", id)
       .orderBy(asc("adist"), asc("id"))
       .limit(rerank)
-      .withColumn("score", VF.cosine(vec, typedLit(query)))
+      .withColumn("score", VF.cosineTo(vec, query))
       .select(col("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)

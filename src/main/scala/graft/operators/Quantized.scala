@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.functions.BoundParam.param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ByteType
@@ -57,7 +58,7 @@ object Quantized {
     val qNorm = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
     quantized
       .withColumn("score",
-        VF.dot(col("qemb"), typedLit(q.toSeq)) / (sqrt(col("qnorm_sq")) * lit(qNorm)))
+        VF.dot(col("qemb"), typedLit(q.toSeq)) / (sqrt(col("qnorm_sq")) * param(qNorm)))
       .select(id.as("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)
@@ -74,7 +75,7 @@ object Quantized {
     val qNorm = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
     quantized
       .withColumn("distance",
-        lit(1.0) - VF.dot(col("qemb"), typedLit(q.toSeq)) / (sqrt(col("qnorm_sq")) * lit(qNorm)))
+        lit(1.0) - VF.dot(col("qemb"), typedLit(q.toSeq)) / (sqrt(col("qnorm_sq")) * param(qNorm)))
       .select(id.as("id"), col("distance"))
       .orderBy(asc("distance"), asc("id"))
       .limit(k)
@@ -163,7 +164,7 @@ object Quantized {
       .withColumn("id", id)
       .orderBy(asc("hamming"), asc("id"))
       .limit(rerank)
-      .withColumn("score", VF.cosine(rerankVec, typedLit(rerankQuery)))
+      .withColumn("score", VF.cosineTo(rerankVec, rerankQuery))
       .select(col("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)
@@ -188,11 +189,11 @@ object Quantized {
       rerank: Int = 50): DataFrame = {
     val qCode = binarizeVec(query)
     binarized
-      .withColumn("hamming", bit_count(col("bcode").bitwiseXOR(lit(qCode))))
+      .withColumn("hamming", bit_count(col("bcode").bitwiseXOR(param(qCode))))
       .withColumn("id", id)
       .orderBy(asc("hamming"), asc("id"))
       .limit(rerank)
-      .withColumn("score", VF.cosine(vec, typedLit(query)))
+      .withColumn("score", VF.cosineTo(vec, query))
       .select(col("id"), col("score"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Checkpoint.CheckpointOps
 import graft.functions.{VectorFunctions => VF}
+import graft.functions.BoundParam.param
 import graft.sources.VectorStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -40,11 +41,10 @@ object Search {
       k: Int = 5,
       autocut: Boolean = false): DataFrame = {
     val pred = FilterDsl.compile(col("metadata_kv"), metadataFilter, orFilters, excludeFilter)
-    val q = typedLit(query)
-    val qNorm = math.sqrt(query.map(x => x.toDouble * x.toDouble).sum)
     val scored = store.df
       .filter(pred)
-      .withColumn("score", VF.dot(col("embedding"), q) / (sqrt(col("norm_sq")) * lit(qNorm)))
+      .withColumn("score", VF.dot(col("embedding"), typedLit(query)) /
+        (sqrt(col("norm_sq")) * param(VF.queryNorm(query))))
       .select(col("id"), col("score"), col("metadata"))
       .orderBy(desc("score"), asc("id"))
       .limit(k)
@@ -55,7 +55,7 @@ object Search {
     * (no store wrapper) — building block for ad-hoc pipelines.
     */
   def scoreCosine(df: DataFrame, embeddingCol: Column, query: Seq[Float]): Column =
-    VF.cosine(embeddingCol, typedLit(query))
+    VF.cosineTo(embeddingCol, query)
 
   /** Batch k-NN: top-k per query for a whole SET of query vectors in ONE
     * corpus scan — the throughput shape the reference cannot express (its

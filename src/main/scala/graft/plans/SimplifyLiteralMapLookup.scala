@@ -1,8 +1,10 @@
 package graft.plans
 
+import graft.functions.BoundParam
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.types._
 
 /** Catalyst optimizer rule making literal-keyed metadata maps transparent to
@@ -33,7 +35,14 @@ import org.apache.spark.sql.types._
   *     shortest-round-trip string parses to a different double than direct
   *     widening — so the guard is integral-only.
   *
-  * After (1)+(2) the flagship filtered-search predicate collapses to
+  *  3. In a `Filter`, a comparison of a column (or of an integral column's
+  *     cast) with a [[graft.functions.BoundParam]] compares with the same
+  *     value as a `Literal`. The filter DSL binds its numeric constants so
+  *     that generated code is shared across requests, but once (1)+(2)
+  *     expose a stored column, only a literal pushes to the scan: pruning
+  *     wins over class reuse there. Projections keep their bound values.
+  *
+  * After (1)-(3) the flagship filtered-search predicate collapses to
   * `cast(label AS double) = 3.0`, which Spark's own
   * `UnwrapCastInBinaryComparison` turns into `label = 3` — a plain pushable
   * Parquet filter (row-group stats skip + partition pruning when the key is
@@ -67,14 +76,32 @@ object SimplifyLiteralMapLookup extends Rule[LogicalPlan] {
     }
   }
 
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    unbindColumnFilters(simplifyLookups(plan))
+
+  private def onColumn(e: Expression): Boolean = e match {
+    case _: Attribute => true
+    case Cast(a: Attribute, _, _, _) => integral(a.dataType)
+    case _ => false
+  }
+
+  private def unbindColumnFilters(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(TreePattern.FILTER)) {
+      case f: Filter => f.transformExpressions {
+        case c @ BinaryComparison(l, p: BoundParam) if onColumn(l) =>
+          c.withNewChildren(Seq(l, p.literal))
+        case c @ BinaryComparison(p: BoundParam, r) if onColumn(r) =>
+          c.withNewChildren(Seq(p.literal, r))
+      }
+    }
+
   // Prune on CREATE_MAP (not EXTRACT_VALUE): ElementAt declares no
   // nodePatterns in Spark 4.1.2, so an EXTRACT_VALUE-based condition only
   // fired when a Cast happened to sit in the subtree. Both map-lookup
   // rewrites require a CreateMap child, and CreateMap carries CREATE_MAP —
   // that pattern is sound and precise; CAST stays for rewrite (2).
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressionsWithPruning(
-    _.containsAnyPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CREATE_MAP,
-      org.apache.spark.sql.catalyst.trees.TreePattern.CAST)) {
+  private def simplifyLookups(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressionsWithPruning(
+    _.containsAnyPattern(TreePattern.CREATE_MAP, TreePattern.CAST)) {
     case ea @ ElementAt(m: CreateMap, key: Literal, _, _) =>
       lookup(m, key) match {
         case Some(v) if v.dataType == ea.dataType => v

@@ -38,15 +38,15 @@ final case class VectorStore(df: DataFrame) {
 
   /** Point lookup (reference `get_vector`, vector_database.py:49-55).
     * Raises if absent, with the reference's message. One job: each
-    * partition stops at its first match, so the driver receives at most one
-    * row per partition (`take(1)` would scan up over several jobs).
+    * partition stops at its first match ([[Bridge.firstPerPartition]]), so
+    * the driver receives at most one row per partition. The id reaches
+    * generated code as a reference, so a warm process compiles nothing for
+    * a new id.
     */
-  def getVector(uniqueId: String): Array[Float] = {
-    val rows = Bridge.localLimit(
-      df.filter(col("id") === lit(uniqueId)).select("embedding"), 1).collect()
-    if (rows.isEmpty) throw new NoSuchElementException("Unique ID does not exist.")
-    rows(0).getSeq[Float](0).toArray
-  }
+  def getVector(uniqueId: String): Array[Float] =
+    Bridge.firstPerPartition(df.filter(col("id") === lit(uniqueId)).select("embedding"))
+      .headOption.map(_.getArray(0).toFloatArray())
+      .getOrElse(throw new NoSuchElementException("Unique ID does not exist."))
 
   /** Single insert (reference `store_embedding`, vector_database.py:57-81).
     * Duplicate id ⇒ IllegalArgumentException("Unique ID already exists.").
@@ -58,7 +58,7 @@ final case class VectorStore(df: DataFrame) {
     * vector_database.py:83-117). Missing metadata entries are padded with
     * `{}` (the sharded variant's behavior, sharded_vector_database.py:260-261,
     * adopted per SURVEY §3.2). Duplicate-id validation runs as one
-    * broadcast-able semi-join, not a per-row loop.
+    * bounded job, not a per-row loop.
     */
   def insertBatch(
       ids: Seq[String],
@@ -76,10 +76,12 @@ final case class VectorStore(df: DataFrame) {
         .toDF("id", "embedding", "metadata")
         .withColumn("embedding", col("embedding").cast(ArrayType(FloatType))),
       col("id"), col("embedding"), col("metadata"))
-    // Existence check: broadcast the (small) new batch against the store —
-    // one semi-join instead of |batch| point lookups.
-    val dups = df.join(broadcast(newRows.select("id")), Seq("id"), "left_semi")
-    if (!dups.isEmpty) throw new IllegalArgumentException("Unique ID already exists.")
+    // Existence check: one IN filter over the store instead of |batch| point
+    // lookups, in one job (a broadcast semi-join would run a second job to
+    // broadcast the batch). Spark passes the id set to generated code as a
+    // reference.
+    val dups = df.filter(col("id").isin(ids: _*)).select("id")
+    if (Bridge.firstPerPartition(dups).nonEmpty) throw new IllegalArgumentException("Unique ID already exists.")
     VectorStore(df.unionByName(newRows))
   }
 

@@ -95,6 +95,20 @@ class ParquetOpenSpec extends SparkSpec {
     assert(err.getMessage == "Unique ID does not exist." && jobsAbsent == 1)
   }
 
+  test("insertBatch: the duplicate check is one job, with or without a duplicate") {
+    val store = tmp("graft_open_insert")
+    VectorStore.fromEmbeddingsTable(spark, sf).persist(store, shardSize = 300)
+    val vs = VectorStore.load(spark, store)
+    assert(vs.df.rdd.getNumPartitions > 1)
+    val id = vs.df.select("id").orderBy(col("id").desc).head().getString(0)
+    val emb = Seq.fill(64)(0.5f)
+    val (grown, jobsNew) = JobCount(spark)(vs.insertBatch(Seq("new-a", "new-b"), Seq(emb, emb)))
+    assert(jobsNew == 1 && grown.count() == vs.count() + 2)
+    val (err, jobsDup) = JobCount(spark)(
+      intercept[IllegalArgumentException](vs.insertBatch(Seq("new-c", id), Seq(emb, emb))))
+    assert(err.getMessage == "Unique ID already exists." && jobsDup == 1)
+  }
+
   test("fallbacks: partitioned streaming output, empty input and mergeSchema keep Spark's inference") {
     val sp = spark
     import sp.implicits._

@@ -343,6 +343,48 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("BoundParam ≡ Literal in comparisons and arithmetic, generated and interpreted") {
+    import graft.functions.BoundParam.param
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val values = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      1.5, -2.0) ++ samples(Gen.choose(-1e6, 1e6), 6)
+    // text cells as FilterDsl sees them: try_cast to double, "abc" and null
+    // give null inputs
+    val cells = values.map(_.toString) ++ Seq("abc", null)
+    // an RDD, not a local relation, so projections run as generated or
+    // interpreted code rather than being folded by the optimizer
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(cells.map(Row(_)), 2),
+      StructType(Seq(StructField("s", StringType))))
+    val x = col("s").try_cast("double")
+    val ops: Seq[(Column, Column) => Column] = Seq(_ === _, _ <=> _, _ < _, _ <= _, _ > _,
+      _ >= _, _ + _, _ - _, _ * _, try_divide)
+    def check(codegen: Boolean): Unit = {
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      spark.conf.set("spark.sql.codegen.factoryMode", if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      values.foreach { v =>
+        val pairs = ops.flatMap(op => Seq(
+          (op(x, lit(v)), op(x, param(v))), (op(lit(v), x), op(param(v), x))))
+        val q = df.select(pairs.flatMap { case (l, p) => Seq(l, p) }: _*)
+        val got = q.collect()
+        assert(q.queryExecution.executedPlan.toString.contains("*(") == codegen)
+        got.foreach { r =>
+          pairs.indices.foreach { i =>
+            // Double.equals: NaN equals NaN, -0.0 differs from 0.0
+            assert(java.util.Objects.equals(r.get(2 * i), r.get(2 * i + 1)),
+              s"v=$v pair $i (codegen=$codegen): ${r.get(2 * i)} vs ${r.get(2 * i + 1)}")
+          }
+        }
+      }
+    }
+    try { check(codegen = true); check(codegen = false) }
+    finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
   test("GramAgg ≡ brute-force Σ v·vᵀ; partition-count invariant to 1e-9") {
     import testImplicits._
     val gen: Gen[List[List[Float]]] = for {
