@@ -1754,11 +1754,11 @@ object SparkEntry {
           col("doc_id"), col("text"), maxHamming = 3)
         .orderBy("id_a", "id_b")),
     // duplicate clustering: connected components over the near-dup pairs —
-    // cost-based front door (bounded min-label propagation probe, star-
-    // rewriting escalation for pathological diameters), canonical
-    // representative = min id per component. Pairs come from the
-    // MinHash+LSH path (exact-verified, banding-complete at this tau) —
-    // the candidate generator that survives 100 TB.
+    // routed front door (driver union-find up to the edge cap, star
+    // rewriting past it), canonical representative = min id per
+    // component. Pairs come from the MinHash+LSH path (exact-verified,
+    // banding-complete at this tau) — the candidate generator that
+    // survives 100 TB.
     "q_dedup_clusters" -> ((s, dir) => {
       val docs = graft.sources.Testdata.table(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, col("doc_id"), col("text"), n = 2, tau = 0.5)
@@ -3062,7 +3062,7 @@ object SparkEntry {
         .withColumnRenamed("id", "vec_id")),
     // MMR diversified rerank over the exact top-12 shortlist: greedy
     // λ·rel − (1−λ)·max-sim selection, candidate generation distributed,
-    // k−1 tiny argmax jobs over the checkpointed shortlist
+    // the greedy loop on the driver over the collected shortlist
     "q_knn_mmr" -> ((s, dir) => {
       val embs = Parquet.read(s, s"$dir/embeddings.parquet")
       val q = broadcast(embs.filter(col("vec_id") === 0)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoint.CheckpointOps
 import graft.operators.TextAnalysis.{fingerprint, FingerprintMod}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1049,139 +1049,53 @@ object Dedup {
   /** Connected components over a near-dup pair list: every id is labeled
     * with the smallest id reachable through pairs (`cluster_id`), turning
     * pairwise similarity into dedup GROUPS with a canonical representative
-    * (`id == cluster_id`) — the step production pipelines run between
-    * candidate pairs and the actual drop.
+    * (`id == cluster_id`, `keep`) — the step production pipelines run
+    * between candidate pairs and the actual drop.
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own and its neighbors' labels; converges in
-    * O(graph diameter) rounds (near-dup clusters are shallow — diameter is
-    * small in practice). Each round is one equi-join + one groupBy (both
-    * shuffle on id), with `localCheckpoint` truncating the growing lineage.
-    * Convergence is detected by the strictly-decreasing label sum, so no
-    * extra change-count join is needed.
+    * Routing by edge count, decided by one bounded collect
+    * ([[org.apache.spark.sql.graft.Bridge.collectUpTo]]): up to
+    * [[DriverEdgeCap]] edges the collected list IS the input of a driver
+    * union-find — exact on any graph shape, no iterative rounds, and the
+    * label table re-attaches to the corpus as a broadcast join. Past the
+    * cap the collect stops early and star rewriting
+    * ([[connectedComponentsStars]]) runs distributed, in O(log² n) rounds
+    * for any graph diameter. Both routes give the same labels.
     */
-  def connectedComponents(ids: DataFrame, pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-      .union(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
-      .persist()
-    try {
-      // Only nodes that appear in a pair can ever change label, so the
-      // propagation loop runs on the edge-participating vertex set alone —
-      // typically a small fraction of the corpus (dup clusters are rare) —
-      // and the full id table joins back once at the end.
-      //
-      // Round economics (round-4 tuning, measured at sf0.1): the first
-      // propagation is FUSED into the init (l₀ = min(v, Γ(v)) straight off
-      // the edge list — one groupBy instead of an init + a full round), and
-      // each round ends in a LAZY localCheckpoint that the convergence
-      // action materializes — lineage truncates every round with no extra
-      // job and no re-derived joins (see the in-loop note). Convergence
-      // costs exactly one action per round (the strictly-decreasing label
-      // sum).
-      var labels = edges.groupBy(col("s").as("id"))
-        .agg(least(min(col("d")), col("s")).as("comp"))
-        .cut()
-      var prevSum = Option.empty[Long]
-      var it = 0
-      var converged = false
-      while (it < maxIters && !converged) {
-        val prop = edges.join(labels, edges("s") === labels("id"))
-          .select(edges("d").as("id"), labels("comp"))
-        // LAZY localCheckpoint: the convergence action below materializes
-        // it, truncating lineage every round with NO extra job — an eager
-        // checkpoint ran one extra job per round, and checkpointing only
-        // every k-th round made each convergence action re-derive the
-        // un-checkpointed rounds from the last cut (duplicated joins)
-        labels = labels.union(prop)
-          .groupBy("id").agg(min("comp").as("comp"))
-          .cut(eager = false)
-        val sum = labels.agg(org.apache.spark.sql.functions.sum("comp")).head().getLong(0)
-        converged = prevSum.contains(sum)
-        prevSum = Some(sum)
-        it += 1
-      }
-      require(converged, s"connectedComponents did not converge in $maxIters rounds")
-      ids.select(col("id"))
-        .join(labels, Seq("id"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("cluster_id"))
-        .withColumn("keep", col("id") === col("cluster_id"))
-    } finally edges.unpersist()
-  }
-
-  /** Duplicate-clustering front door: cost-based routing between min-label
-    * propagation ([[connectedComponents]]) and star rewriting
-    * ([[connectedComponentsStars]]), mirroring [[jaccardPairsAuto]]'s
-    * probe-then-route shape. The decisive statistic for CC is the graph
-    * DIAMETER — and no bounded static probe can see it (a 3-clique and a
-    * 3-chain have identical degree profiles), so the probe here is the
-    * cheap algorithm itself under a round budget: propagation costs
-    * O(diameter) light rounds and near-dup graphs are shallow in practice
-    * (diameter 2–3 on this corpus), so the common case converges inside
-    * `probeRounds` and never pays the heavier star rounds; a pathological
-    * chained corpus pays `probeRounds` cheap rounds and escalates to the
-    * O(log² n) star algorithm that survives any diameter.
-    */
-  def connectedComponentsAuto(
-      ids: DataFrame,
-      pairs: DataFrame,
-      probeRounds: Int = 8,
-      maxIters: Int = 50): DataFrame =
-    connectedComponentsAutoRouted(ids, pairs, probeRounds, maxIters)._2
+  def connectedComponentsAuto(ids: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponentsAutoRouted(ids, pairs)._2
 
   /** Edge cap for the driver union-find route: 4M (long, long) edges is
-    * ~64 MB collected — the broadcast-hash-relation cost class, and the
-    * same bounded-driver-sync family as the capped merge tables elsewhere
-    * in this file. Near-dup EDGE lists are the candidate-pair OUTPUT of a
-    * screen, orders of magnitude smaller than the corpus, so at 100 TB
-    * most real dedup graphs still take this route; past the cap the
-    * distributed propagation/stars pair is unchanged.
+    * ~64 MB collected — the broadcast-hash-relation cost class. The bounded
+    * collect holds at most 2·cap + 1 rows on the driver before it gives up
+    * (the kept rows plus one partition's `cap + 1`), so the driver's memory
+    * stays bounded even when the edge list is far past the cap. Near-dup
+    * EDGE lists are the candidate-pair OUTPUT of a screen, orders of
+    * magnitude smaller than the corpus, so most real dedup graphs take this
+    * route; label propagation's vote graph shares the cap.
     */
-  val DriverEdgeCap = 4000000L
+  val DriverEdgeCap = 4000000
 
   /** [[connectedComponentsAuto]] with the chosen route exposed for tests
-    * ("driver" | "propagation" | "stars").
-    *
-    * Round-9 routing: the edge list is persisted and COUNTED first (one
-    * job that also pays the pair computation exactly once). At or below
-    * `driverEdgeCap` the component labels come from a driver union-find —
-    * exact on ANY graph shape, zero iterative rounds, and the label table
-    * re-attaches to the corpus as a BROADCAST join (no shuffle at all,
-    * where each propagation round was a join + groupBy + action). Above
-    * the cap, the bounded propagation probe runs and escalates to star
-    * rewriting exactly as before; its result is fully materialized by its
-    * own convergence actions, so a successful probe IS the answer.
+    * ("driver" | "stars"); `driverEdgeCap` forces a route.
     */
-  def connectedComponentsAutoRouted(
+  private[graft] def connectedComponentsAutoRouted(
       ids: DataFrame,
       pairs: DataFrame,
-      probeRounds: Int = 8,
-      maxIters: Int = 50,
-      driverEdgeCap: Long = DriverEdgeCap): (String, DataFrame) = {
+      driverEdgeCap: Int = DriverEdgeCap): (String, DataFrame) = {
     val p = pairs.select(col("id_a").cast("long").as("id_a"),
-      col("id_b").cast("long").as("id_b")).persist()
-    val nEdges = p.count()
-    if (nEdges <= driverEdgeCap) {
-      try ("driver", connectedComponentsDriver(ids, p))
-      finally p.unpersist()
-    } else {
-      try {
-        val out =
-          try ("propagation", connectedComponents(ids, p, maxIters = probeRounds))
-          catch {
-            case e: IllegalArgumentException if e.getMessage.contains("did not converge") =>
-              ("stars", connectedComponentsStars(ids, p, maxIters))
-          }
-        out
-      } finally p.unpersist() // labels are checkpointed; p is out of the lineage
+      col("id_b").cast("long").as("id_b"))
+    org.apache.spark.sql.graft.Bridge.collectUpTo(p, driverEdgeCap) match {
+      case Some(edges) => ("driver", connectedComponentsDriver(ids, edges))
+      case None => ("stars", connectedComponentsStars(ids, p))
     }
   }
 
-  /** Driver union-find (path halving) over a bounded, already-materialized
-    * edge list: every node labeled with the min id of its component —
-    * bit-identical to the distributed fixpoint on any graph shape. The
-    * label table returns as a broadcast-joined local frame.
+  /** Driver union-find (path halving) over a collected edge list: every
+    * node labeled with the min id of its component — identical to the
+    * distributed fixpoint on any graph shape. The label table returns as a
+    * broadcast-joined local frame.
     */
-  private def connectedComponentsDriver(ids: DataFrame, p: DataFrame): DataFrame = {
+  private def connectedComponentsDriver(ids: DataFrame, edges: Array[Row]): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
@@ -1194,7 +1108,7 @@ object Dedup {
       }
       x
     }
-    p.collect().foreach { r =>
+    edges.foreach { r =>
       val a = r.getLong(0); val b = r.getLong(1)
       parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
       val ra = find(a); val rb = find(b)
@@ -1225,13 +1139,10 @@ object Dedup {
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR edge
     * rewriting (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — O(log² n) rounds on ANY graph shape, versus
-    * O(diameter) for [[connectedComponents]]'s label propagation. Near-dup
-    * clusters are shallow in practice (diameter 2–3, where propagation's
-    * lighter rounds win — measured on this corpus), but a pathological
-    * corpus (chained near-dups: doc₁≈doc₂≈…≈docₙ) makes diameter O(n);
-    * this is the variant that survives it, so both are exposed and
-    * round-economics decides the wiring.
+    * Beyond", SoCC'14) — O(log² n) rounds on ANY graph shape, where
+    * min-label propagation needs O(diameter): a chained corpus (chained
+    * near-dups: doc₁≈doc₂≈…≈docₙ) makes the diameter O(n). The distributed
+    * route of [[connectedComponentsAuto]] past [[DriverEdgeCap]].
     *
     *  - large-star: every node u links its LARGER neighbors to
     *    m(u) = min(Γ(u) ∪ u);

@@ -435,18 +435,18 @@ object Search {
     * `rounds` synchronous clamped-seed plurality votes over it. Input `t`
     * must carry (id, lbl_true, seed).
     *
-    * Round-10 cost routing (the round-9 connected-components union-find
-    * lesson applied here, per the round-9 verdict): the vote graph is the
-    * edge-list OUTPUT of a k-NN build — ≤ 2·n·k rows, orders of magnitude
-    * smaller than the corpus — so at or below [[Dedup.DriverEdgeCap]]
-    * edges the whole synchronous fixpoint runs on the driver over one
-    * collect (exact integer plurality votes, same count-desc/label-asc
-    * tie-break, Spark's own collected label values) and the result
-    * re-attaches as a BROADCAST join — zero per-round shuffles where each
-    * round was a join + groupBy + GroupTopK + join. Label types whose asc
-    * order the driver replicates exactly (integral + UTF-8 strings) route;
-    * anything else, and anything past the cap, takes the distributed loop
-    * unchanged.
+    * Routing: the vote graph is the edge-list OUTPUT of a k-NN build —
+    * ≤ 2·n·k rows, orders of magnitude smaller than the corpus — so one
+    * bounded collect ([[org.apache.spark.sql.graft.Bridge.collectUpTo]] at
+    * [[Dedup.DriverEdgeCap]] edges) decides: when the symmetrized list
+    * fits, the whole synchronous fixpoint runs on the driver over the
+    * collected rows (exact integer plurality votes, same
+    * count-desc/label-asc tie-break, Spark's own collected label values)
+    * and the result re-attaches as a BROADCAST join — zero per-round
+    * shuffles where each round was a join + groupBy + GroupTopK + join.
+    * Label types whose asc order the driver replicates exactly (integral +
+    * UTF-8 strings) route; anything else, and anything past the cap, takes
+    * the distributed loop.
     */
   private def propagate(t: DataFrame, dir: DataFrame, rounds: Int): DataFrame =
     propagateRouted(t, dir, rounds)._2
@@ -456,24 +456,32 @@ object Search {
     */
   private[graft] def propagateRouted(t: DataFrame, dir: DataFrame,
       rounds: Int,
-      driverEdgeCap: Long = Dedup.DriverEdgeCap): (String, DataFrame) = {
+      driverEdgeCap: Int = Dedup.DriverEdgeCap): (String, DataFrame) = {
     val sym = dir
       .unionByName(dir.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    val lblDriverComparable = t.schema("lbl_true").dataType match {
-      case IntegerType | LongType | ShortType | ByteType | StringType => true
-      case _ => false
+    // the driver's label asc order, for the label types it replicates exactly
+    val lblLt: Option[(Any, Any) => Boolean] = t.schema("lbl_true").dataType match {
+      case IntegerType => Some((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int])
+      case LongType    => Some((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
+      case ShortType   => Some((a, b) => a.asInstanceOf[Short] < b.asInstanceOf[Short])
+      case ByteType    => Some((a, b) => a.asInstanceOf[Byte] < b.asInstanceOf[Byte])
+      case StringType  => Some((a, b) => utf8Lt(a.asInstanceOf[String], b.asInstanceOf[String]))
+      case _ => None
     }
-    if (lblDriverComparable) {
-      val p = sym.persist()
-      val nEdges = p.count()
-      if (nEdges <= driverEdgeCap) {
-        try return ("driver", propagateDriver(t, p, rounds))
-        finally p.unpersist()
-      }
-      p.unpersist() // past the cap: rebuild lazily for the checkpointed loop
-    }
+    val driver = for (lt <- lblLt;
+        edges <- org.apache.spark.sql.graft.Bridge.collectUpTo(sym, driverEdgeCap))
+      yield propagateDriver(t, edges, rounds, lt)
+    driver.map(("driver", _))
+      .getOrElse(("distributed", propagateDistributed(t, sym, rounds)))
+  }
+
+  /** The distributed fixpoint: `rounds` synchronous clamped-seed plurality
+    * votes over the symmetrized edge list `sym`, checkpointed per round.
+    */
+  private def propagateDistributed(t: DataFrame, sym: DataFrame,
+      rounds: Int): DataFrame = {
     val edges = sym.cut(eager = false)
     var state = t.select(col("id"),
       when(col("seed"), col("lbl_true")).as("lbl"),
@@ -492,29 +500,22 @@ object Search {
           col("seed"), col("lbl_true"))
         .cut(eager = false)
     }
-    ("distributed", state.select(col("id"), col("seed").cast("int").as("seed"),
+    state.select(col("id"), col("seed").cast("int").as("seed"),
         col("lbl").as("label_pred"),
         when(col("lbl").isNotNull,
           (col("lbl") === col("lbl_true")).cast("int")).as("correct"))
-      .orderBy("id"))
+      .orderBy("id")
   }
 
-  /** Spark's string asc = unsigned UTF-8 byte order (shared by the MMR
-    * driver loop and the propagation driver route).
+  /** Spark's string asc = unsigned UTF-8 byte order (Java's UTF-16 order
+    * diverges for non-BMP chars): the driver routes' tie-break (MMR,
+    * label propagation, the in-memory BPE trainer).
     */
-  private[operators] def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c1 = x(i) & 0xff; val c2 = y(i) & 0xff
-      if (c1 != c2) return c1 < c2
-      i += 1
-    }
-    x.length < y.length
-  }
+  private[operators] def utf8Lt(a: String, b: String): Boolean =
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
 
-  /** Driver fixpoint over a bounded, already-materialized edge list:
+  /** Driver fixpoint over a collected edge list:
     * `rounds` synchronous clamped-seed plurality votes, bit-identical to
     * the distributed loop — votes are integer counts, the winner is
     * (count desc, label asc) with asc replicated per label type, and every
@@ -525,18 +526,9 @@ object Search {
     * else is seed-clamped or null by construction and stays distributed in
     * the final broadcast re-attach.
     */
-  private def propagateDriver(t: DataFrame, edges: DataFrame,
-      rounds: Int): DataFrame = {
+  private def propagateDriver(t: DataFrame, eRows: Array[org.apache.spark.sql.Row],
+      rounds: Int, lblLt: (Any, Any) => Boolean): DataFrame = {
     val spark = t.sparkSession
-    val eRows = edges.collect()
-    def lblLt(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.lang.Integer, y: java.lang.Integer) => x.intValue < y.intValue
-      case (x: java.lang.Long, y: java.lang.Long)       => x.longValue < y.longValue
-      case (x: java.lang.Short, y: java.lang.Short)     => x.shortValue < y.shortValue
-      case (x: java.lang.Byte, y: java.lang.Byte)       => x.byteValue < y.byteValue
-      case (x: String, y: String)                       => utf8Lt(x, y)
-      case _ => throw new IllegalStateException(s"unroutable label type: $a")
-    }
     // adjacency over edge-incident nodes (ids are Spark's collected values;
     // equality/hash are the JVM's, matching the equi-join semantics for the
     // integral/string types this route admits)
@@ -658,121 +650,128 @@ object Search {
     * diversified re-ranking: greedily select `k` of the candidates, each
     * step maximizing `λ·rel − (1−λ)·max_{s∈selected} cos(c, s)` — the
     * standard redundancy-removal pass over a retrieval shortlist (near-dup
-    * hits that q_knn happily returns adjacent get suppressed).
+    * hits that q_knn happily returns adjacent get suppressed). Ties break
+    * on id ascending at every step; rank-1 is pure relevance with
+    * `mmr = λ·rel`.
     *
     * The DISTRIBUTED part is candidate generation (a bounded top-N
-    * retrieval upstream); the greedy loop runs k−1 tiny jobs over the
-    * checkpointed candidate table and its N² pairwise-cosine table — per
-    * step only the argmax row crosses to the driver (the selection ids are
-    * the loop state, like [[IvfSearch.lloydStep]]'s centroid sync). Ties
-    * break on id ascending at every step; rank-1 is pure relevance with
-    * `mmr = λ·rel`.
+    * retrieval upstream). The shortlist is retrieval-bounded by contract
+    * (tens to thousands of rows), so one bounded collect
+    * ([[org.apache.spark.sql.graft.Bridge.collectUpTo]], 10,000 rows)
+    * decides: when it fits, the whole greedy loop runs on the driver over
+    * the collected rows. Past the cap the loop runs distributed: k−1 small
+    * jobs over the checkpointed candidate table and its N² pairwise-cosine
+    * table, with only each step's argmax row crossing to the driver (the
+    * selection ids are the loop state, like [[IvfSearch.lloydStep]]'s
+    * centroid sync).
     *
     * Output: `(rank, id, rel, mmr)`, one row per selection, rank 1..k.
     */
   def mmrRerank(cands: DataFrame, id: Column, rel: Column, vec: Column,
-      k: Int, lambda: Double = 0.75,
-      driverShortlistCap: Int = 10000): DataFrame = {
+      k: Int, lambda: Double = 0.75): DataFrame =
+    mmrRerankRouted(cands, id, rel, vec, k, lambda)._2
+
+  /** [[mmrRerank]] with the chosen route exposed for tests
+    * ("driver" | "distributed"); `shortlistCap` forces a route.
+    */
+  private[graft] def mmrRerankRouted(cands: DataFrame, id: Column, rel: Column,
+      vec: Column, k: Int, lambda: Double,
+      shortlistCap: Int = 10000): (String, DataFrame) = {
     require(k >= 1 && lambda > 0 && lambda <= 1)
     val spark = cands.sparkSession
     val c = cands.select(id.cast("string").as("id"), rel.as("rel"), vec.as("v"))
       .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-      .cut(eager = false)
+    // Duplicate candidate ids (already undefined-order distributedly) and
+    // null vectors/norms stay on the distributed loop: its kernels tolerate
+    // a null v (null sim — the row just never wins), where the driver's
+    // getSeq would NPE.
+    val driverRows = org.apache.spark.sql.graft.Bridge.collectUpTo(c, shortlistCap)
+      .filter { rows =>
+        !rows.exists(r => r.isNullAt(2) || r.isNullAt(3)) &&
+          rows.map(_.getString(0)).distinct.length == rows.length
+      }
+    val (route, picks) = driverRows match {
+      case Some(rows) => ("driver", mmrDriver(rows, k, lambda))
+      case None => ("distributed", mmrDistributed(c.cut(eager = false), k, lambda))
+    }
+    import spark.implicits._
+    (route, picks.toDF("rank", "id", "rel", "mmr")
+      .select(col("rank"), col("id"), round(col("rel"), 6).as("rel"),
+        round(col("mmr"), 6).as("mmr")))
+  }
+
+  /** The greedy MMR loop over a collected shortlist `(id, rel, v, nrm)`
+    * with distinct ids and no null vector. Arithmetic replicates the
+    * kernels bit-for-bit (same left-to-right double dot, same Math.max NaN
+    * propagation, same UTF-8-byte id tie-break), so the selection equals
+    * the distributed loop's.
+    */
+  private def mmrDriver(rows: Array[org.apache.spark.sql.Row], k: Int,
+      lambda: Double): Vector[(Int, String, Double, Double)] = {
+    val ids = rows.map(_.getString(0))
+    val rels = rows.map(_.getDouble(1))
+    val vs = rows.map(_.getSeq[Any](2).map {
+      case f: java.lang.Float => f.toDouble
+      case d: java.lang.Double => d.doubleValue
+      case n: java.lang.Number => n.doubleValue
+    }.toArray)
+    val nrms = rows.map(_.getDouble(3))
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      val n = math.min(a.length, b.length)
+      var s = 0.0; var i = 0
+      while (i < n) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    val n = ids.length
+    if (n == 0) return Vector.empty
+    val taken = new Array[Boolean](n)
+    var best = 0
+    for (i <- 1 until n)
+      if (java.lang.Double.compare(rels(i), rels(best)) > 0 ||
+        (java.lang.Double.compare(rels(i), rels(best)) == 0 &&
+          utf8Lt(ids(i), ids(best)))) best = i
+    var picks = Vector((1, ids(best), rels(best), lambda * rels(best)))
+    taken(best) = true
+    val maxsim = Array.tabulate(n)(i =>
+      if (i == best) Double.NaN
+      else dot(vs(i), vs(best)) / (nrms(i) * nrms(best)))
+    for (r <- 2 to math.min(k, n)) {
+      var sel = -1; var selMmr = 0.0
+      for (i <- 0 until n) if (!taken(i)) {
+        val m = lambda * rels(i) - (1.0 - lambda) * maxsim(i)
+        // Double.compare for the tie too: m == selMmr is false for a
+        // NaN pair, which let the first-seen NaN candidate win where
+        // the distributed orderBy treats NaNs as equal and tie-breaks
+        // on id asc
+        if (sel < 0 || java.lang.Double.compare(m, selMmr) > 0 ||
+          (java.lang.Double.compare(m, selMmr) == 0 &&
+            utf8Lt(ids(i), ids(sel)))) { sel = i; selMmr = m }
+      }
+      picks :+= ((r, ids(sel), rels(sel), selMmr))
+      taken(sel) = true
+      for (i <- 0 until n) if (!taken(i))
+        maxsim(i) = math.max(maxsim(i),
+          dot(vs(i), vs(sel)) / (nrms(i) * nrms(sel)))
+    }
+    picks
+  }
+
+  /** The greedy MMR loop as Spark jobs over the checkpointed shortlist `c`
+    * and its pairwise-cosine table; stops at `k` picks or when no
+    * candidate is left.
+    */
+  private def mmrDistributed(c: DataFrame, k: Int,
+      lambda: Double): Vector[(Int, String, Double, Double)] = {
     val sims = c.as("a").join(c.as("b"), col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         (VF.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
       .cut(eager = false)
-    val nCands = c.count().toInt
-    if (nCands == 0) {
-      // empty shortlist (an upstream filter ate every candidate) returns an
-      // empty result with the contract schema, not a head() crash
-      import spark.implicits._
-      return Vector.empty[(Int, String, Double, Double)]
-        .toDF("rank", "id", "rel", "mmr")
-    }
-    // Round-9 route: the shortlist is retrieval-bounded by contract (tens
-    // to thousands of rows), so below a driver-safe cap the whole greedy
-    // loop runs on the driver over ONE collect — k+1 sequential Spark jobs
-    // become one. Arithmetic replicates the kernels bit-for-bit (same
-    // left-to-right double dot, same Math.max NaN propagation, same
-    // UTF-8-byte id tie-break), so the selection is identical; duplicate
-    // candidate ids (already undefined-order distributedly) fall through
-    // to the distributed loop untouched.
-    if (nCands <= driverShortlistCap) {
-      val rows = c.collect()
-      val ids = rows.map(_.getString(0))
-      // null vectors/norms fall through to the distributed loop (like the
-      // duplicate-id check): the distributed kernels tolerate a null v
-      // (null sim — the row just never wins), where getSeq below would NPE
-      val anyNull = rows.exists(r => r.isNullAt(2) || r.isNullAt(3))
-      if (!anyNull && ids.distinct.length == ids.length) {
-        val rels = rows.map(_.getDouble(1))
-        val vs = rows.map(_.getSeq[Any](2).map {
-          case f: java.lang.Float => f.toDouble
-          case d: java.lang.Double => d.doubleValue
-          case n: java.lang.Number => n.doubleValue
-        }.toArray)
-        val nrms = rows.map(_.getDouble(3))
-        def dot(a: Array[Double], b: Array[Double]): Double = {
-          val n = math.min(a.length, b.length)
-          var s = 0.0; var i = 0
-          while (i < n) { s += a(i) * b(i); i += 1 }
-          s
-        }
-        // Spark's string asc = unsigned UTF-8 byte order
-        def idLt(a: String, b: String): Boolean = {
-          val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-          val n = math.min(x.length, y.length)
-          var i = 0
-          while (i < n) {
-            val c1 = x(i) & 0xff; val c2 = y(i) & 0xff
-            if (c1 != c2) return c1 < c2
-            i += 1
-          }
-          x.length < y.length
-        }
-        val n = ids.length
-        val taken = new Array[Boolean](n)
-        var best = 0
-        for (i <- 1 until n)
-          if (java.lang.Double.compare(rels(i), rels(best)) > 0 ||
-            (java.lang.Double.compare(rels(i), rels(best)) == 0 &&
-              idLt(ids(i), ids(best)))) best = i
-        var picksD = Vector((1, ids(best), rels(best), lambda * rels(best)))
-        taken(best) = true
-        val maxsim = Array.tabulate(n)(i =>
-          if (i == best) Double.NaN
-          else dot(vs(i), vs(best)) / (nrms(i) * nrms(best)))
-        for (r <- 2 to math.min(k, n)) {
-          var sel = -1; var selMmr = 0.0
-          for (i <- 0 until n) if (!taken(i)) {
-            val m = lambda * rels(i) - (1.0 - lambda) * maxsim(i)
-            // Double.compare for the tie too: m == selMmr is false for a
-            // NaN pair, which let the first-seen NaN candidate win where
-            // the distributed orderBy treats NaNs as equal and tie-breaks
-            // on id asc
-            if (sel < 0 || java.lang.Double.compare(m, selMmr) > 0 ||
-              (java.lang.Double.compare(m, selMmr) == 0 &&
-                idLt(ids(i), ids(sel)))) { sel = i; selMmr = m }
-          }
-          picksD :+= ((r, ids(sel), rels(sel), selMmr))
-          taken(sel) = true
-          for (i <- 0 until n) if (!taken(i))
-            maxsim(i) = math.max(maxsim(i),
-              dot(vs(i), vs(sel)) / (nrms(i) * nrms(sel)))
-        }
-        import spark.implicits._
-        return picksD.toDF("rank", "id", "rel", "mmr")
-          .select(col("rank"), col("id"), round(col("rel"), 6).as("rel"),
-            round(col("mmr"), 6).as("mmr"))
-      }
-    }
-    val first = c.orderBy(col("rel").desc, col("id").asc)
-      .select(col("id"), col("rel")).head()
-    var picks = Vector((1, first.getString(0), first.getDouble(1),
-      lambda * first.getDouble(1)))
-    var sel = Vector(first.getString(0))
-    for (r <- 2 to math.min(k, nCands)) {
+    var picks = c.orderBy(col("rel").desc, col("id").asc)
+      .select(col("id"), col("rel")).head(1).toVector
+      .map(r => (1, r.getString(0), r.getDouble(1), lambda * r.getDouble(1)))
+    var exhausted = picks.isEmpty
+    while (!exhausted && picks.length < k) {
+      val sel = picks.map(_._2)
       val next = c.filter(!col("id").isin(sel: _*))
         .join(sims.filter(col("id_b").isin(sel: _*))
           .groupBy("id_a").agg(max(col("sim")).as("maxsim")),
@@ -780,14 +779,12 @@ object Search {
         .withColumn("mmr",
           lit(lambda) * col("rel") - lit(1.0 - lambda) * col("maxsim"))
         .orderBy(col("mmr").desc, col("id").asc)
-        .select(col("id"), col("rel"), col("mmr")).head()
-      picks :+= ((r, next.getString(0), next.getDouble(1), next.getDouble(2)))
-      sel :+= next.getString(0)
+        .select(col("id"), col("rel"), col("mmr")).head(1)
+      exhausted = next.isEmpty
+      for (r <- next)
+        picks :+= ((picks.length + 1, r.getString(0), r.getDouble(1), r.getDouble(2)))
     }
-    import spark.implicits._
-    picks.toDF("rank", "id", "rel", "mmr")
-      .select(col("rank"), col("id"), round(col("rel"), 6).as("rel"),
-        round(col("mmr"), 6).as("mmr"))
+    picks
   }
 }
 

@@ -590,27 +590,56 @@ object TextAnalysis {
     * table `(step, pair, cnt)` — the vocabulary-induction artifact a
     * tokenizer trainer ships.
     *
-    * Scale shape: the corpus is read ONCE (tokenize + word-count); every
-    * merge round runs on the VOCABULARY-sized word-state table (exactly how
-    * production BPE trainers scale — they train on word counts, never raw
-    * text), checkpointed per round so the driver loop's lineage stays flat.
-    * The greedy rewrite is a codegen'd `aggregate` fold: merging pair (x,y)
-    * appends each symbol unless the previous appended symbol is `x` and the
-    * current is `y` — equivalent to the classic non-overlapping
-    * left-to-right scan because a merged symbol `x||y` can never equal `x`.
+    * Scale shape: the corpus is read ONCE into frequency-weighted word
+    * counts (exactly how production BPE trainers scale — they train on word
+    * counts, never raw text). One bounded collect
+    * ([[org.apache.spark.sql.graft.Bridge.collectUpTo]], 2^20^ word types)
+    * decides the route: when the whole vocabulary fits, the merge loop runs
+    * in memory ([[trainMerges]]) — exact, since no word is dropped. Past
+    * the cap every merge round runs as Spark jobs on the distributed
+    * word-state table, checkpointed per round so the driver loop's lineage
+    * stays flat; the greedy rewrite there is a codegen'd `aggregate` fold
+    * ([[mergeFold]]). Both routes give the same table.
     */
-  def bpeMerges(docs: DataFrame, text: Column, nMerges: Int): DataFrame = {
+  def bpeMerges(docs: DataFrame, text: Column, nMerges: Int): DataFrame =
+    bpeMergesRouted(docs, text, nMerges)._2
+
+  /** [[bpeMerges]] with the chosen route exposed for tests
+    * ("driver" | "distributed"); `vocabCap` forces a route.
+    */
+  private[graft] def bpeMergesRouted(docs: DataFrame, text: Column, nMerges: Int,
+      vocabCap: Int = 1 << 20): (String, DataFrame) = {
     require(nMerges >= 1)
     val spark = docs.sparkSession
+    val words = wordCounts(docs, text)
+    val (route, merges) = org.apache.spark.sql.graft.Bridge.collectUpTo(words, vocabCap) match {
+      case Some(vocab) => ("driver", trainMerges(vocab, nMerges))
+      case None => ("distributed", trainMergesDistributed(words, nMerges))
+    }
+    import spark.implicits._
+    (route, merges.toDF("step", "pair", "cnt"))
+  }
+
+  /** Frequency-weighted non-empty whitespace words `(w, n_w)`: the one
+    * corpus pass both BPE trainers start from.
+    */
+  private def wordCounts(docs: DataFrame, text: Column): DataFrame =
+    docs.select(explode(wsTokens(text)).as("w"))
+      .filter(col("w") =!= "")
+      .groupBy("w").agg(count(lit(1)).as("n_w"))
+
+  /** The distributed BPE merge loop over the word counts `(w, n_w)`: one
+    * pair-count job per round on the vocabulary-sized word-state table.
+    */
+  private def trainMergesDistributed(words: DataFrame,
+      nMerges: Int): Vector[(Int, String, Long)] = {
     // word states: space-joined character symbols, frequency-weighted.
     // The split is per CODEPOINT (regex "." matches one code point): the
     // earlier between-chars lookahead split cut words at UTF-16 unit
     // boundaries, and a lone surrogate half does not survive the
     // String→UTF8String round trip — every non-BMP char (emoji, rare CJK)
     // was silently mangled to '?' before the first merge round
-    var states = docs.select(explode(wsTokens(text)).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n_w"))
+    var states = words
       .select(concat_ws(" ",
         regexp_extract_all(col("w"), lit("(?s)."), lit(0))).as("state"), col("n_w"))
       .cut(eager = false)
@@ -635,8 +664,7 @@ object TextAnalysis {
           .cut(eager = false)
       }
     }
-    import spark.implicits._
-    merges.toDF("step", "pair", "cnt")
+    merges
   }
 
   /** One greedy left-to-right rewrite of a space-joined symbol state for
@@ -675,17 +703,15 @@ object TextAnalysis {
   /** BPE merge induction collected to the driver — the PRODUCTION trainer
     * shape (how sentencepiece/HF tokenizer trainers actually run: one
     * corpus pass to frequency-weighted word counts, then an in-memory
-    * merge loop over that vocabulary-sized table). [[bpeMerges]] keeps the
-    * word-state table distributed and pays a driver-synced Spark job per
-    * round — honest at 4 rounds, 256+ driver round-trips at production
-    * depth. Here the ONE distributed pass reduces the corpus to `(word,
-    * count)` (vocabulary-sized — the corpus itself never moves), the top
-    * `maxVocab` types come back to the driver (count desc, word asc
-    * cutoff, so the cap is deterministic), and the merge loop runs
-    * in-memory with incremental pair-count maintenance: each round only
-    * touches the words that actually contain the merged pair. Same merge
-    * semantics and (count desc, pair asc) tie-break as [[bpeMerges]] —
-    * TextAnalysisSpec pins table equality between the two trainers.
+    * merge loop over that vocabulary-sized table). The ONE distributed
+    * pass reduces the corpus to `(word, count)` (vocabulary-sized — the
+    * corpus itself never moves), the top `maxVocab` types come back to the
+    * driver (count desc, word asc cutoff, so the cap is deterministic), and
+    * [[trainMerges]] runs the merge loop. Where [[bpeMerges]] takes every
+    * word or none, this trainer always runs in memory and truncates: same
+    * merge semantics and (count desc, pair asc) tie-break, and the same
+    * table whenever the vocabulary fits in `maxVocab` (TextAnalysisSpec
+    * pins the equality).
     *
     * At 100 TB the word-count pass is the same one-shuffle aggregation
     * every vocabulary operator here runs; the collect is bounded by
@@ -696,14 +722,24 @@ object TextAnalysis {
       maxVocab: Int = 1 << 20): DataFrame = {
     require(nMerges >= 1 && maxVocab >= 1)
     val spark = docs.sparkSession
-    val vocabRows = docs.select(explode(wsTokens(text)).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n_w"))
+    val vocabRows = wordCounts(docs, text)
       .orderBy(desc("n_w"), asc("w")) // TakeOrdered, never a full sort
       .limit(maxVocab)
       .collect()
+    import spark.implicits._
+    trainMerges(vocabRows, nMerges).toDF("step", "pair", "cnt")
+  }
+
+  /** The in-memory BPE merge loop over collected word counts `(w, n_w)`,
+    * with incremental pair-count maintenance: each round only touches the
+    * words that actually contain the merged pair. Returns `(step, pair,
+    * cnt)` rows in step order.
+    */
+  private def trainMerges(vocabRows: Array[org.apache.spark.sql.Row],
+      nMerges: Int): Vector[(Int, String, Long)] = {
     // word states as codepoint-symbol arrays (the same per-CODEPOINT split
-    // as bpeMerges: a UTF-16-unit split would mangle non-BMP chars)
+    // as the distributed loop: a UTF-16-unit split would mangle non-BMP
+    // chars)
     val states = vocabRows.map { r =>
       val cps = r.getString(0).codePoints().toArray
       cps.map(cp => new String(Character.toChars(cp)))
@@ -731,15 +767,12 @@ object TextAnalysis {
     var merges = Vector.empty[(Int, String, Long)]
     var m = 1
     while (m <= nMerges && pairCount.nonEmpty) {
-      // argmax with the bpeMerges tie-break: count desc, pair asc — in
+      // argmax with the distributed tie-break: count desc, pair asc — in
       // UTF-8 BYTE order (what Spark's UTF8String sort and the DuckDB
       // oracle both use; Java's UTF-16 order diverges for non-BMP pairs)
-      def utf8Less(a: String, b: String): Boolean =
-        org.apache.spark.unsafe.types.UTF8String.fromString(a)
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
       var bestPr: String = null; var bestC = -1L
       pairCount.foreach { case (pr, c) =>
-        if (c > bestC || (c == bestC && utf8Less(pr, bestPr))) {
+        if (c > bestC || (c == bestC && Search.utf8Lt(pr, bestPr))) {
           bestPr = pr; bestC = c
         }
       }
@@ -755,8 +788,7 @@ object TextAnalysis {
       }
       m += 1
     }
-    import spark.implicits._
-    merges.toDF("step", "pair", "cnt")
+    merges
   }
 
   /** BPE ENCODE — apply a learned merge table (rank-ordered `pair`

@@ -37,16 +37,18 @@ final case class VectorStore(df: DataFrame) {
   def count(): Long = df.count()
 
   /** Point lookup (reference `get_vector`, vector_database.py:49-55).
-    * Raises if absent, with the reference's message. One job: each
-    * partition stops at its first match ([[Bridge.firstPerPartition]]), so
-    * the driver receives at most one row per partition. The id reaches
-    * generated code as a reference, so a warm process compiles nothing for
-    * a new id.
+    * Raises if absent, with the reference's message, and if the id is
+    * stored more than once. One job ([[Bridge.collectUpTo]] with a cap of
+    * one row), so the driver receives at most two rows per partition. The
+    * id reaches generated code as a reference, so a warm process compiles
+    * nothing for a new id.
     */
   def getVector(uniqueId: String): Array[Float] =
-    Bridge.firstPerPartition(df.filter(col("id") === lit(uniqueId)).select("embedding"))
-      .headOption.map(_.getArray(0).toFloatArray())
-      .getOrElse(throw new NoSuchElementException("Unique ID does not exist."))
+    Bridge.collectUpTo(df.filter(col("id") === lit(uniqueId)).select("embedding"), 1) match {
+      case Some(Array(r)) => r.getSeq[Float](0).toArray
+      case Some(_) => throw new NoSuchElementException("Unique ID does not exist.")
+      case None => throw new IllegalStateException(s"Unique ID $uniqueId is stored more than once.")
+    }
 
   /** Single insert (reference `store_embedding`, vector_database.py:57-81).
     * Duplicate id ⇒ IllegalArgumentException("Unique ID already exists.").
@@ -79,9 +81,9 @@ final case class VectorStore(df: DataFrame) {
     // Existence check: one IN filter over the store instead of |batch| point
     // lookups, in one job (a broadcast semi-join would run a second job to
     // broadcast the batch). Spark passes the id set to generated code as a
-    // reference.
+    // reference. A cap of zero rows: any stored id overflows it (`None`).
     val dups = df.filter(col("id").isin(ids: _*)).select("id")
-    if (Bridge.firstPerPartition(dups).nonEmpty) throw new IllegalArgumentException("Unique ID already exists.")
+    if (Bridge.collectUpTo(dups, 0).isEmpty) throw new IllegalArgumentException("Unique ID already exists.")
     VectorStore(df.unionByName(newRows))
   }
 

@@ -30,6 +30,25 @@ class DedupSpec extends SparkSpec {
     } yield (a, b, j)).toSet
   }
 
+  /** Independent connected-components reference: BFS over the pair list in
+    * plain Scala; every id maps to (its component's min id, is that min).
+    */
+  private def bfsComponents(ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, (Long, Boolean)] = {
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    for (s <- ids if !label.contains(s)) {
+      val seen = scala.collection.mutable.Set(s)
+      val queue = scala.collection.mutable.Queue(s)
+      while (queue.nonEmpty)
+        adj.getOrElse(queue.dequeue(), Nil).foreach(v => if (seen.add(v)) queue.enqueue(v))
+      seen.foreach(label(_) = seen.min)
+    }
+    ids.map(i => i -> (label(i), label(i) == i)).toMap
+  }
+
+  private def ccMap(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Boolean)] =
+    df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+
   test("shingles: word bigrams, distinct, short-doc guard") {
     import testImplicits._
     val out = Seq("a b c d", "a b a b", "solo", "").toDF("text")
@@ -230,11 +249,11 @@ class DedupSpec extends SparkSpec {
     import testImplicits._
     val ids = (1L to 7L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, pairs).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(got == Map(
+    val expected = Map(
       1L -> (1L, true), 2L -> (1L, false), 3L -> (1L, false),
-      4L -> (4L, true), 5L -> (5L, true), 6L -> (5L, false), 7L -> (7L, true)))
+      4L -> (4L, true), 5L -> (5L, true), 6L -> (5L, false), 7L -> (7L, true))
+    assert(ccMap(Dedup.connectedComponentsAuto(ids, pairs)) == expected)
+    assert(ccMap(Dedup.connectedComponentsStars(ids, pairs)) == expected)
   }
 
   test("connectedComponents: converges on a path graph deeper than one hop") {
@@ -242,70 +261,51 @@ class DedupSpec extends SparkSpec {
     val n = 12L
     val ids = (1L to n).toDF("id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, pairs).collect()
-    assert(got.forall(_.getLong(1) == 1L))
-    assert(got.count(_.getBoolean(2)) == 1)
+    Seq(Dedup.connectedComponentsAuto(ids, pairs), Dedup.connectedComponentsStars(ids, pairs))
+      .foreach { cc =>
+        val got = cc.collect()
+        assert(got.forall(_.getLong(1) == 1L))
+        assert(got.count(_.getBoolean(2)) == 1)
+      }
   }
 
-  test("connectedComponentsStars: equals label propagation on mixed clusters") {
+  test("connectedComponentsStars: equals a brute-force BFS on mixed clusters") {
     import testImplicits._
-    val ids = (1L to 9L).toDF("id")
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 5L)).toDF("id_a", "id_b")
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(asMap(Dedup.connectedComponentsStars(ids, pairs)) ==
-      asMap(Dedup.connectedComponents(ids, pairs)))
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 5L))
+    assert(ccMap(Dedup.connectedComponentsStars((1L to 9L).toDF("id"), pairs.toDF("id_a", "id_b"))) ==
+      bfsComponents(1L to 9L, pairs))
   }
 
-  test("connectedComponentsStars: deep path graph converges in O(log) rounds " +
-      "where bounded label propagation cannot") {
+  test("connectedComponentsStars: a 64-node chain converges within the default round budget") {
     import testImplicits._
-    // a 64-node chain has diameter 63: min-label propagation needs ~63
-    // rounds (more than its default budget); the alternating star rewrite
-    // collapses it within its default budget
+    // diameter 63: min-label propagation would need ~63 rounds; the
+    // alternating star rewrite collapses it in O(log² n)
     val n = 64L
-    val ids = (1L to n).toDF("id")
-    val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(ids, pairs, maxIters = 20).collect()
+    val pairs = (1L until n).map(i => (i, i + 1))
+    val got = ccMap(Dedup.connectedComponentsStars((1L to n).toDF("id"), pairs.toDF("id_a", "id_b")))
+    assert(got == bfsComponents(1L to n, pairs))
+    assert(got.values.count(_._2) == 1)
+  }
+
+  test("CC front door: edge lists within the cap take the driver union-find; past it, stars") {
+    import testImplicits._
+    // shallow mixed clusters and a 64-node chain (diameter 63): both routes
+    // equal the BFS reference on either shape; a cap of exactly the edge
+    // count still fits, one less overflows
+    val mixed = (1L to 9L, Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 5L)))
+    val chain = (1L to 64L, (1L until 64L).map(i => (i, i + 1)))
+    Seq(mixed, chain).foreach { case (idSeq, pairSeq) =>
+      val ids = idSeq.toDF("id")
+      val pairs = pairSeq.toDF("id_a", "id_b")
+      val expected = bfsComponents(idSeq, pairSeq)
+      Seq(None -> "driver", Some(pairSeq.size) -> "driver",
+          Some(pairSeq.size - 1) -> "stars", Some(0) -> "stars").foreach { case (cap, route) =>
+        val (got, cc) = cap.fold(Dedup.connectedComponentsAutoRouted(ids, pairs))(
+          Dedup.connectedComponentsAutoRouted(ids, pairs, _))
+        assert(got == route, s"cap $cap")
+        assert(ccMap(cc) == expected, s"cap $cap")
+      }
     }
-    val got = Dedup.connectedComponentsStars(ids, pairs).collect()
-    assert(got.forall(_.getLong(1) == 1L))
-    assert(got.count(_.getBoolean(2)) == 1)
-  }
-
-  test("CC front door: small edge lists take the driver union-find; past the cap propagation probes, deep chains escalate to stars") {
-    import testImplicits._
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    // shallow mixed clusters (diameter ≤ 2), edge count under the cap: the
-    // driver union-find route answers with zero iterative rounds and must
-    // equal the distributed propagation fixpoint exactly
-    val ids = (1L to 9L).toDF("id")
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 5L)).toDF("id_a", "id_b")
-    val (routeSmall, gotSmall) = Dedup.connectedComponentsAutoRouted(ids, pairs)
-    assert(routeSmall == "driver")
-    assert(asMap(gotSmall) == asMap(Dedup.connectedComponents(ids, pairs)))
-    // forcing the cap to zero restores the distributed routing: shallow
-    // graphs stay on the bounded propagation probe
-    val (routeShallow, gotShallow) =
-      Dedup.connectedComponentsAutoRouted(ids, pairs, driverEdgeCap = -1L)
-    assert(routeShallow == "propagation")
-    assert(asMap(gotShallow) == asMap(gotSmall))
-    // 64-node chain (diameter 63): the driver route handles ANY shape; the
-    // capped distributed route exhausts its probe budget and escalates
-    val n = 64L
-    val chainIds = (1L to n).toDF("id")
-    val chain = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (routeChain, gotChain) = Dedup.connectedComponentsAutoRouted(chainIds, chain)
-    assert(routeChain == "driver")
-    assert(gotChain.collect().forall(_.getLong(1) == 1L))
-    val (routeDeep, gotDeep) = Dedup.connectedComponentsAutoRouted(
-      chainIds, chain, probeRounds = 4, driverEdgeCap = -1L)
-    assert(routeDeep == "stars")
-    val deep = gotDeep.collect()
-    assert(deep.forall(_.getLong(1) == 1L))
-    assert(deep.count(_.getBoolean(2)) == 1)
   }
 
   test("auto strategy routes by candidate volume: dense corpus → bitset, unique-vocab corpus → prefix") {

@@ -162,4 +162,18 @@ class ParquetOpenSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"open Parquet with graft.sources.Parquet.read (no schema-inference job): $offenders")
   }
+
+  test("no program code under graft runs jobs below the Dataset API") {
+    // the one bounded collect (org.apache.spark.sql.graft.Bridge.collectUpTo)
+    // is the only place that executes a physical plan or submits a job itself
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"program sources not found under ${root.toAbsolutePath}")
+    val below = """executedPlan\s*\.execute\(\)|runJob\(|submitJob\(""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => below.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    assert(offenders.isEmpty,
+      s"collect through org.apache.spark.sql.graft.Bridge.collectUpTo: $offenders")
+  }
 }

@@ -539,13 +539,18 @@ class PropertySpec extends SparkSpec {
     } yield docs
     samples(corpusGen, 6).foreach { corpus =>
       val df = corpus.toDF("text")
-      val dist = TextAnalysis.bpeMerges(df, col("text"), nMerges = 6)
-        .orderBy("step").collect()
+      def table(m: org.apache.spark.sql.DataFrame) = m.orderBy("step").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      val local = TextAnalysis.bpeMergesLocal(df, col("text"), nMerges = 6)
-        .orderBy("step").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+      // bpeMerges' distributed route, forced by a cap of a few words
+      val (route, distDf) = TextAnalysis.bpeMergesRouted(df, col("text"), nMerges = 6,
+        vocabCap = 2)
+      val dist = table(distDf)
+      val local = table(TextAnalysis.bpeMergesLocal(df, col("text"), nMerges = 6))
       assert(local == dist, s"trainers diverged on corpus $corpus")
+      assert(table(TextAnalysis.bpeMerges(df, col("text"), nMerges = 6)) == dist,
+        s"bpeMerges' routes diverged on corpus $corpus")
+      val vocabSize = corpus.flatMap(_.split(" ")).distinct.size
+      assert(route == (if (vocabSize > 2) "distributed" else "driver"))
     }
   }
 }

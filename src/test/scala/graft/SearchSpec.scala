@@ -496,10 +496,20 @@ class SearchSpec extends SparkSpec {
     // hand values: rank1 mmr = 0.75·0.95; rank2 ("3"): 0.75·0.8 − 0.25·0
     assert(got(0)._3 == math.rint(0.75 * 0.95 * 1e6) / 1e6)
     assert(got(1)._3 == math.rint(0.75 * 0.80 * 1e6) / 1e6)
-    // k past the candidate count returns every candidate once
-    val all = Search.mmrRerank(cands, col("id"), col("rel"), col("v"),
-      k = 10, lambda = 0.75).collect()
-    assert(all.length == 4 && all.map(_.getString(1)).distinct.length == 4)
+    // k past the candidate count returns every candidate once, on either
+    // route (the distributed loop stops when no candidate is left)
+    Seq(10000, 0).foreach { cap =>
+      val all = Search.mmrRerankRouted(cands, col("id"), col("rel"), col("v"),
+        k = 10, lambda = 0.75, shortlistCap = cap)._2.orderBy("rank").collect()
+      assert(all.map(_.getString(1)).toSeq == Seq("1", "3", "2", "4"), s"cap $cap")
+    }
+    // a duplicated id keeps the shortlist off the driver; the loop still
+    // stops once every distinct id is picked
+    val dup = cands.unionByName(cands.filter(col("id") === "4"))
+    val (route, dupPicks) = Search.mmrRerankRouted(dup, col("id"), col("rel"), col("v"),
+      k = 10, lambda = 0.75)
+    assert(route == "distributed")
+    assert(dupPicks.orderBy("rank").collect().map(_.getString(1)).toSeq == Seq("1", "3", "2", "4"))
   }
 
   test("mmrRerank: the driver shortlist route equals the distributed greedy loop row for row") {
@@ -515,11 +525,16 @@ class SearchSpec extends SparkSpec {
     }.toDF("id", "rel", "v")
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getDouble(2), r.getDouble(3))).toSeq
-    val driver = rows(Search.mmrRerank(cands, col("id"), col("rel"), col("v"),
-      k = 12, lambda = 0.75))
-    val distributed = rows(Search.mmrRerank(cands, col("id"), col("rel"), col("v"),
-      k = 12, lambda = 0.75, driverShortlistCap = 0))
+    def routed(cap: Int) = {
+      val (route, df) = Search.mmrRerankRouted(cands, col("id"), col("rel"), col("v"),
+        k = 12, lambda = 0.75, shortlistCap = cap)
+      (route, rows(df))
+    }
+    val (driverRoute, driver) = routed(40)
+    val (distRoute, distributed) = routed(39)
+    assert(driverRoute == "driver" && distRoute == "distributed")
     assert(driver == distributed)
+    assert(routed(0) == (("distributed", distributed)))
   }
 
   test("confusion: exact matrix counts and truth-row shares") {
@@ -551,7 +566,7 @@ class SearchSpec extends SparkSpec {
       .select(col("id"), col("lbl_true"), col("seed"))
     val dirDf = dirEdges.toDF("src", "dst")
     val drvInt = Search.propagateRouted(tInt, dirDf, rounds = 2)
-    val dstInt = Search.propagateRouted(tInt, dirDf, rounds = 2, driverEdgeCap = 0L)
+    val dstInt = Search.propagateRouted(tInt, dirDf, rounds = 2, driverEdgeCap = 0)
     assert(drvInt._1 == "driver" && dstInt._1 == "distributed")
     assert(drvInt._2.collect().map(_.toSeq).toSeq ==
       dstInt._2.collect().map(_.toSeq).toSeq)
@@ -560,7 +575,7 @@ class SearchSpec extends SparkSpec {
       (i, if (i == 4) null else s"c${i % 3}", i % 4 == 0))
     val tStr = strRows.toDF("id", "lbl_true", "seed")
     val drvStr = Search.propagateRouted(tStr, dirDf, rounds = 3)
-    val dstStr = Search.propagateRouted(tStr, dirDf, rounds = 3, driverEdgeCap = 0L)
+    val dstStr = Search.propagateRouted(tStr, dirDf, rounds = 3, driverEdgeCap = 0)
     assert(drvStr._1 == "driver" && dstStr._1 == "distributed")
     assert(drvStr._2.collect().map(_.toSeq).toSeq ==
       dstStr._2.collect().map(_.toSeq).toSeq)

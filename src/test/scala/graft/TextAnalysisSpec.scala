@@ -403,14 +403,18 @@ class TextAnalysisSpec extends SparkSpec {
   test("bpeMergesLocal: merge table equals the distributed trainer's; deep depth encodes monotonically") {
     import testImplicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dist = TextAnalysis.bpeMerges(docs, col("text"), nMerges = 12)
-      .orderBy("step").collect()
+    def table(df: org.apache.spark.sql.DataFrame) = df.orderBy("step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-    val local = TextAnalysis.bpeMergesLocal(docs, col("text"), nMerges = 12)
-      .orderBy("step").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    // bpeMerges' distributed route, forced by a vocabulary cap of 0 words
+    val (distRoute, distDf) = TextAnalysis.bpeMergesRouted(docs, col("text"), nMerges = 12,
+      vocabCap = 0)
+    assert(distRoute == "distributed")
+    val dist = table(distDf)
+    val local = table(TextAnalysis.bpeMergesLocal(docs, col("text"), nMerges = 12))
     assert(local == dist,
       "driver-local trainer must reproduce the distributed merge table exactly")
+    val (driverRoute, driverDf) = TextAnalysis.bpeMergesRouted(docs, col("text"), nMerges = 12)
+    assert(driverRoute == "driver" && table(driverDf) == dist)
     // production depth: 256 merges train in-memory and encode in ONE
     // kernel pass; a deeper table can only merge MORE, so per-doc token
     // counts are monotonically <= the 4-merge encoding's. The natural-text
