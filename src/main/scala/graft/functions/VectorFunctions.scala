@@ -40,21 +40,6 @@ object VectorFunctions {
     */
   def normSq(v: Column): Column = dot(v, v)
 
-  /** L2 norm. */
-  def l2Norm(v: Column): Column = sqrt(normSq(v))
-
-  /** L2-normalize an array column (null-safe; zero vector stays zero via
-    * division yielding Infinity/NaN — callers guard as the reference does by
-    * never inserting zero vectors).
-    */
-  def l2Normalize(v: Column): Column = {
-    val d = toDoubleArray(v)
-    // array_repeat evaluates the norm once per ROW (not per element), so the
-    // fold stays O(d) — a naive transform(d, x => x / l2Norm(d)) would
-    // re-evaluate the aggregate per element, O(d^2).
-    zip_with(d, array_repeat(l2Norm(d), size(d)), (x, n) => x / n)
-  }
-
   /** Exact cosine similarity of two raw (unnormalized) vectors, computed as
     * dot / (sqrt(|a|^2) * sqrt(|b|^2)) — the same formula and fold order as
     * the DuckDB oracle, giving bit-comparable doubles.

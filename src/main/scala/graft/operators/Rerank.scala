@@ -24,12 +24,6 @@ object Rerank {
   private val hashFeatures = udf(TextFeatures.charNgramHash _)
   private val partialRatio = udf(TextFeatures.partialRatio _)
 
-  /** Char-n-gram signed-hash feature vector column (O14). */
-  def hashFeatureCol(text: Column): Column = hashFeatures(text)
-
-  /** Fuzzy partial-ratio column (O16), 0–100. */
-  def partialRatioCol(query: Column, text: Column): Column = partialRatio(query, text)
-
   /** Rerank `results` — rows carrying a sentence column and a search-score
     * column — against `query`. Returns the input columns plus `hash_score`,
     * `fuzzy_score`, `combined_score`, ordered by `combined_score` descending

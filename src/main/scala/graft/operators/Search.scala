@@ -51,12 +51,6 @@ object Search {
     if (autocut) Autocut(scored, col("score"), col("id")) else scored
   }
 
-  /** Score an arbitrary DataFrame's embedding column against a query vector
-    * (no store wrapper) — building block for ad-hoc pipelines.
-    */
-  def scoreCosine(df: DataFrame, embeddingCol: Column, query: Seq[Float]): Column =
-    VF.cosineTo(embeddingCol, query)
-
   /** Batch k-NN: top-k per query for a whole SET of query vectors in ONE
     * corpus scan — the throughput shape the reference cannot express (its
     * `find_most_similar` is one query per call under a global lock).

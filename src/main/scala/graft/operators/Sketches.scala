@@ -322,18 +322,35 @@ object Sketches {
     */
   def histogramQuantiles(df: DataFrame, value: Column, qs: Seq[Double],
       bins: Int = 256, lo: Double = 0.0, hi: Double = 1.0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val binCol = least(greatest(
-        floor((value - lit(lo)) / lit(hi - lo) * lit(bins.toDouble)), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("int")
     // the ≤B-row bin table IS the sketch — cut the lineage here so the
     // corpus aggregate runs exactly once (the three downstream consumers
     // would otherwise each recompute it: the isnotnull predicates pushed
     // into the join/filter branches de-canonicalize the subtrees and
     // defeat exchange reuse)
-    val counts = df.select(binCol.as("bin")).groupBy("bin").agg(count(lit(1)).as("cnt"))
+    val counts = df.select(binOf(value, bins, lo, hi).as("bin"))
+      .groupBy("bin").agg(count(lit(1)).as("cnt"))
       .cut(eager = false)
+    quantilesFromBins(counts, qs, bins, lit(lo), lit(hi - lo), identity)
+  }
+
+  /** The equi-width bin of `value` over [lo, hi]; out-of-range values clamp
+    * to the first or last bin.
+    */
+  private def binOf(value: Column, bins: Int, lo: Double, hi: Double): Column =
+    least(greatest(
+        floor((value - lit(lo)) / lit(hi - lo) * lit(bins.toDouble)), lit(0.0)),
+      lit((bins - 1).toDouble)).cast("int")
+
+  /** The read-out both ungrouped histogram quantile sketches share over a
+    * (bin, cnt) table: cumulative counts, integer rank targets, the first
+    * bin reaching each target, then interpolation inside it. `lo` and
+    * `span` are the bin range's start and width; `withRange` joins in the
+    * columns they read, if any.
+    */
+  private def quantilesFromBins(counts: DataFrame, qs: Seq[Double], bins: Int,
+      lo: Column, span: Column, withRange: DataFrame => DataFrame): DataFrame = {
+    val spark = counts.sparkSession
+    import spark.implicits._
     val cum = counts.withColumn("cum",
       sum(col("cnt")).over(Window.orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -343,12 +360,12 @@ object Sketches {
     val pick = targets.crossJoin(broadcast(cum))
       .filter(col("cum") >= col("target"))
       .groupBy("q", "target").agg(min(col("bin")).as("bin"))
-    pick.join(cum, Seq("bin"))
+    withRange(pick.join(cum, Seq("bin")))
       .select(col("q"),
-        round(lit(lo) + (col("bin").cast("double")
+        round(lo + (col("bin").cast("double")
             + (col("target") - (col("cum") - col("cnt"))).cast("double")
               / col("cnt").cast("double"))
-          * (lit(hi - lo) / lit(bins.toDouble)), 6).as("est"))
+          * (span / lit(bins.toDouble)), 6).as("est"))
       .orderBy("q")
   }
 
@@ -372,10 +389,7 @@ object Sketches {
       eps: Double = 1e-4): DataFrame = {
     require(bins >= 2 && hi > lo && eps > 0)
     val spark = df.sparkSession
-    val binCol = least(greatest(
-        floor((value - lit(lo)) / lit(hi - lo) * lit(bins.toDouble)), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("int")
-    val counts = df.select(grp.as("grp"), binCol.as("bin"))
+    val counts = df.select(grp.as("grp"), binOf(value, bins, lo, hi).as("bin"))
       .groupBy("grp", "bin").agg(count(lit(1)).as("cnt"))
       .cut(eager = false)
     val totals = counts.groupBy("grp").agg(sum(col("cnt")).as("n"))
@@ -411,10 +425,7 @@ object Sketches {
       qs: Seq[Double], bins: Int = 256, lo: Double = 0.0, hi: Double = 1.0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val binCol = least(greatest(
-        floor((value - lit(lo)) / lit(hi - lo) * lit(bins.toDouble)), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("int")
-    val counts = df.select(grp.as("grp"), binCol.as("bin"))
+    val counts = df.select(grp.as("grp"), binOf(value, bins, lo, hi).as("bin"))
       .groupBy("grp", "bin").agg(count(lit(1)).as("cnt"))
       .cut(eager = false)
     val cum = counts.withColumn("cum",
@@ -447,8 +458,6 @@ object Sketches {
     */
   def histogramQuantilesAdaptive(df: DataFrame, value: Column, qs: Seq[Double],
       bins: Int = 256): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // ONE corpus pass (round-10; the former shape paid a separate min/max
     // corpus pass BEFORE the bin pass): aggregate to distinct (value,
     // count) first — the extent and the bin counts both derive from that
@@ -468,22 +477,8 @@ object Sketches {
     val counts = vals.crossJoin(broadcast(ext))
       .groupBy(binCol.as("bin")).agg(sum(col("__c")).as("cnt"))
       .cut(eager = false)
-    val cum = counts.withColumn("cum",
-      sum(col("cnt")).over(Window.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val total = counts.agg(sum(col("cnt")).as("n"))
-    val targets = qs.toDF("q").crossJoin(broadcast(total))
-      .withColumn("target", ceil(col("q") * col("n")))
-    val pick = targets.crossJoin(broadcast(cum))
-      .filter(col("cum") >= col("target"))
-      .groupBy("q", "target").agg(min(col("bin")).as("bin"))
-    pick.join(cum, Seq("bin")).crossJoin(broadcast(ext))
-      .select(col("q"),
-        round(col("lo") + (col("bin").cast("double")
-            + (col("target") - (col("cum") - col("cnt"))).cast("double")
-              / col("cnt").cast("double"))
-          * ((col("hi") - col("lo")) / lit(bins.toDouble)), 6).as("est"))
-      .orderBy("q")
+    quantilesFromBins(counts, qs, bins, col("lo"), col("hi") - col("lo"),
+      _.crossJoin(broadcast(ext)))
   }
 
   /** Size of the mixed-hash value space: [[hllMix]] ends with a

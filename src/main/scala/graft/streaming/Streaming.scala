@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.Checkpoint.CheckpointOps
-import graft.sources.{Parquet, VectorStore}
+import graft.operators.{AnnSearch, IvfPq, IvfSearch}
+import graft.sources.{Layout, LayoutManifest, Parquet, VectorStore}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -16,8 +17,40 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * is wired as an oracled correctness query; the streaming behavior
   * (watermarks, incremental state, exactly-once file commits) is pinned by
   * StreamingSpec over MemoryStream sources.
+  *
+  * Sink contract: every `foreachBatch` sink runs through one micro-batch
+  * runner ([[eachBatch]]), and every batch-stamped one persists through one
+  * write ([[overwriteBatch]]): the batch's rows carry a `batch_id` column
+  * that is the LAST partition column (after `bucket` or `list_id` where the
+  * index leads with one), written as a dynamic partition overwrite — a
+  * retried batch replaces exactly its own partitions. Delivery into
+  * `foreachBatch` is at-least-once; this write makes it exactly-once in the
+  * stored bytes (the idempotent-sink rule of Structured Streaming, Armbrust
+  * et al., SIGMOD'18), which matters most for the SUM-merged sinks
+  * (count-min, volume, dataset card), where a duplicated batch would
+  * double-count. Two sinks deviate on purpose: [[startUpsert]] appends a
+  * `_seq`-stamped log (latest-wins at read), and the manifest-committed
+  * clustered sinks get exactly-once from the manifest's batch high-water
+  * mark ([[graft.sources.Layout.appendCommitted]]).
   */
 object Streaming {
+
+  /** The micro-batch runner behind every `foreachBatch` sink; `queryName`
+    * is None only for the unnamed upsert log.
+    */
+  private def eachBatch(src: DataFrame, queryName: Option[String], checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = src.writeStream.option("checkpointLocation", checkpoint)
+    queryName.fold(w)(w.queryName).foreachBatch(f).start()
+  }
+
+  /** The idempotent batch write of the sink contract above. */
+  private def overwriteBatch(df: DataFrame, batchId: Long, path: String, leading: String*): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(leading :+ "batch_id": _*)
+      .parquet(path)
 
   /** Canonicalize a raw (id, embedding, metadata) stream into the store
     * schema, dropping in-stream duplicate ids (the streaming analog of the
@@ -143,9 +176,10 @@ object Streaming {
 
   /** Continuous UPSERT into a plain-parquet store ("delta-lite"
     * merge-on-read): every micro-batch appends rows stamped with the batch
-    * sequence and an optional tombstone flag — writes stay cheap,
-    * append-only, and exactly-once under the checkpointed `foreachBatch`
-    * batchId. Readers resolve latest-wins per id ([[loadVersioned]]);
+    * sequence and an optional tombstone flag — writes stay cheap and
+    * append-only (the one unnamed, non-overwriting sink; a replayed batch
+    * re-appends the same `_seq`, which latest-wins resolution absorbs).
+    * Readers resolve latest-wins per id ([[loadVersioned]]);
     * [[compact]] folds the log back to one version when deltas accumulate.
     * This is the storage-level upsert/delete the reference performs by
     * rewriting whole pickle shards per call
@@ -156,15 +190,9 @@ object Streaming {
       changes: DataFrame, // (id, embedding, metadata, deleted BOOLEAN)
       path: String,
       checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("_seq", lit(batchId))
-          .write.mode("append").parquet(path)
-      }
-      .start()
+    eachBatch(changes, None, checkpoint) { (batch, batchId) =>
+      batch.withColumn("_seq", lit(batchId)).write.mode("append").parquet(path)
+    }
 
   /** Latest-wins resolution of the upsert log: max `_seq` per id wins,
     * tombstones drop the id. One shuffle on id (the same partitioning a
@@ -211,10 +239,10 @@ object Streaming {
     * (a blind streaming groupBy would carry unbounded state; here each
     * batch is complete by construction and the stream itself carries NO
     * state). The static side is the 8·numHashes-bytes-per-doc index, never
-    * corpus text. Emits one row per arriving doc, batch-stamped:
-    * `(id, n_dup_candidates, max_est_jaccard, batch_id)` — quarantine or
-    * exact verification is a downstream choice; the screen is the inline
-    * ingest decision.
+    * corpus text. Emits one row per arriving doc,
+    * `(id, n_dup_candidates, max_est_jaccard, batch_id)` under the sink
+    * contract — quarantine or exact verification is a downstream choice; the
+    * screen is the inline ingest decision.
     */
   def startNearDupScreen(
       docs: DataFrame,          // streaming (id, text)
@@ -223,31 +251,19 @@ object Streaming {
       checkpoint: String,
       queryName: String = "near_dup_screen"): StreamingQuery = {
     import graft.operators.Dedup
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = Dedup.signatureTable(batch, col("id"), col("text"))
-        val hits = Dedup.incrementalNearDups(corpusSigs, sigs)
-          .groupBy(col("new_id"))
-          .agg(count(lit(1)).as("n_dup_candidates"),
-            max(col("est_jaccard")).as("max_est_jaccard"))
-        // foreachBatch is at-least-once: a retried batch must not duplicate
-        // its rows, so the write overwrites ONLY its own batch_id partition
-        // (dynamic partition overwrite) — idempotent under re-execution
-        batch.select(col("id")).distinct()
-          .join(hits, col("id") === col("new_id"), "left")
-          .select(col("id"),
-            coalesce(col("n_dup_candidates"), lit(0L)).as("n_dup_candidates"),
-            coalesce(col("max_est_jaccard"), lit(0.0)).as("max_est_jaccard"),
-            lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(docs, Some(queryName), checkpoint) { (batch, batchId) =>
+      val sigs = Dedup.signatureTable(batch, col("id"), col("text"))
+      val hits = Dedup.incrementalNearDups(corpusSigs, sigs)
+        .groupBy(col("new_id"))
+        .agg(count(lit(1)).as("n_dup_candidates"),
+          max(col("est_jaccard")).as("max_est_jaccard"))
+      overwriteBatch(batch.select(col("id")).distinct()
+        .join(hits, col("id") === col("new_id"), "left")
+        .select(col("id"),
+          coalesce(col("n_dup_candidates"), lit(0L)).as("n_dup_candidates"),
+          coalesce(col("max_est_jaccard"), lit(0.0)).as("max_est_jaccard")),
+        batchId, outPath)
+    }
   }
 
   /** Streaming ANN index maintenance: per micro-batch, stamp arriving
@@ -258,13 +274,9 @@ object Streaming {
     * of the vector, so maintenance is stateless per batch: no global
     * rebuild, no index lock — arriving data lands in exactly the partitions
     * its buckets name, and a probe's `IN` filter keeps pruning to
-    * (probes/2^planes) of ALL data ever ingested.
-    *
-    * Idempotence: foreachBatch is at-least-once, so rows are batch-stamped
-    * and the write dynamically overwrites only its own (bucket, batch_id)
-    * partitions — a retried batch replaces itself, never duplicates.
-    * `bucket` leads the partition spec so pruning stays a top-level
-    * directory skip.
+    * (probes/2^planes) of ALL data ever ingested. Partitioned by
+    * (`bucket`, `batch_id`) under the sink contract: `bucket` leads so
+    * pruning stays a top-level directory skip.
     */
   def startAnnIndexMaintenance(
       vectors: DataFrame,       // streaming (id, embedding)
@@ -272,19 +284,9 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "ann_index_maintenance"): StreamingQuery =
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.AnnSearch.index(batch, col("embedding"), planes)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket", "batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(vectors, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(AnnSearch.index(batch, col("embedding"), planes), batchId, outPath, "bucket")
+    }
 
   /** Read the maintained ANN index back as a search-ready indexed table —
     * the exact shape [[graft.operators.AnnSearch.search]] takes; the
@@ -319,27 +321,29 @@ object Streaming {
       planes: Seq[Seq[Double]],
       outPath: String,
       checkpoint: String,
-      queryName: String = "ann_clustered_maintenance"): StreamingQuery = {
-    val expected = graft.operators.AnnSearch.planesHash(planes)
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val m = graft.sources.LayoutManifest
-          .current(batch.sparkSession, outPath)
-          .getOrElse(throw new IllegalStateException(
-            s"no committed clustered layout at $outPath — clusteredWrite first"))
-        m.props.get("planes_hash").foreach(want => require(want == expected,
-          s"plane mismatch: layout at $outPath was written with hash $want, " +
-            s"maintenance stream carries $expected"))
-        graft.sources.Layout.appendCommitted(
-          graft.operators.AnnSearch.index(batch, col("embedding"), planes)
-            .sortWithinPartitions("bucket"),
-          outPath, batchId = Some(batchId))
-        ()
-      }
-      .start()
-  }
+      queryName: String = "ann_clustered_maintenance"): StreamingQuery =
+    appendClustered(vectors, outPath, checkpoint, queryName,
+        "planes_hash", AnnSearch.planesHash(planes), "plane") {
+      AnnSearch.index(_, col("embedding"), planes).sortWithinPartitions("bucket")
+    }
+
+  /** The body both manifest-committed sinks share: check the layout's
+    * `prop` fingerprint against the stream's `expected` one, then append the
+    * `assign`ed batch under its id — [[graft.sources.Layout.appendCommitted]]
+    * skips a batch at or below the manifest's high-water mark.
+    */
+  private def appendClustered(src: DataFrame, outPath: String, checkpoint: String,
+      queryName: String, prop: String, expected: String, what: String)(
+      assign: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(src, Some(queryName), checkpoint) { (batch, batchId) =>
+      val m = LayoutManifest.current(batch.sparkSession, outPath)
+        .getOrElse(throw new IllegalStateException(
+          s"no committed clustered layout at $outPath — clusteredWrite first"))
+      m.props.get(prop).foreach(want => require(want == expected,
+        s"$what mismatch: layout at $outPath was written with hash $want, " +
+          s"maintenance stream carries $expected"))
+      Layout.appendCommitted(assign(batch), outPath, batchId = Some(batchId))
+    }
 
   /** Streaming IVF index maintenance — the centroid-partitioned twin of
     * [[startAnnIndexMaintenance]]: arriving vectors are assigned to their
@@ -353,8 +357,7 @@ object Streaming {
     * decision, not a streaming one — production re-trains centroids
     * offline and cuts over to a new index path, exactly as FAISS re-trains
     * an IVF coarse quantizer; the maintenance stream never mutates shared
-    * state. Same (list_id, batch_id) dynamic-partition-overwrite
-    * idempotence as the LSH twin.
+    * state. Partitioned by (`list_id`, `batch_id`) under the sink contract.
     */
   def startIvfIndexMaintenance(
       vectors: DataFrame,       // streaming (id, embedding)
@@ -362,24 +365,14 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "ivf_index_maintenance"): StreamingQuery =
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfSearch.index(batch, col("embedding"), centroids)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("list_id", "batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(vectors, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(IvfSearch.index(batch, col("embedding"), centroids), batchId, outPath, "list_id")
+    }
 
-  /** Read the maintained IVF index back as a search-ready indexed table.
-    * Partition-directory type inference narrows `list_id` to INT; cast back
-    * to the LONG the in-memory index contract ([[graft.operators.IvfSearch
-    * .index]]) carries.
+  /** Read a maintained IVF or IVF-PQ index back as a search-ready indexed
+    * table. Partition-directory type inference narrows `list_id` to INT;
+    * cast back to the LONG the in-memory index contract
+    * ([[graft.operators.IvfSearch.index]]) carries.
     */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     Parquet.read(spark, path).drop("batch_id")
@@ -401,36 +394,20 @@ object Streaming {
       centroids: Seq[graft.operators.IvfSearch.Centroid],
       outPath: String,
       checkpoint: String,
-      queryName: String = "ivf_clustered_maintenance"): StreamingQuery = {
-    val expected = graft.operators.IvfSearch.centroidsHash(centroids)
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val m = graft.sources.LayoutManifest
-          .current(batch.sparkSession, outPath)
-          .getOrElse(throw new IllegalStateException(
-            s"no committed clustered layout at $outPath — clusteredWrite first"))
-        m.props.get("centroids_hash").foreach(want => require(want == expected,
-          s"centroid mismatch: layout at $outPath was written with hash " +
-            s"$want, maintenance stream carries $expected"))
-        graft.sources.Layout.appendCommitted(
-          graft.operators.IvfSearch.index(batch, col("embedding"), centroids)
-            .sortWithinPartitions("list_id"),
-          outPath, batchId = Some(batchId))
-        ()
-      }
-      .start()
-  }
+      queryName: String = "ivf_clustered_maintenance"): StreamingQuery =
+    appendClustered(vectors, outPath, checkpoint, queryName,
+        "centroids_hash", IvfSearch.centroidsHash(centroids), "centroid") {
+      IvfSearch.index(_, col("embedding"), centroids).sortWithinPartitions("list_id")
+    }
 
   /** Streaming IVF-PQ index maintenance: per batch, coarse-assign AND
     * residual-encode arriving vectors against frozen centroids + codebooks
     * ([[graft.operators.IvfPq.index]]) — the full billion-scale ingest
     * shape: a new vector is searchable from codes alone the moment its
     * batch commits, and the ADC scan never reads floats. Same frozen-
-    * quantizer contract and (list_id, batch_id) overwrite idempotence as
-    * [[startIvfIndexMaintenance]]; quantizer re-training is an offline
-    * rebuild-and-cutover.
+    * quantizer contract and (`list_id`, `batch_id`) layout as
+    * [[startIvfIndexMaintenance]], read back by [[loadIvfIndex]]; quantizer
+    * re-training is an offline rebuild-and-cutover.
     */
   def startIvfPqIndexMaintenance(
       vectors: DataFrame,       // streaming (id, embedding)
@@ -439,24 +416,9 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "ivfpq_index_maintenance"): StreamingQuery =
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.IvfPq.index(batch, col("embedding"), centroids, cb)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("list_id", "batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
-
-  /** Read the maintained IVF-PQ index back ([[loadIvfIndex]] typing rules). */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    Parquet.read(spark, path).drop("batch_id")
-      .withColumn("list_id", col("list_id").cast("long"))
+    eachBatch(vectors, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(IvfPq.index(batch, col("embedding"), centroids, cb), batchId, outPath, "list_id")
+    }
 
   /** Streaming cardinality maintenance: per micro-batch, reduce arriving
     * keys to their HLL register contribution
@@ -466,9 +428,8 @@ object Streaming {
     * the merge is a per-(grp, bucket) MAX — commutative, associative,
     * and idempotent — so per-key state never grows (G·m rows per batch
     * at most, regardless of batch size) and a replayed batch merges to
-    * the identical registers. The batch-stamped dynamic-partition
-    * overwrite makes the persisted bytes idempotent under at-least-once
-    * foreachBatch retries too, same as the signature-screen pattern.
+    * the identical registers; the sink contract makes the stored bytes
+    * idempotent too.
     */
   def startHllMaintenance(
       rows: DataFrame,          // streaming; must contain grp/key columns
@@ -479,19 +440,9 @@ object Streaming {
       checkpoint: String,
       queryName: String = "hll_maintenance",
       wide: Boolean = false): StreamingQuery =
-    rows.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketches.hllRegisters(batch, grp, key, p, wide)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(rows, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.Sketches.hllRegisters(batch, grp, key, p, wide), batchId, outPath)
+    }
 
   /** Merge the maintained per-batch registers (max per grp/bucket) and
     * estimate — the running distinct count over everything ever ingested,
@@ -510,10 +461,8 @@ object Streaming {
     * running frequencies are SUM-merge-on-read ([[loadCmCounters]]).
     * Contrast with the HLL screen above: register max-merge is idempotent
     * (a replayed batch converges by itself), but counter SUM-merge double
-    * counts on replay — so here the batch-stamped dynamic-partition
-    * overwrite is not just hygiene, it is what makes at-least-once
-    * foreachBatch exactly-once in the persisted bytes (a retried batch
-    * REPLACES its own partition before the reader ever sums it).
+    * counts on replay — here the sink contract's overwrite is what keeps a
+    * retried batch from being summed twice.
     */
   def startCmMaintenance(
       rows: DataFrame,          // streaming; must contain the item column
@@ -523,19 +472,9 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "cm_maintenance"): StreamingQuery =
-    rows.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketches.cmCounters(batch, item, depth, width)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(rows, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.Sketches.cmCounters(batch, item, depth, width), batchId, outPath)
+    }
 
   /** Sum the maintained per-batch cell counts into the live d×w counter
     * matrix — probe-able for any item's frequency estimate without
@@ -548,13 +487,11 @@ object Streaming {
   /** Streaming volume monitor: per micro-batch, reduce arriving events to
     * per-(group, time-bucket) counts
     * ([[graft.operators.Relational.bucketCounts]]) and persist the
-    * batch-stamped rows. Like the count-min counters, the merge is a SUM —
-    * so the batch-stamped dynamic-partition overwrite is what makes
-    * at-least-once foreachBatch exactly-once in the persisted bytes (a
-    * retried batch replaces its own partition). A batch whose events span
-    * a bucket boundary contributes partial counts; the sum-merge
-    * reassembles the true bucket totals, so micro-batch cadence never has
-    * to align with the bucket grid. State per batch is ≤ groups·buckets
+    * batch-stamped rows. Like the count-min counters, the merge is a SUM,
+    * so the sink contract is what keeps a replay from double-counting. A
+    * batch whose events span a bucket boundary contributes partial counts;
+    * the sum-merge reassembles the true bucket totals, so micro-batch
+    * cadence never has to align with the bucket grid. State per batch is ≤ groups·buckets
     * rows, regardless of batch size.
     */
   def startVolumeMonitor(
@@ -565,29 +502,19 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "volume_monitor"): StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Relational.bucketCounts(batch, grp, ts, bucketMinutes)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(events, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.Relational.bucketCounts(batch, grp, ts, bucketMinutes),
+        batchId, outPath)
+    }
 
   /** Streaming entity-resolution screen: per micro-batch, match arriving
     * dirty records against a FROZEN canonical dimension at edit distance ≤
     * `maxDist` ([[graft.operators.FuzzyJoin.edJoin]] — symmetric-deletion
-    * blocking, exact levenshtein verify) and persist the match pairs
-    * batch-stamped. The streaming face of the q_er_names linkage: arriving
-    * CRM/vendor records resolve against the master dimension as they land,
-    * idempotent under micro-batch replay via the batch_id overwrite.
-    * Dimension drift is an offline rebuild-and-cutover, as with every
-    * frozen-static-side stream here.
+    * blocking, exact levenshtein verify) and persist the match pairs under
+    * the sink contract. The streaming face of the q_er_names linkage:
+    * arriving CRM/vendor records resolve against the master dimension as
+    * they land. Dimension drift is an offline rebuild-and-cutover, as with
+    * every frozen-static-side stream here.
     */
   def startErScreen(
       records: DataFrame,       // streaming; must contain id/name columns
@@ -611,22 +538,11 @@ object Streaming {
     val dimVariants = graft.operators.FuzzyJoin
       .variantTable(dimension, dimId, dimName, maxDist)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    records.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.FuzzyJoin.edJoinProbe(batch, id, name,
-            dimVariants, maxDist)
-          .select(col("l_id").as("record_id"), col("r_id").as("matched_id"),
-            col("dist"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(records, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.FuzzyJoin.edJoinProbe(batch, id, name, dimVariants, maxDist)
+          .select(col("l_id").as("record_id"), col("r_id").as("matched_id"), col("dist")),
+        batchId, outPath)
+    }
   }
 
   /** Streaming dataset-card maintenance — the running release-README
@@ -636,8 +552,8 @@ object Streaming {
     * lang) grain keeps source/language rollups exact, and distinct-text
     * cardinality (the exact-dup rate's denominator) is the one
     * non-mergeable exact quantity — it rides as wide-HLL registers of
-    * the text md5, max-merged at read. Batch-stamped dynamic overwrite
-    * throughout, so at-least-once replays are idempotent.
+    * the text md5, max-merged at read. Both state tables (`agg/`, `hll/`)
+    * follow the sink contract.
     *
     * Scale shape: per batch ONE map-side-combined aggregation into
     * (source × lang) rows plus a KB-scale register table; nothing
@@ -652,32 +568,17 @@ object Streaming {
       p: Int = 12,
       queryName: String = "dataset_card"): StreamingQuery = {
     import graft.operators.{Sketches, TextAnalysis}
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(text.as("__t"), source.as("source"))
-        b.groupBy(col("source"),
-            TextAnalysis.langId(col("__t")).as("lang"))
+    eachBatch(docs, Some(queryName), checkpoint) { (batch, batchId) =>
+      val b = batch.select(text.as("__t"), source.as("source"))
+      overwriteBatch(b.groupBy(col("source"), TextAnalysis.langId(col("__t")).as("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(TextAnalysis.wsTokenCount(col("__t")).cast("long")).as("n_tokens"),
             sum(round(TextAnalysis.qualityScore(col("__t")), 6)
-              .cast("decimal(18,6)")).as("sum_q"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$outPath/agg")
-        Sketches.hllRegisters(b, lit("text_md5"), md5(col("__t")),
-            p, wide = true)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$outPath/hll")
-        ()
-      }
-      .start()
+              .cast("decimal(18,6)")).as("sum_q")),
+        batchId, s"$outPath/agg")
+      overwriteBatch(Sketches.hllRegisters(b, lit("text_md5"), md5(col("__t")), p, wide = true),
+        batchId, s"$outPath/hll")
+    }
   }
 
   /** Fold the maintained card state into the running dataset card — the
@@ -735,9 +636,8 @@ object Streaming {
     * foreachBatch it would rebuild per micro-batch; a localCheckpoint
     * would pin blocks to executors and fail later batches on executor
     * loss. Output `(id, label, n_nbrs, n_agree, agree_frac, noisy,
-    * batch_id)`, idempotent via the batch_id dynamic-partition overwrite.
-    * Corpus drift is an offline rebuild-and-cutover, as with every
-    * frozen-static-side stream here.
+    * batch_id)` under the sink contract. Corpus drift is an offline
+    * rebuild-and-cutover, as with every frozen-static-side stream here.
     */
   def startLabelNoiseScreen(
       rows: DataFrame,          // streaming (id, vec, label)
@@ -756,7 +656,6 @@ object Streaming {
       probeRadius: Int = 1,
       queryName: String = "label_noise_screen"): StreamingQuery = {
     import graft.functions.{VectorFunctions => VF}
-    import graft.operators.AnnSearch
     require(k >= 1 && tau >= 0.0 && tau <= 1.0)
     val masks = AnnSearch.xorMasks(planes.length, probeRadius)
     val idx = AnnSearch.index(
@@ -764,49 +663,40 @@ object Streaming {
           corpusLabel.as("dst_lbl")), col("cv"), planes)
       .withColumn("cnrm", sqrt(VF.normSq(col("cv"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rows.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // distinct (id, vec, label) payloads screen INDEPENDENTLY, keyed
-        // by a 64-bit payload hash: an at-least-once source can land the
-        // same id twice in one batch (replay, or a correction with a new
-        // label/vector) — pooling edges by id alone would merge both
-        // rows' candidates into one top-k and fan the same mixed counts
-        // onto every output row; exact duplicate rows collapse via the
-        // distinct instead of double-counting half the neighborhood.
-        val b0 = batch.select(id.as("id"), vec.as("v"), label.as("lbl"))
-          .distinct()
-        val rk = xxhash64(col("id").cast("string"),
-          col("lbl").cast("string"), col("v"))
-        val b = AnnSearch.index(b0, col("v"), planes)
-          .withColumn("nrm", sqrt(VF.normSq(col("v"))))
-          .withColumn("rk", rk)
-          .withColumn("m", explode(typedLit(masks)))
-          .withColumn("pb", col("bucket").bitwiseXOR(col("m")))
-        val scored = b.as("a").join(idx.as("c"),
-            col("a.pb") === col("c.bucket"))
-          .select(col("a.rk").as("rk"), col("a.lbl").as("src_lbl"),
-            col("c.dst").as("dst"), col("c.dst_lbl").as("dst_lbl"),
-            (VF.dot(col("a.v"), col("c.cv")) /
-              (col("a.nrm") * col("c.cnrm"))).as("score"))
-        val counts = org.apache.spark.sql.graft.GroupTopK.perGroup(
-            scored, Seq(col("rk")), Seq(desc("score"), asc("dst")), k)
-          .groupBy(col("rk"))
-          .agg(count(lit(1)).as("n_nbrs"),
-            sum((col("dst_lbl") === col("src_lbl")).cast("long")).as("n_agree"))
-        b0.withColumn("rk", rk)
-          .join(counts, Seq("rk"), "left")
-          .select(Seq(col("id"), col("lbl").as("label")) ++
-            graft.operators.Search.consensusColumns(tau): _*)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(rows, Some(queryName), checkpoint) { (batch, batchId) =>
+      // distinct (id, vec, label) payloads screen INDEPENDENTLY, keyed
+      // by a 64-bit payload hash: an at-least-once source can land the
+      // same id twice in one batch (replay, or a correction with a new
+      // label/vector) — pooling edges by id alone would merge both
+      // rows' candidates into one top-k and fan the same mixed counts
+      // onto every output row; exact duplicate rows collapse via the
+      // distinct instead of double-counting half the neighborhood.
+      val b0 = batch.select(id.as("id"), vec.as("v"), label.as("lbl"))
+        .distinct()
+      val rk = xxhash64(col("id").cast("string"),
+        col("lbl").cast("string"), col("v"))
+      val b = AnnSearch.index(b0, col("v"), planes)
+        .withColumn("nrm", sqrt(VF.normSq(col("v"))))
+        .withColumn("rk", rk)
+        .withColumn("m", explode(typedLit(masks)))
+        .withColumn("pb", col("bucket").bitwiseXOR(col("m")))
+      val scored = b.as("a").join(idx.as("c"),
+          col("a.pb") === col("c.bucket"))
+        .select(col("a.rk").as("rk"), col("a.lbl").as("src_lbl"),
+          col("c.dst").as("dst"), col("c.dst_lbl").as("dst_lbl"),
+          (VF.dot(col("a.v"), col("c.cv")) /
+            (col("a.nrm") * col("c.cnrm"))).as("score"))
+      val counts = org.apache.spark.sql.graft.GroupTopK.perGroup(
+          scored, Seq(col("rk")), Seq(desc("score"), asc("dst")), k)
+        .groupBy(col("rk"))
+        .agg(count(lit(1)).as("n_nbrs"),
+          sum((col("dst_lbl") === col("src_lbl")).cast("long")).as("n_agree"))
+      overwriteBatch(b0.withColumn("rk", rk)
+        .join(counts, Seq("rk"), "left")
+        .select(Seq(col("id"), col("lbl").as("label")) ++
+          graft.operators.Search.consensusColumns(tau): _*),
+        batchId, outPath)
+    }
   }
 
   /** Streaming token-distribution drift monitor: per micro-batch, the
@@ -815,9 +705,8 @@ object Streaming {
     * once from the trusted corpus — distribution drift in the reference
     * itself is an offline rebuild-and-cutover, never streaming mutation,
     * the quantizer-maintenance rule). One (batch_id, n_tokens, n_types,
-    * oov_types, kl_nats) row per batch, idempotent via the batch_id
-    * dynamic-partition overwrite; an alert threshold on `kl_nats` +
-    * `oov_types` is the reader's one-filter query. State per batch is ONE
+    * oov_types, kl_nats) row per batch under the sink contract; an alert
+    * threshold on `kl_nats` + `oov_types` is the reader's one-filter query. State per batch is ONE
     * row — the monitor's footprint is independent of batch size.
     */
   def startDriftMonitor(
@@ -827,34 +716,24 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "drift_monitor"): StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.klAgainstReference(batch, text, reference)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(docs, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.TextAnalysis.klAgainstReference(batch, text, reference),
+        batchId, outPath)
+    }
 
   /** Streaming embedding-drift monitor — the vector twin of
     * [[startDriftMonitor]] (which watches token distributions): each
     * arriving micro-batch of vectors is compared per-dimension against the
     * FROZEN reference batch via
     * [[graft.operators.EmbedQc.embeddingDrift]], and the d drift rows
-    * persist batch-stamped. An embedding-model swap mid-ingest shows up as
-    * mass |shift_z| in the next batch's rows, BEFORE the drifted vectors
-    * contaminate an index or training mix. The reference is reduced to its
+    * persist under the sink contract. An embedding-model swap mid-ingest
+    * shows up as mass |shift_z| in the next batch's rows, BEFORE the drifted
+    * vectors contaminate an index or training mix. The reference is reduced to its
     * d-row per-dim stats ONCE at start-up
     * ([[graft.operators.EmbedQc.referenceStats]], collected local — d rows)
     * and every micro-batch joins against that frozen table: the per-batch
     * cost is one moments pass over the batch plus a d-row broadcast, with
-    * the reference never re-read. Batch-stamped dynamic-partition overwrite
-    * keeps at-least-once foreachBatch idempotent in the persisted bytes.
+    * the reference never re-read.
     */
   def startEmbeddingDriftMonitor(
       vectors: DataFrame,       // streaming; must contain the vec column
@@ -870,19 +749,10 @@ object Streaming {
     val frozen = spark.createDataFrame(
       spark.sparkContext.parallelize(statsDf.collect().toIndexedSeq, 1),
       statsDf.schema)
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.EmbedQc.embeddingDriftFromStats(frozen, batch, vec)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        ()
-      }
-      .start()
+    eachBatch(vectors, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(graft.operators.EmbedQc.embeddingDriftFromStats(frozen, batch, vec),
+        batchId, outPath)
+    }
   }
 
   /** Score the maintained volume state for anomalies: sum-merge the
@@ -979,10 +849,9 @@ object Streaming {
     * batch's files only — no rescan of history, the invariant that makes
     * this viable at a 100 TB accumulated table).
     *
-    * Idempotence: both writes are batch-stamped dynamic-partition
-    * overwrites — a retried batch replaces its own data partition and its
-    * own manifest rows together, so the manifest never references files a
-    * retry removed.
+    * Both writes follow the sink contract, so a retried batch replaces its
+    * own data partition and its own manifest rows together: the manifest
+    * never references files a retry removed.
     */
   def startZoneMapMaintenance(
       rows: DataFrame,          // streaming; must contain statCol
@@ -991,28 +860,14 @@ object Streaming {
       manifestPath: String,
       checkpoint: String,
       queryName: String = "zonemap_maintenance"): StreamingQuery =
-    rows.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(dataPath)
-        val spark = batch.sparkSession
-        val entries = graft.sources.LayoutManifest
-          .entriesFor(spark, Seq(s"$dataPath/batch_id=$batchId"), statCols)
-          .map(e => e.copy(name = s"batch_id=$batchId/${e.name}"))
-        spark.createDataFrame(entries)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(manifestPath)
-        ()
-      }
-      .start()
+    eachBatch(rows, Some(queryName), checkpoint) { (batch, batchId) =>
+      overwriteBatch(batch, batchId, dataPath)
+      val spark = batch.sparkSession
+      val entries = LayoutManifest
+        .entriesFor(spark, Seq(s"$dataPath/batch_id=$batchId"), statCols)
+        .map(e => e.copy(name = s"batch_id=$batchId/${e.name}"))
+      overwriteBatch(spark.createDataFrame(entries), batchId, manifestPath)
+    }
 
   /** The maintained manifest, ready for [[graft.sources.Layout.prunedRead]]
     * over the data path (entry names are relative to it, so the batch
@@ -1020,11 +875,11 @@ object Streaming {
     * version -1 and no props.
     */
   def loadZoneMap(spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.sources.LayoutManifest.Manifest = {
+      path: String): LayoutManifest.Manifest = {
     import spark.implicits._
-    graft.sources.LayoutManifest.Manifest(-1L, Map.empty,
+    LayoutManifest.Manifest(-1L, Map.empty,
       Parquet.read(spark, path).drop("batch_id")
-        .as[graft.sources.LayoutManifest.FileEntry].collect().toSeq.sortBy(_.name))
+        .as[LayoutManifest.FileEntry].collect().toSeq.sortBy(_.name))
   }
 
   /** Session-window stats per user (native session_window operator): the

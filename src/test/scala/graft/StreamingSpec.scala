@@ -5,8 +5,9 @@ import graft.sources.VectorStore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming contracts: incremental ingest into the store,
   * watermarked windowed aggregation, session windows — each driven through
@@ -661,7 +662,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       in.addData(b2: _*)
       q.processAllAvailable()
-      val idx = Streaming.loadIvfPqIndex(sp, s"$out/idx")
+      val idx = Streaming.loadIvfIndex(sp, s"$out/idx")
       assert(idx.count() == 4)
       assert(idx.schema("pq_codes").dataType.simpleString == "array<tinyint>",
         "codes must survive the parquet round-trip narrow")
@@ -872,6 +873,41 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming count-min maintenance: a batch replayed under its id after a lost commit is counted once") {
+    // a SUM-merged sink is where a non-idempotent write would double-count.
+    // A file source (replayable, unlike MemoryStream) delivers two batches;
+    // deleting the last commit makes the restarted query re-run batch 1
+    // under the same id, as after a crash between its write and its commit.
+    val sp = spark
+    import sp.implicits._
+    import graft.operators.Sketches
+    val out = tmpDir("graft_cm_replay")
+    val inDir = s"$out/in"
+    new java.io.File(inDir).mkdirs()
+    val b1 = Seq.fill(30)("alpha") ++ Seq.fill(5)("beta")
+    val b2 = Seq.fill(20)("alpha") ++ Seq.fill(9)("gamma")
+    def arrive(items: Seq[String]): Unit =
+      items.toDF("t").coalesce(1).write.mode("append").parquet(inDir)
+    def run() = {
+      val q = Streaming.startCmMaintenance(
+        sp.readStream.schema("t STRING").option("maxFilesPerTrigger", 1).parquet(inDir),
+        col("t"), depth = 4, width = 256, s"$out/cells", s"$out/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      q.recentProgress.toSeq.filter(_.numInputRows > 0).map(p => p.batchId -> p.numInputRows)
+    }
+    arrive(b1); arrive(b2)
+    assert(run() == Seq(0L -> b1.size.toLong, 1L -> b2.size.toLong))
+    val commits = new java.io.File(s"$out/ckpt/commits")
+    assert(new java.io.File(commits, "1").delete(), "commit of batch 1 not found")
+    new java.io.File(commits, ".1.crc").delete()
+    assert(run() == Seq(1L -> b2.size.toLong), "the restart must replay batch 1 and only it")
+    val got = Streaming.loadCmCounters(sp, s"$out/cells")
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val twin = Sketches.cmCounters((b1 ++ b2).toDF("t"), col("t"), 4, 256)
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got == twin, "a replayed batch must replace its partition, not add to it")
+  }
+
   test("streaming zone-map maintenance: manifest grows per batch; pruned read stays exact") {
     val sp = spark
     import sp.implicits._
@@ -1021,5 +1057,31 @@ class StreamingSpec extends SparkSpec {
       assert(rows.map(t => (t._2, t._3)) ==
         Set((1L, 100L), (2L, 101L), (3L, 102L))) // 4 matches nothing
     } finally q.stop()
+  }
+
+  test("every foreachBatch sink runs and writes through the two Streaming helpers") {
+    // one runner (eachBatch) and one idempotent batch write (overwriteBatch)
+    // carry the sink contract; a sink spelling out its own foreachBatch
+    // wiring or partition overwrite would be a copy that can drift from it
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"program sources not found under ${root.toAbsolutePath}")
+    val streaming = root.resolve("graft/streaming/Streaming.scala")
+    val lines = Files.readAllLines(streaming).asScala.toIndexedSeq
+    def body(helper: String): Set[Int] = {
+      val from = lines.indexWhere(_.contains(s"private def $helper("))
+      assert(from >= 0, s"helper $helper not found")
+      (from until lines.indexWhere(_.trim.isEmpty, from)).toSet
+    }
+    val helpers = body("eachBatch") ++ body("overwriteBatch")
+    val marker = """partitionOverwriteMode|\.foreachBatch""".r
+    val hits = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex
+        .filter { case (l, _) => marker.findFirstIn(l).nonEmpty }
+        .map { case (_, i) => (p, i) })
+    val offenders = hits.filterNot { case (p, i) => p == streaming && helpers(i) }
+      .map { case (p, i) => s"${root.relativize(p)}:${i + 1}" }
+    assert(offenders.isEmpty, s"route the sink through eachBatch / overwriteBatch: $offenders")
+    assert(hits.size == 2, s"each helper keeps its one use: $hits")
   }
 }
