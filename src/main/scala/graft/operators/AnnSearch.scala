@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.{Layout, LayoutManifest}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -120,23 +121,23 @@ object AnnSearch {
   def index(df: DataFrame, vec: Column, planes: Seq[Seq[Double]]): DataFrame =
     df.withColumn("bucket", bucketCol(vec, planes))
 
-  /** Deterministic 64-bit fingerprint of a plane matrix (order-sensitive
-    * fold over the raw double bits) — persisted in the layout manifest at
-    * [[clusteredWrite]] time so operations that must agree with the
-    * write-time planes ([[deleteVectors]], [[searchClustered]]) can detect
-    * a caller passing DIFFERENT planes (count, seed, or values) and fail
-    * loudly instead of silently pruning the wrong files.
+  /** Deterministic 64-bit fingerprint of a plane matrix
+    * ([[graft.sources.Layout.fingerprint]] over each plane's length and
+    * values) — persisted in the layout manifest at [[clusteredWrite]] time
+    * so operations that must agree with the write-time planes
+    * ([[deleteVectors]], [[searchClusteredAt]]) can detect a caller passing
+    * DIFFERENT planes (count, seed, or values) and fail loudly instead of
+    * silently pruning the wrong files.
     */
-  def planesHash(planes: Seq[Seq[Double]]): String = {
-    var h = 0xcbf29ce484222325L // FNV offset basis
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    mix(planes.length.toLong)
-    planes.foreach { p =>
-      mix(p.length.toLong)
-      p.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
-    }
-    java.lang.Long.toHexString(h)
-  }
+  def planesHash(planes: Seq[Seq[Double]]): String =
+    Layout.fingerprint(planes.map(p => (p.length.toLong, p)))
+
+  /** The LSH index as a [[graft.sources.Layout.ClusteredIndex]]: clustered
+    * on `bucket`, identified by its planes.
+    */
+  private[graft] def identity(planes: Seq[Seq[Double]]): Layout.ClusteredIndex =
+    Layout.ClusteredIndex("bucket", "ann_lsh", "plane", "planes_n", planes.length,
+      "planes_hash", planesHash(planes))
 
   /** Persist a vector table CLUSTERED by its LSH bucket: range-partitioned
     * and sorted on `bucket`, so each parquet file covers a contiguous
@@ -154,52 +155,22 @@ object AnnSearch {
     * replaces at cutover.
     */
   def clusteredWrite(df: DataFrame, vec: Column, planes: Seq[Seq[Double]],
-      path: String, numFiles: Int): Unit = {
-    index(df, vec, planes)
-      .repartitionByRange(numFiles, col("bucket"))
-      .sortWithinPartitions("bucket")
-      .write.mode("overwrite").parquet(path)
-    graft.sources.Layout.commitLayout(df.sparkSession, path, Seq("bucket"),
-      Map("index" -> "ann_lsh", "planes_n" -> planes.length.toString,
-        "planes_hash" -> planesHash(planes)))
-  }
+      path: String, numFiles: Int): Unit =
+    Layout.writeClustered(index(df, vec, planes), path, numFiles, identity(planes))
 
   /** The committed manifest of a [[clusteredWrite]] layout — the per-file
     * bucket spans [[searchClustered]]/[[searchClusteredBatch]] prune with,
     * read on the driver (no job).
     */
   def loadManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.sources.LayoutManifest.Manifest =
-    graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-
-  /** Fail-loudly guard: when `path` carries a committed manifest with a
-    * plane fingerprint, the caller's planes must match it — a delete or
-    * probe computed from DIFFERENT planes names the wrong buckets, prunes
-    * the wrong files, and silently misses rows. Layouts without a manifest
-    * (pre-protocol) pass through unchecked, as before.
-    */
-  private def validatePlanes(spark: org.apache.spark.sql.SparkSession,
-      path: String, planes: Seq[Seq[Double]]): Unit =
-    graft.sources.LayoutManifest.current(spark, path).foreach { m =>
-      m.props.get("planes_hash").foreach { want =>
-        val got = planesHash(planes)
-        require(got == want,
-          s"plane mismatch at $path: layout was written with planes_n=" +
-            s"${m.props.getOrElse("planes_n", "?")} hash=$want, caller " +
-            s"passed planes_n=${planes.length} hash=$got — operating with " +
-            "different planes would prune the wrong files (tombstones " +
-            "would silently survive). Rebuild with rebuildClustered or " +
-            "pass the write-time planes.")
-      }
-    }
+      path: String): LayoutManifest.Manifest =
+    LayoutManifest.committed(spark, path)
 
   /** [[search]] over a [[clusteredWrite]] layout: the multiprobe set
     * prunes FILES via the zone-map manifest before any task is scheduled
     * ([[graft.sources.Layout.prunedReadIn]] — membership prune, since xor
-    * neighbors scatter across the bucket space), then the same exact
-    * cosine + top-k runs inside the probed buckets. Results are identical
+    * neighbors scatter across the bucket space), then [[search]] runs on
+    * the files kept (zone maps prune files, not rows). Results are identical
     * to [[search]] on the full in-memory index at the same dials; the
     * scanned fraction is the probed files' share of the layout
     * (→ probes/2^b of the corpus as file count grows with data).
@@ -207,22 +178,16 @@ object AnnSearch {
   def searchClustered(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      manifest: graft.sources.LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
+      manifest: LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
       id: Column,
       vec: Column,
       query: Seq[Float],
       planes: Seq[Seq[Double]],
       k: Int = 5,
       probeRadius: Int = 1): DataFrame = {
-    val qb = bucketOf(query, planes)
-    val probes = probeBuckets(qb, planes.length, probeRadius)
-    graft.sources.Layout
-      .prunedReadIn(spark, path, manifest, "bucket", probes.map(_.toLong))
-      .filter(col("bucket").isin(probes: _*)) // zone maps prune files, not rows
-      .withColumn("score", VF.cosineTo(vec, query))
-      .select(id.as("id"), col("score"))
-      .orderBy(desc("score"), asc("id"))
-      .limit(k)
+    val probes = probeBuckets(bucketOf(query, planes), planes.length, probeRadius)
+    search(Layout.prunedReadIn(spark, path, manifest, "bucket", probes.map(_.toLong)),
+      id, vec, query, planes, k, probeRadius)
   }
 
   /** [[searchClustered]] against a [[clusteredWrite]] PATH: manifest stats
@@ -238,11 +203,9 @@ object AnnSearch {
       query: Seq[Float],
       planes: Seq[Seq[Double]],
       k: Int = 5,
-      probeRadius: Int = 1): DataFrame = {
-    validatePlanes(spark, path, planes)
-    searchClustered(spark, path, loadManifest(spark, path), id, vec, query,
-      planes, k, probeRadius)
-  }
+      probeRadius: Int = 1): DataFrame =
+    searchClustered(spark, path, Layout.checkedManifest(spark, path, identity(planes)),
+      id, vec, query, planes, k, probeRadius)
 
   /** GDPR forget for a [[clusteredWrite]] index: delete the tombstoned
     * vectors by ID while pruning files by BUCKET. On a bucket-clustered
@@ -259,7 +222,8 @@ object AnnSearch {
     * the CALLER's planes — if those differ from the write-time planes, the
     * tombstoned rows sit in files the prune skips and SURVIVE the forget
     * with no error. On a manifest-committed layout the write-time plane
-    * fingerprint is validated first and a mismatch throws.
+    * fingerprint is validated first and a mismatch throws; a layout with no
+    * manifest passes unchecked.
     */
   def deleteVectors(
       spark: org.apache.spark.sql.SparkSession,
@@ -267,13 +231,14 @@ object AnnSearch {
       idColName: String,
       tombstones: DataFrame,    // (id, embedding) — a bounded forget batch
       planes: Seq[Seq[Double]]): (Int, Int, Long) = {
-    validatePlanes(spark, path, planes)
+    LayoutManifest.current(spark, path).foreach(identity(planes).check(path, _))
     val tsId = tombstones.columns.head
     val tsVec = tombstones.columns(1)
+    // distinct bucket ids: at most 2^planes values reach the driver
     val buckets = tombstones
       .select(bucketCol(col(tsVec), planes).as("b")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq
-    graft.sources.Layout.deleteRowsIn(spark, path, "bucket", buckets,
+    Layout.deleteRowsIn(spark, path, "bucket", buckets,
       idColName, tombstones.select(col(tsId)))
   }
 
@@ -358,7 +323,7 @@ object AnnSearch {
   def searchClusteredBatch(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      manifest: graft.sources.LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
+      manifest: LayoutManifest.Manifest, // with `bucket` spans (loadManifest)
       id: Column,
       vec: Column,
       queries: DataFrame,       // (query_id, query_vec) — a BOUNDED batch
@@ -366,14 +331,14 @@ object AnnSearch {
       k: Int = 5,
       probeRadius: Int = 1): DataFrame = {
     val masks = xorMasks(planes.length, probeRadius)
+    // distinct bucket ids: at most 2^planes values reach the driver
     val probeUnion = queries
       .select(bucketCol(col("query_vec"), planes).as("qb"))
       .withColumn("m", explode(typedLit(masks)))
       .select(col("qb").bitwiseXOR(col("m")).cast("long").as("b"))
       .distinct()
       .collect().map(_.getLong(0)).toSeq
-    val pruned = graft.sources.Layout
-      .prunedReadIn(spark, path, manifest, "bucket", probeUnion)
+    val pruned = Layout.prunedReadIn(spark, path, manifest, "bucket", probeUnion)
     searchBatch(pruned, id, vec, queries, planes, k, probeRadius)
   }
 
@@ -394,7 +359,7 @@ object AnnSearch {
       path: String,
       idColName: String,
       tombstoneIds: DataFrame): (Int, Int, Long) =
-    graft.sources.Layout.deleteRowsBloom(spark, path, idColName, tombstoneIds)
+    Layout.deleteRowsBloom(spark, path, idColName, tombstoneIds)
 
   /** Rebuild-and-cutover for a [[clusteredWrite]] layout: re-bucket the
     * LIVE rows with `newPlanes`, re-cluster, and swap via ONE manifest
@@ -415,16 +380,10 @@ object AnnSearch {
       path: String,
       vecColName: String,
       newPlanes: Seq[Seq[Double]],
-      numFiles: Int): (Int, Int) = {
-    val live = graft.sources.LayoutManifest.readData(spark, path)
-      .drop("bucket")
-    val rebuilt = index(live, col(vecColName), newPlanes)
-      .repartitionByRange(numFiles, col("bucket"))
-      .sortWithinPartitions("bucket")
-    graft.sources.Layout.replaceLayout(spark, path, rebuilt, Seq("bucket"),
-      Map("index" -> "ann_lsh", "planes_n" -> newPlanes.length.toString,
-        "planes_hash" -> planesHash(newPlanes)))
-  }
+      numFiles: Int): (Int, Int) =
+    Layout.rebuildClustered(spark, path,
+      index(LayoutManifest.readData(spark, path).drop("bucket"), col(vecColName), newPlanes),
+      numFiles, identity(newPlanes))
 
   /** [[rebuildClustered]] with the dial recomputed from the LIVE row count:
     * n comes from the manifest (no scan), the plane count from
@@ -441,10 +400,7 @@ object AnnSearch {
       seed: Long = 0xA11CE5L,
       targetOccupancy: Long = 256,
       rowsPerFile: Long = 1000000L): Seq[Seq[Double]] = {
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — rebuild needs the live file set"))
-    val n = m.totalRows
+    val n = LayoutManifest.committed(spark, path).totalRows
     val newPlanes = hyperplanes(dim, planesFor(n, targetOccupancy), seed)
     val numFiles = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
     rebuildClustered(spark, path, vecColName, newPlanes, numFiles)

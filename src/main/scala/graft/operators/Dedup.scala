@@ -1314,7 +1314,10 @@ object Dedup {
     * postings join's candidate volume beats the grid's n²/2, and the dense
     * route additionally requires the global vocabulary to fit `maxVocab`
     * (a Σ df²-dense corpus with a LARGE vocabulary — natural text dominated
-    * by stopwords — stays on postings).
+    * by stopwords — stays on postings). The vocabulary comes through one
+    * bounded collect ([[org.apache.spark.sql.graft.Bridge.collectUpTo]],
+    * `maxVocab` terms) and is sorted on the driver; its order changes no
+    * result, since the dense dot products are exact integer sums.
     */
   def tfCosinePairsAuto(
       docs: DataFrame,
@@ -1325,13 +1328,12 @@ object Dedup {
       blocks: Int = 32,
       sampleMod: Int = 64): DataFrame = {
     val (nDocs, sumDf2) = pairCostProbe(docs, id, text, n = 1, sampleMod)
-    if (sumDf2 > nDocs.toDouble * nDocs.toDouble / 2.0) {
-      val v = docs.select(explode(split(text, "\\s+")).as("term")).distinct()
-        .orderBy("term").limit(maxVocab + 1)
-        .collect().map(_.getString(0)).toSeq
-      if (v.size <= maxVocab)
-        return tfCosinePairsDense(docs, id, text, tau, v, blocks)
-    }
-    tfCosinePairs(docs, id, text, tau)
+    val vocab =
+      if (sumDf2 > nDocs.toDouble * nDocs.toDouble / 2.0)
+        org.apache.spark.sql.graft.Bridge.collectUpTo(
+          docs.select(explode(split(text, "\\s+")).as("term")).distinct(), maxVocab)
+      else None
+    vocab.fold(tfCosinePairs(docs, id, text, tau))(v =>
+      tfCosinePairsDense(docs, id, text, tau, v.map(_.getString(0)).toSeq.sorted, blocks))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.sources.{Layout, LayoutManifest}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
@@ -145,51 +146,24 @@ object IvfSearch {
     * space, so the read side shares the same membership prune.
     */
   def clusteredWrite(embs: DataFrame, vec: Column, centroids: Seq[Centroid],
-      path: String, numFiles: Int): Unit = {
-    index(embs, vec, centroids)
-      .repartitionByRange(numFiles, col("list_id"))
-      .sortWithinPartitions("list_id")
-      .write.mode("overwrite").parquet(path)
-    graft.sources.Layout.commitLayout(embs.sparkSession, path, Seq("list_id"),
-      Map("index" -> "ann_ivf", "ivf_c" -> centroids.length.toString,
-        "centroids_hash" -> centroidsHash(centroids)))
-  }
+      path: String, numFiles: Int): Unit =
+    Layout.writeClustered(index(embs, vec, centroids), path, numFiles, identity(centroids))
 
   /** Deterministic fingerprint of a centroid set (ids + exact double
-    * coordinates) — persisted at [[clusteredWrite]], validated by
-    * operations whose list pruning must agree with the write-time
-    * assignment (a probe against retrained-but-not-rebuilt centroids reads
-    * the wrong lists). Same FNV fold as
-    * [[graft.operators.AnnSearch.planesHash]].
+    * coordinates, [[graft.sources.Layout.fingerprint]]) — persisted at
+    * [[clusteredWrite]], validated by operations whose list pruning must
+    * agree with the write-time assignment (a probe against
+    * retrained-but-not-rebuilt centroids reads the wrong lists).
     */
-  def centroidsHash(centroids: Seq[Centroid]): String = {
-    var h = 0xcbf29ce484222325L
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    mix(centroids.length.toLong)
-    centroids.foreach { c =>
-      mix(c.cid)
-      c.vec.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
-    }
-    java.lang.Long.toHexString(h)
-  }
+  def centroidsHash(centroids: Seq[Centroid]): String =
+    Layout.fingerprint(centroids.map(c => (c.cid, c.vec)))
 
-  /** Fail-loudly guard for manifest-committed IVF layouts: the caller's
-    * centroids must match the write-time fingerprint. Pre-protocol layouts
-    * (no manifest) pass unchecked.
+  /** The IVF index as a [[graft.sources.Layout.ClusteredIndex]]: clustered
+    * on `list_id`, identified by its centroids.
     */
-  private def validateCentroids(spark: SparkSession, path: String,
-      centroids: Seq[Centroid]): Unit =
-    graft.sources.LayoutManifest.current(spark, path).foreach { m =>
-      m.props.get("centroids_hash").foreach { want =>
-        val got = centroidsHash(centroids)
-        require(got == want,
-          s"centroid mismatch at $path: layout was written with ivf_c=" +
-            s"${m.props.getOrElse("ivf_c", "?")} hash=$want, caller passed " +
-            s"c=${centroids.length} hash=$got — probing with different " +
-            "centroids reads the wrong inverted lists. Rebuild with " +
-            "rebuildClustered or pass the write-time centroids.")
-      }
-    }
+  private[graft] def identity(centroids: Seq[Centroid]): Layout.ClusteredIndex =
+    Layout.ClusteredIndex("list_id", "ann_ivf", "centroid", "ivf_c", centroids.length,
+      "centroids_hash", centroidsHash(centroids))
 
   /** Rebuild-and-cutover for an IVF [[clusteredWrite]] layout — the
     * quantizer-drift answer (previously documented as "offline
@@ -209,44 +183,34 @@ object IvfSearch {
       c: Int,
       trainIters: Int = 0,
       numFiles: Int = 8): Seq[Centroid] = {
-    val live = graft.sources.LayoutManifest.readData(spark, path)
-      .drop("list_id")
+    val live = LayoutManifest.readData(spark, path).drop("list_id")
     val cents =
       if (trainIters <= 0) centroidsFromIds(live, col(idColName), col(vecColName), c)
       else train(live, col(idColName), col(vecColName), c, trainIters)
-    val rebuilt = index(live, col(vecColName), cents)
-      .repartitionByRange(numFiles, col("list_id"))
-      .sortWithinPartitions("list_id")
-    graft.sources.Layout.replaceLayout(spark, path, rebuilt, Seq("list_id"),
-      Map("index" -> "ann_ivf", "ivf_c" -> cents.length.toString,
-        "centroids_hash" -> centroidsHash(cents)))
+    Layout.rebuildClustered(spark, path, index(live, col(vecColName), cents),
+      numFiles, identity(cents))
     cents
   }
 
   /** [[search]] over a [[clusteredWrite]] layout: the nprobe nearest lists
     * prune FILES via the zone-map manifest
-    * ([[graft.sources.Layout.prunedReadIn]]) before any task is scheduled;
-    * the same exact cosine + top-k runs inside the probed lists, so results
-    * equal [[search]] on the full in-memory index at the same dials.
+    * ([[graft.sources.Layout.prunedReadIn]]) before any task is scheduled,
+    * then [[search]] runs on the files kept (zone maps prune files, not
+    * rows), so results equal [[search]] on the full in-memory index at the
+    * same dials.
     */
   def searchClustered(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
-      manifest: graft.sources.LayoutManifest.Manifest, // with `list_id` spans
+      manifest: LayoutManifest.Manifest, // with `list_id` spans
       id: Column,
       vec: Column,
       query: Seq[Float],
       centroids: Seq[Centroid],
       k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
-    val probes = probeLists(query, centroids, nprobe)
-    graft.sources.Layout.prunedReadIn(spark, path, manifest, "list_id", probes)
-      .filter(probeFilter(col("list_id"), probes)) // zone maps prune files, not rows
-      .withColumn("score", VF.cosineTo(vec, query))
-      .select(id.as("id"), col("score"))
-      .orderBy(desc("score"), asc("id"))
-      .limit(k)
-  }
+      nprobe: Int = 4): DataFrame =
+    search(Layout.prunedReadIn(spark, path, manifest, "list_id",
+      probeLists(query, centroids, nprobe)), id, vec, query, centroids, k, nprobe)
 
   /** [[searchClustered]] against a [[clusteredWrite]] PATH: list-span stats
     * resolved from the committed manifest (no scan) and the caller's
@@ -260,13 +224,9 @@ object IvfSearch {
       query: Seq[Float],
       centroids: Seq[Centroid],
       k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
-    validateCentroids(spark, path, centroids)
-    val m = graft.sources.LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest at $path — was this layout written by clusteredWrite?"))
-    searchClustered(spark, path, m, id, vec, query, centroids, k, nprobe)
-  }
+      nprobe: Int = 4): DataFrame =
+    searchClustered(spark, path, Layout.checkedManifest(spark, path, identity(centroids)),
+      id, vec, query, centroids, k, nprobe)
 
   /** ONE Lloyd (k-means) update round surfaced as a DataFrame: assign every
     * vector to its nearest seed centroid (the [[assignCol]] codegen argmin —

@@ -36,6 +36,11 @@ import org.apache.spark.sql.functions._
   *    count) into `ceil(bytes / targetBytes)` outputs in one job; with a
   *    cluster column it re-sorts with `repartitionByRange` so the rewrite
   *    RESTORES zone-map tightness instead of destroying it.
+  *  - CLUSTERED INDEX: both vector index kinds, LSH buckets and IVF lists,
+  *    are one format here ([[ClusteredIndex]]): one clustered write, one
+  *    identity check, one probe read ([[prunedReadIn]]) and one rebuild;
+  *    the operators supply only the key column, its expression and the
+  *    probe set.
   */
 object Layout {
 
@@ -101,12 +106,16 @@ object Layout {
     val keyed = df.withColumn("_zkey",
       mortonKey(scaleTo16(col(dimX), b.getLong(0), b.getLong(1)),
                 scaleTo16(col(dimY), b.getLong(2), b.getLong(3))))
-    keyed
-      .repartitionByRange(numFiles, col("_zkey"))
-      .sortWithinPartitions("_zkey")
-      .drop("_zkey")
+    rangeCluster(keyed, numFiles, "_zkey").drop("_zkey")
       .write.mode("overwrite").parquet(path)
   }
+
+  /** `df` in `n` range partitions of `key`, sorted on it within each: the
+    * one clustering every clustered write, rebuild and compaction produces,
+    * so each output file covers a contiguous span of `key`.
+    */
+  private[graft] def rangeCluster(df: DataFrame, n: Int, key: String): DataFrame =
+    df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
 
   /** Planning-time file pruning: keep only the files of `manifest` whose
     * [min, max] span of `statCol` intersects [lo, hi] (a file may still
@@ -373,10 +382,7 @@ object Layout {
   private def pack(df: DataFrame, bytes: Long, targetBytes: Long,
       clusterCol: Option[String]): DataFrame = {
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    clusterCol match {
-      case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
-      case None    => df.repartition(nOut)
-    }
+    clusterCol.fold(df.repartition(nOut))(rangeCluster(df, nOut, _))
   }
 
   /** Bin-pack small files into ~`targetBytes` outputs. File count comes
@@ -443,13 +449,9 @@ object Layout {
   def appendCommitted(df: DataFrame, path: String,
       batchId: Option[Long] = None): Long = {
     val spark = df.sparkSession
-    def snapshotNow(): LayoutManifest.Manifest =
-      LayoutManifest.current(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"appendCommitted needs a committed layout at $path — run commitLayout first"))
     def alreadySeen(s: LayoutManifest.Manifest): Boolean =
       batchId.exists(b => s.props.get("last_batch_id").exists(_.toLong >= b))
-    var snapshot = snapshotNow()
+    var snapshot = LayoutManifest.committed(spark, path)
     if (alreadySeen(snapshot)) return 0L
     val newNames = stageIn(df, path, "ap")
     val newEntries = LayoutManifest.entriesFor(spark,
@@ -468,7 +470,7 @@ object Layout {
         case _: LayoutManifest.CommitConflictException =>
           attempts += 1
           require(attempts < 32, s"append commit contention at $path")
-          snapshot = snapshotNow()
+          snapshot = LayoutManifest.committed(spark, path)
           // a concurrent retry of THIS batch won while we raced: skip —
           // our renamed-in files are orphans the next gc reclaims
           if (alreadySeen(snapshot)) return 0L
@@ -515,6 +517,77 @@ object Layout {
     (snap.files.size, newEntries.size)
   }
 
+  /** A clustered vector index — LSH buckets
+    * ([[graft.operators.AnnSearch.clusteredWrite]]) or IVF lists
+    * ([[graft.operators.IvfSearch.clusteredWrite]]): files range-clustered on
+    * the integer `key`, and a manifest that records the index's identity
+    * ([[props]]): its `kind`, the `size` of its key parameters (plane or
+    * centroid count) and their `hash` ([[fingerprint]]). Keys computed from
+    * other parameters name the wrong files, so every operation that
+    * computes keys from caller-supplied parameters runs [[check]] first.
+    */
+  private[graft] final case class ClusteredIndex(key: String, kind: String,
+      noun: String, sizeProp: String, size: Int, hashProp: String, hash: String) {
+    def props: Map[String, String] =
+      Map("index" -> kind, sizeProp -> size.toString, hashProp -> hash)
+
+    /** Fail loudly when `m` records a different fingerprint; a manifest
+      * without one passes.
+      */
+    def check(path: String, m: LayoutManifest.Manifest): Unit =
+      m.props.get(hashProp).foreach { want =>
+        require(want == hash,
+          s"$noun mismatch at $path: layout was written with $sizeProp=" +
+            s"${m.props.getOrElse(sizeProp, "?")} $hashProp=$want, caller passed " +
+            s"$sizeProp=$size $hashProp=$hash — keys from different ${noun}s " +
+            "name the wrong files, so probes miss rows and deletes leave them. " +
+            s"Rebuild with rebuildClustered or pass the write-time ${noun}s.")
+      }
+  }
+
+  /** Order-sensitive 64-bit FNV fold over `rows` (their count, then per row
+    * its header long and the raw bits of its doubles), as hex. Manifests
+    * store it as index identity, so its output for a given input is fixed.
+    */
+  private[graft] def fingerprint(rows: Seq[(Long, Seq[Double])]): String = {
+    var h = 0xcbf29ce484222325L // FNV offset basis
+    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
+    mix(rows.length.toLong)
+    rows.foreach { case (head, ds) =>
+      mix(head)
+      ds.foreach(d => mix(java.lang.Double.doubleToLongBits(d)))
+    }
+    java.lang.Long.toHexString(h)
+  }
+
+  /** Write `indexed` (rows carrying `index.key`) as `numFiles` clustered
+    * files and commit its manifest with the key spans and index props.
+    */
+  private[graft] def writeClustered(indexed: DataFrame, path: String,
+      numFiles: Int, index: ClusteredIndex): Unit = {
+    rangeCluster(indexed, numFiles, index.key).write.mode("overwrite").parquet(path)
+    commitLayout(indexed.sparkSession, path, Seq(index.key), index.props)
+  }
+
+  /** Rebuild-and-cutover of a clustered index: `reindexed` (the live rows
+    * keyed anew) replaces every file in one commit ([[replaceLayout]]).
+    * Returns (filesBefore, filesAfter).
+    */
+  private[graft] def rebuildClustered(spark: SparkSession, path: String,
+      reindexed: DataFrame, numFiles: Int, index: ClusteredIndex): (Int, Int) =
+    replaceLayout(spark, path, rangeCluster(reindexed, numFiles, index.key),
+      Seq(index.key), index.props)
+
+  /** The committed manifest of a clustered index, checked against the
+    * caller's identity — what a probe read or a streaming append starts from.
+    */
+  private[graft] def checkedManifest(spark: SparkSession, path: String,
+      index: ClusteredIndex): LayoutManifest.Manifest = {
+    val m = LayoutManifest.committed(spark, path)
+    index.check(path, m)
+    m
+  }
+
   /** [[compact]] IN PLACE under the manifest protocol: read the live file
     * set, bin-pack by listed bytes, range-re-sort on `clusterCol` to
     * restore zone-map tightness, and cut over with one manifest commit —
@@ -556,9 +629,7 @@ object Layout {
     */
   def writeBloomSidecar(spark: SparkSession, path: String, colName: String,
       fpp: Double = 0.01): (Int, Int) = {
-    val m = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"bloom sidecar needs a committed layout at $path — run commitLayout first"))
+    val m = LayoutManifest.committed(spark, path)
     writeSidecarDf(spark, path, m.version, colName,
       bloomsDf(spark, path, m.files, colName, fpp), m.files.size)
     graft.functions.Bloom.dims(math.max(1L, m.files.map(_.rows).max), fpp)
@@ -630,8 +701,7 @@ object Layout {
     */
   def bloomPrunedFiles(spark: SparkSession, path: String, colName: String,
       values: Seq[Long]): Array[String] = {
-    val m = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $path"))
+    val m = LayoutManifest.committed(spark, path)
     val side = readSidecarDf(spark, path, m.version, colName).getOrElse(
       throw new IllegalStateException(
         s"no bloom sidecar for v${m.version}/$colName at $path — run " +
@@ -654,8 +724,7 @@ object Layout {
     */
   def deleteRowsBloom(spark: SparkSession, path: String, idCol: String,
       tombstones: DataFrame, fpp: Double = 0.01): (Int, Int, Long) = {
-    val snapshot = LayoutManifest.current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed manifest at $path"))
+    val snapshot = LayoutManifest.committed(spark, path)
     val tsCol = tombstones.columns.head
     val ids = tombstones.select(tombstones(tsCol).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq

@@ -37,7 +37,7 @@ import scala.util.control.NonFatal
   * runs no job to discover file spans. The props carry index identity
   * (LSH plane count/hash, IVF centroid hash) so a delete/search against a layout
   * written with DIFFERENT dials fails loudly instead of silently missing
-  * rows ([[graft.operators.AnnSearch.deleteVectors]] validates).
+  * rows ([[Layout.ClusteredIndex]] checks them).
   *
   * Format: a tiny TSV (dependency-free, human-inspectable), one file per
   * version under `path/_graft/manifest-<version>.tsv`. The commit is the
@@ -98,6 +98,13 @@ object LayoutManifest {
     if (versions.isEmpty) None
     else Some(read(f, new Path(dir, s"manifest-${versions.max}.tsv"), versions.max))
   }
+
+  /** [[current]] for operations that need a committed layout: throws when
+    * `path` has none (it was not written through a manifest commit).
+    */
+  def committed(spark: SparkSession, path: String): Manifest =
+    current(spark, path).getOrElse(throw new IllegalStateException(
+      s"no committed manifest at $path — write it with commitLayout or a clusteredWrite first"))
 
   private def read(f: FileSystem, p: Path, version: Long): Manifest = {
     val in = f.open(p)

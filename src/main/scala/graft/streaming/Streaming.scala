@@ -28,10 +28,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stored bytes (the idempotent-sink rule of Structured Streaming, Armbrust
   * et al., SIGMOD'18), which matters most for the SUM-merged sinks
   * (count-min, volume, dataset card), where a duplicated batch would
-  * double-count. Two sinks deviate on purpose: [[startUpsert]] appends a
-  * `_seq`-stamped log (latest-wins at read), and the manifest-committed
-  * clustered sinks get exactly-once from the manifest's batch high-water
-  * mark ([[graft.sources.Layout.appendCommitted]]).
+  * double-count, and for the [[startUpsert]] log, which would keep a
+  * replayed batch's rows twice. The manifest-committed clustered sinks
+  * deviate on purpose: they get exactly-once from the manifest's batch
+  * high-water mark ([[graft.sources.Layout.appendCommitted]]).
   */
 object Streaming {
 
@@ -175,10 +175,10 @@ object Streaming {
       .start()
 
   /** Continuous UPSERT into a plain-parquet store ("delta-lite"
-    * merge-on-read): every micro-batch appends rows stamped with the batch
-    * sequence and an optional tombstone flag — writes stay cheap and
-    * append-only (the one unnamed, non-overwriting sink; a replayed batch
-    * re-appends the same `_seq`, which latest-wins resolution absorbs).
+    * merge-on-read): every micro-batch adds rows stamped with the batch
+    * sequence `_seq` and an optional tombstone flag, as its own `batch_id`
+    * partition under the sink contract — writes stay cheap, never touch an
+    * earlier batch, and a replayed batch replaces its own rows.
     * Readers resolve latest-wins per id ([[loadVersioned]]);
     * [[compact]] folds the log back to one version when deltas accumulate.
     * This is the storage-level upsert/delete the reference performs by
@@ -191,12 +191,13 @@ object Streaming {
       path: String,
       checkpoint: String): StreamingQuery =
     eachBatch(changes, None, checkpoint) { (batch, batchId) =>
-      batch.withColumn("_seq", lit(batchId)).write.mode("append").parquet(path)
+      overwriteBatch(batch.withColumn("_seq", lit(batchId)), batchId, path)
     }
 
-  /** Latest-wins resolution of the upsert log: max `_seq` per id wins,
-    * tombstones drop the id. One shuffle on id (the same partitioning a
-    * compaction job reuses).
+  /** Latest-wins resolution of the upsert log or of its [[compact]]ed
+    * form: max `_seq` per id wins, tombstones drop the id, and the log's
+    * `batch_id` partition column goes. One shuffle on id (the same
+    * partitioning a compaction job reuses).
     */
   def loadVersioned(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -204,10 +205,10 @@ object Streaming {
     Parquet.read(spark, path)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1 && !col("deleted"))
-      .drop("_rn", "_seq", "deleted")
+      .drop("_rn", "_seq", "deleted", "batch_id")
   }
 
-  /** Fold the append-only log into a single resolved version (run when the
+  /** Fold the upsert log into a single resolved version (run when the
     * delta count grows; readers see either the old log or the compacted
     * one — both resolve identically).
     */
@@ -322,27 +323,22 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "ann_clustered_maintenance"): StreamingQuery =
-    appendClustered(vectors, outPath, checkpoint, queryName,
-        "planes_hash", AnnSearch.planesHash(planes), "plane") {
-      AnnSearch.index(_, col("embedding"), planes).sortWithinPartitions("bucket")
-    }
+    appendClustered(vectors, outPath, checkpoint, queryName, AnnSearch.identity(planes))(
+      AnnSearch.index(_, col("embedding"), planes))
 
-  /** The body both manifest-committed sinks share: check the layout's
-    * `prop` fingerprint against the stream's `expected` one, then append the
-    * `assign`ed batch under its id — [[graft.sources.Layout.appendCommitted]]
-    * skips a batch at or below the manifest's high-water mark.
+  /** The body both manifest-committed sinks share: check the stream's
+    * index identity against the layout's manifest, then append the
+    * `assign`ed batch, sorted on the index key, under its id —
+    * [[graft.sources.Layout.appendCommitted]] skips a batch at or below the
+    * manifest's high-water mark.
     */
   private def appendClustered(src: DataFrame, outPath: String, checkpoint: String,
-      queryName: String, prop: String, expected: String, what: String)(
+      queryName: String, index: Layout.ClusteredIndex)(
       assign: DataFrame => DataFrame): StreamingQuery =
     eachBatch(src, Some(queryName), checkpoint) { (batch, batchId) =>
-      val m = LayoutManifest.current(batch.sparkSession, outPath)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed clustered layout at $outPath — clusteredWrite first"))
-      m.props.get(prop).foreach(want => require(want == expected,
-        s"$what mismatch: layout at $outPath was written with hash $want, " +
-          s"maintenance stream carries $expected"))
-      Layout.appendCommitted(assign(batch), outPath, batchId = Some(batchId))
+      Layout.checkedManifest(batch.sparkSession, outPath, index)
+      Layout.appendCommitted(assign(batch).sortWithinPartitions(index.key), outPath,
+        batchId = Some(batchId))
     }
 
   /** Streaming IVF index maintenance — the centroid-partitioned twin of
@@ -395,10 +391,8 @@ object Streaming {
       outPath: String,
       checkpoint: String,
       queryName: String = "ivf_clustered_maintenance"): StreamingQuery =
-    appendClustered(vectors, outPath, checkpoint, queryName,
-        "centroids_hash", IvfSearch.centroidsHash(centroids), "centroid") {
-      IvfSearch.index(_, col("embedding"), centroids).sortWithinPartitions("list_id")
-    }
+    appendClustered(vectors, outPath, checkpoint, queryName, IvfSearch.identity(centroids))(
+      IvfSearch.index(_, col("embedding"), centroids))
 
   /** Streaming IVF-PQ index maintenance: per batch, coarse-assign AND
     * residual-encode arriving vectors against frozen centroids + codebooks

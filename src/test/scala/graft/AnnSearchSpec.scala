@@ -29,6 +29,12 @@ class AnnSearchSpec extends SparkSpec {
     assert(a.flatten.forall(x => x >= -1.0 && x < 1.0))
   }
 
+  test("planesHash: the fingerprint committed manifests store is fixed") {
+    // layouts on disk record this value as planes_hash; a fold that changed
+    // it would make every committed LSH layout fail its identity check
+    assert(AnnSearch.planesHash(AnnSearch.hyperplanes(8, 6)) == "f982275f0e38799b")
+  }
+
   test("probeBuckets: self plus Hamming-1 neighbors") {
     assert(AnnSearch.probeBuckets(0, 3).toSet == Set(0, 1, 2, 4))
     assert(AnnSearch.probeBuckets(5, 3).toSet == Set(5, 4, 7, 1))

@@ -520,6 +520,12 @@ class DedupSpec extends SparkSpec {
     assert(autoPlan.contains("graft_dot"),
       s"dense-vocab corpus must route to the grid strategy:\n$autoPlan")
     assert(collect(Dedup.tfCosinePairsAuto(dense, col("id"), col("text"), tau = 0.5)) == sparse)
+    // a vocabulary past maxVocab overflows the bounded collect: postings route
+    val capped = Dedup.tfCosinePairsAuto(dense, col("id"), col("text"), tau = 0.5, maxVocab = 2)
+    val cappedPlan = capped.queryExecution.executedPlan.toString
+    assert(!cappedPlan.contains("graft_dot"),
+      s"a vocabulary past maxVocab must stay on the postings join:\n$cappedPlan")
+    assert(collect(capped) == sparse)
     // globally-unique vocabularies (every df = 1) stay on the postings join
     val uniq = docs((1L to 8L).map(i => (i, s"u${i}a u${i}b u${i}c")): _*)
     val uniqPlan = Dedup.tfCosinePairsAuto(uniq, col("id"), col("text"), tau = 0.5)

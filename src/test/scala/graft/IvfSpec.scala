@@ -25,6 +25,16 @@ class IvfSpec extends SparkSpec {
     assert(lists.map(_.getLong(0)).forall(known.contains))
   }
 
+  test("centroidsHash: the fingerprint committed manifests store is fixed") {
+    // layouts on disk record this value as centroids_hash; a fold that
+    // changed it would make every committed IVF layout fail its identity check
+    import testImplicits._
+    val rnd = new scala.util.Random(11)
+    val frame = (0L until 12L).map(i => (i, Seq.fill(4)(rnd.nextFloat()))).toDF("id", "v")
+    val cents3 = IvfSearch.centroidsFromIds(frame, col("id"), col("v"), c = 3)
+    assert(IvfSearch.centroidsHash(cents3) == "7a9f67a8720373b5")
+  }
+
   test("a centroid's own vector is assigned to its list") {
     val indexed = IvfSearch.index(embs, col("embedding"), cents)
     val own = indexed.filter(col("vec_id") === 5L).select("list_id").head().getLong(0)

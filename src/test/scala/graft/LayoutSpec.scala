@@ -705,4 +705,28 @@ class LayoutSpec extends SparkSpec {
     }.toSet
     assert(gotNames == wantNames)
   }
+
+  test("the clustered-index format has one home: Layout clusters, LayoutManifest throws, one identity per index kind") {
+    // a second copy of the clustering, the missing-manifest throw or an
+    // identity prop can drift from the manifests already on disk
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"program sources not found under ${root.toAbsolutePath}")
+    val sources = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).sortBy(_._1)
+    val clustering = sources.collect {
+      case (p, s) if p.startsWith("operators/") && s.contains("repartitionByRange") => p }
+    assert(clustering.isEmpty, s"cluster through Layout.rangeCluster: $clustering")
+    val throwing = """LayoutManifest\s*\.\s*current\([^)]*\)\s*\.\s*getOrElse\(\s*throw""".r
+    val throwers = sources.collect {
+      case (p, s) if p != "sources/LayoutManifest.scala" && throwing.findFirstIn(s).nonEmpty => p }
+    assert(throwers.isEmpty, s"read a required manifest with LayoutManifest.committed: $throwers")
+    for (prop <- Seq("planes_hash", "centroids_hash")) {
+      val uses = sources.map { case (p, s) => p -> ("\"" + prop + "\"").r.findAllIn(s).size }
+        .filter(_._2 > 0)
+      assert(uses.map(_._2).sum == 1, s"$prop belongs to one identity definition: $uses")
+    }
+  }
 }
