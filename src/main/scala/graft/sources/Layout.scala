@@ -29,7 +29,10 @@ import org.apache.spark.sql.functions._
   *    and a 100k-task job whose tasks mostly read a footer and exit. The
   *    manifest is tiny (one entry per file) and lives on the driver, so
   *    every prune, delete and compaction decision over it is plain Scala,
-  *    not a job.
+  *    not a job. Reads prune there too: [[LayoutManifest.readData]]'s
+  *    scan asks its file index for files, and the index keeps only those
+  *    whose spans, and whose Parquet bloom on `id` (written by every
+  *    write here, through [[stageIn]]), can match the scan's filters.
   *  - COMPACTION: streaming ingest and fine-grained writes leave files far
   *    below the scan's `maxPartitionBytes`, and task-scheduling overhead
   *    then dominates reads. Compaction bin-packs by TOTAL BYTES (not file
@@ -106,8 +109,7 @@ object Layout {
     val keyed = df.withColumn("_zkey",
       mortonKey(scaleTo16(col(dimX), b.getLong(0), b.getLong(1)),
                 scaleTo16(col(dimY), b.getLong(2), b.getLong(3))))
-    rangeCluster(keyed, numFiles, "_zkey").drop("_zkey")
-      .write.mode("overwrite").parquet(path)
+    overwriteWith(rangeCluster(keyed, numFiles, "_zkey").drop("_zkey"), path, "zo")
   }
 
   /** `df` in `n` range partitions of `key`, sorted on it within each: the
@@ -248,16 +250,29 @@ object Layout {
           e.copy(stats = filled.getOrElse(e.name, Map.empty) ++ e.stats)))
     }
 
-  /** Phase 1 of every rewrite: write `df` to a dot-prefixed temp dir inside
-    * the layout, rename each part in as `<tag>_<name>`, drop the temp dir.
-    * The renamed files stay invisible orphans until a manifest commit lists
-    * them. Returns their names.
+  /** Phase 1 of every rewrite, and the one way this file writes layout
+    * data: write `df` to a dot-prefixed temp dir inside the layout, rename
+    * each part in as `<tag>_<name>`, drop the temp dir. The renamed files
+    * stay invisible orphans until a manifest commit lists them. When `df`
+    * has a top-level `id` column, each file carries a Parquet bloom filter
+    * on it, which the read's file index probes ([[FileFacts]]). Parquet
+    * sizes a bloom to a declared distinct count (1 MB when none is given);
+    * the adaptive writer instead keeps candidates from 1 MB halving down
+    * and stores the smallest that still fits the values it saw at 1 %
+    * false positives: 1 KB up to 500 rows (its floor), 16 KB at 10k.
+    * Returns the new files' names.
     */
   private def stageIn(df: DataFrame, path: String, prefix: String): Seq[String] = {
     val fs = LayoutManifest.fs(df.sparkSession, path)
     val tag = prefix + java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(path, s".stage_$tag")
-    df.write.parquet(tmp.toString)
+    val key = FileFacts.KeyColumn
+    val bloom = df.schema.find(_.name == key).exists(f => FileFacts.bloomable(f.dataType))
+    df.write.options(if (!bloom) Map.empty[String, String] else Map(
+        s"parquet.bloom.filter.enabled#$key" -> "true",
+        "parquet.bloom.filter.adaptive.enabled" -> "true", // applies to bloomed columns only
+        s"parquet.bloom.filter.candidates.number#$key" -> "16"))
+      .parquet(tmp.toString)
     val names = fs.listStatus(tmp).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map { s =>
@@ -267,6 +282,18 @@ object Layout {
       }
     fs.delete(tmp, true)
     names
+  }
+
+  /** Replace everything in the directory `path` with `df`'s files, staged
+    * in first ([[stageIn]]), so `df` may read `path` itself. Returns the
+    * number of files written.
+    */
+  private def overwriteWith(df: DataFrame, path: String, prefix: String): Int = {
+    val names = stageIn(df, path, prefix).toSet
+    val fs = LayoutManifest.fs(df.sparkSession, path)
+    fs.listStatus(new Path(path)).filterNot(s => names(s.getPath.getName))
+      .foreach(s => fs.delete(s.getPath, true))
+    names.size
   }
 
   /** Targeted row deletion (the GDPR/right-to-be-forgotten shape):
@@ -409,11 +436,9 @@ object Layout {
       }
       buf.toArray
     }
-    pack(Parquet.read(spark, inPath), parts.map(_.getLen).sum, targetBytes, clusterCol)
-      .write.mode("overwrite").parquet(outPath)
-    val after = fs.listStatus(new Path(outPath))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (parts.length, after)
+    (parts.length, overwriteWith(
+      pack(Parquet.read(spark, inPath), parts.map(_.getLen).sum, targetBytes, clusterCol),
+      outPath, "cp"))
   }
 
   /** Commit a v1 [[LayoutManifest]] over a freshly-written layout: one
@@ -443,14 +468,18 @@ object Layout {
     * (old files + ITS OWN new entries — the data files are already renamed
     * in and stay valid), and retries; a concurrent retry of the SAME batch
     * resolves to exactly one winner, the loser's files becoming
-    * gc-reclaimable orphans. Returns the appended row count (0 on a replay
-    * skip).
+    * gc-reclaimable orphans. With `index`, each manifest read is checked
+    * against that clustered index's identity first ([[ClusteredIndex.check]]),
+    * so a streaming append reads the manifest once per batch. Returns the
+    * appended row count (0 on a replay skip).
     */
   def appendCommitted(df: DataFrame, path: String,
-      batchId: Option[Long] = None): Long = {
+      batchId: Option[Long] = None, index: Option[ClusteredIndex] = None): Long = {
     val spark = df.sparkSession
-    def alreadySeen(s: LayoutManifest.Manifest): Boolean =
+    def alreadySeen(s: LayoutManifest.Manifest): Boolean = {
+      index.foreach(_.check(path, s))
       batchId.exists(b => s.props.get("last_batch_id").exists(_.toLong >= b))
+    }
     var snapshot = LayoutManifest.committed(spark, path)
     if (alreadySeen(snapshot)) return 0L
     val newNames = stageIn(df, path, "ap")
@@ -565,7 +594,7 @@ object Layout {
     */
   private[graft] def writeClustered(indexed: DataFrame, path: String,
       numFiles: Int, index: ClusteredIndex): Unit = {
-    rangeCluster(indexed, numFiles, index.key).write.mode("overwrite").parquet(path)
+    overwriteWith(rangeCluster(indexed, numFiles, index.key), path, "cw")
     commitLayout(indexed.sparkSession, path, Seq(index.key), index.props)
   }
 
@@ -579,7 +608,7 @@ object Layout {
       Seq(index.key), index.props)
 
   /** The committed manifest of a clustered index, checked against the
-    * caller's identity — what a probe read or a streaming append starts from.
+    * caller's identity — what a probe read starts from.
     */
   private[graft] def checkedManifest(spark: SparkSession, path: String,
       index: ClusteredIndex): LayoutManifest.Manifest = {

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -38,6 +39,12 @@ import scala.util.control.NonFatal
   * (LSH plane count/hash, IVF centroid hash) so a delete/search against a layout
   * written with DIFFERENT dials fails loudly instead of silently missing
   * rows ([[Layout.ClusteredIndex]] checks them).
+  *
+  * Reads: [[readData]]/[[readDataAt]] open exactly one version's files as
+  * a Parquet relation over a [[ManifestFileIndex]] (no listing, no
+  * inference job). The index drops, while Spark plans the scan, each file
+  * whose spans or whose `id` bloom prove it holds no matching row, and
+  * keeps every file it knows nothing about.
   *
   * Format: a tiny TSV (dependency-free, human-inspectable), one file per
   * version under `path/_graft/manifest-<version>.tsv`. The commit is the
@@ -82,6 +89,9 @@ object LayoutManifest {
 
   private def manifestDir(path: String): Path = new Path(path, SubDir)
 
+  private[graft] def manifestPath(path: String, version: Long): Path =
+    new Path(manifestDir(path), s"manifest-$version.tsv")
+
   private def versionOf(name: String): Option[Long] =
     if (name.startsWith("manifest-") && name.endsWith(".tsv"))
       scala.util.Try(
@@ -96,7 +106,7 @@ object LayoutManifest {
     val versions = f.listStatus(dir).toSeq
       .filter(_.isFile).flatMap(s => versionOf(s.getPath.getName))
     if (versions.isEmpty) None
-    else Some(read(f, new Path(dir, s"manifest-${versions.max}.tsv"), versions.max))
+    else Some(read(f, manifestPath(path, versions.max), versions.max))
   }
 
   /** [[current]] for operations that need a committed layout: throws when
@@ -181,7 +191,7 @@ object LayoutManifest {
     val f = fs(spark, path)
     val dir = manifestDir(path)
     f.mkdirs(dir)
-    val target = new Path(dir, s"manifest-${m.version}.tsv")
+    val target = manifestPath(path, m.version)
     val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
     val out = f.create(tmp, true)
     try out.write(serialize(m).getBytes("UTF-8"))
@@ -308,6 +318,7 @@ object LayoutManifest {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
     try {
+      FileFacts.remember(st, reader) // the read's schema footer and id bloom
       val footer = reader.getFooter
       val schema = footer.getFileMetaData.getSchema
       val blocks = footer.getBlocks.asScala.toSeq
@@ -360,22 +371,50 @@ object LayoutManifest {
 
   /** Read exactly the files the current manifest lists (the isolated-reader
     * contract: a rewrite in progress — new files renamed in but not yet
-    * committed — is invisible). Falls back to a plain directory read when no
-    * manifest exists (legacy layout).
+    * committed — is invisible).
+    *
+    * The DataFrame is a Parquet relation over a [[ManifestFileIndex]] of
+    * the listed files: no directory listing, no schema-inference job, and
+    * the schema from one footer the commit path usually cached already.
+    * When Spark plans the scan, the index keeps only the files that can
+    * match its filters: by manifest span for `=`, `IN` and ranges on
+    * integer stat columns, and by each file's Parquet bloom on `id` for
+    * `=` and `IN` (the blooms [[Layout]]'s writes store, cached on the
+    * driver at commit). A file with no span or no known bloom is always
+    * kept, so a lookup of an absent id over bloomed files runs no task.
+    * A layout with no manifest reads its flat directory of `.parquet`
+    * files the same way, unversioned and unpruned; any other directory
+    * shape throws (open it with [[Parquet.read]]).
     */
   def readData(spark: SparkSession, path: String): DataFrame =
     current(spark, path) match {
-      case Some(m) if m.files.nonEmpty =>
-        Parquet.read(spark, m.files.map(e => dataPath(path, e.name)): _*)
+      case Some(m) if m.files.nonEmpty => relation(spark, path, m)
       case Some(_) =>
         throw new IllegalStateException(s"manifest at $path lists no files")
-      case None => Parquet.read(spark, path)
+      case None =>
+        val files = Parquet.flatParquetFiles(Bridge.hadoopConf(spark), Seq(path))
+          .filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
+            s"no committed manifest at $path, and it is not a flat directory " +
+              "of .parquet files — open it with Parquet.read"))
+        relation(spark, ManifestFileIndex(path, None, files, Map.empty))
     }
+
+  /** The [[readData]] relation over the files of manifest `m`. */
+  private def relation(spark: SparkSession, path: String, m: Manifest): DataFrame = {
+    val f = fs(spark, path)
+    relation(spark, ManifestFileIndex(path, Some(m.version),
+      m.files.map(e => f.getFileStatus(new Path(path, e.name))),
+      m.files.map(e => e.name -> e.stats).toMap))
+  }
+
+  private def relation(spark: SparkSession, index: ManifestFileIndex): DataFrame =
+    Bridge.parquetRelation(spark, index,
+      FileFacts.schema(spark, index.files, Bridge.hadoopConf(spark)))
 
   /** A SPECIFIC committed version, if still retained. */
   def at(spark: SparkSession, path: String, version: Long): Option[Manifest] = {
     val f = fs(spark, path)
-    val p = new Path(manifestDir(path), s"manifest-$version.tsv")
+    val p = manifestPath(path, version)
     if (f.exists(p)) Some(read(f, p, version)) else None
   }
 
@@ -386,12 +425,12 @@ object LayoutManifest {
     * for versions [[gc]] retains: gc keeps the newest `keepManifests`
     * versions AND every data file any retained version references, so the
     * retention dial is exactly the time-travel horizon (Iceberg/Delta's
-    * expire-snapshots semantics). Throws if the version was expired.
+    * expire-snapshots semantics). Throws if the version was expired. The
+    * relation and its file pruning are [[readData]]'s.
     */
   def readDataAt(spark: SparkSession, path: String, version: Long): DataFrame =
     at(spark, path, version) match {
-      case Some(m) if m.files.nonEmpty =>
-        Parquet.read(spark, m.files.map(e => dataPath(path, e.name)): _*)
+      case Some(m) if m.files.nonEmpty => relation(spark, path, m)
       case Some(_) =>
         throw new IllegalStateException(
           s"manifest v$version at $path lists no files")

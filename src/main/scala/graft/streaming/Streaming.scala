@@ -336,9 +336,8 @@ object Streaming {
       queryName: String, index: Layout.ClusteredIndex)(
       assign: DataFrame => DataFrame): StreamingQuery =
     eachBatch(src, Some(queryName), checkpoint) { (batch, batchId) =>
-      Layout.checkedManifest(batch.sparkSession, outPath, index)
       Layout.appendCommitted(assign(batch).sortWithinPartitions(index.key), outPath,
-        batchId = Some(batchId))
+        batchId = Some(batchId), index = Some(index))
     }
 
   /** Streaming IVF index maintenance — the centroid-partitioned twin of

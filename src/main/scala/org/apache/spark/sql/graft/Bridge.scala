@@ -4,12 +4,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -40,12 +42,34 @@ object Bridge {
     * fields nullable, as every file-source relation reports them.
     */
   def parquetFileSchema(spark: SparkSession, file: FileStatus,
-      conf: Configuration): StructType = {
-    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      conf: Configuration): StructType =
+    parquetSchema(spark, file, parquetFooter(file, conf))
+
+  /** One Parquet file's footer without its row groups: what a schema needs. */
+  def parquetFooter(file: FileStatus, conf: Configuration): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
+
+  /** [[parquetFileSchema]] from a footer already read. */
+  def parquetSchema(spark: SparkSession, file: FileStatus,
+      meta: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf)).asNullable
-  }
+
+  /** Spark's own schema inference over `files` (one job), for the
+    * `mergeSchema` case a single footer cannot answer.
+    */
+  def inferParquetSchema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] =
+    new ParquetFileFormat().inferSchema(classic(spark), Map.empty, files)
+
+  /** A DataFrame over the Parquet files `index` lists, read under
+    * `dataSchema`: the relation `spark.read.parquet` builds, with the
+    * caller's index in place of a directory listing.
+    */
+  def parquetRelation(spark: SparkSession, index: FileIndex,
+      dataSchema: StructType): DataFrame =
+    Dataset.ofRows(classic(spark), LogicalRelation(HadoopFsRelation(index,
+      StructType(Nil), dataSchema, None, new ParquetFileFormat, Map.empty)(spark)))
 
   /** All rows of `df` if it has at most `cap` of them, else `None`: the
     * bounded collect a driver route decides with. One job inside a SQL
@@ -56,7 +80,8 @@ object Bridge {
     * plan's rows: Spark's codegen'd limit names its counter from a
     * process-wide sequence, so its code never repeats and every call would
     * compile anew. Rows reach the caller through the interpreted converter,
-    * as `collect()` returns them, with no generated deserializer.
+    * as `collect()` returns them, with no generated deserializer. A job
+    * cancelled past the cap ends with the reason [[overflowReason]].
     */
   def collectUpTo(df: DataFrame, cap: Int): Option[Array[Row]] = {
     require(cap >= 0, s"cap must be >= 0, got $cap")
@@ -86,9 +111,12 @@ object Bridge {
           Some(parts.flatMap(_.map(r => toRow(r).asInstanceOf[Row])))
         }
       } finally if (!job.isCompleted) {
-        job.cancel()
+        job.cancel(if (overflow.isCompleted) Some(overflowReason(cap)) else None)
         Await.ready(job, Duration.Inf)
       }
     }
   }
+
+  /** Why [[collectUpTo]] cancelled its job: the result passed `cap` rows. */
+  def overflowReason(cap: Int): String = s"collectUpTo: more than $cap rows"
 }

@@ -3,7 +3,7 @@ package graft
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.Testdata
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Bridge, JobCount, SucceededTasks}
+import org.apache.spark.sql.graft.{Bridge, JobCount, JobFailures, SucceededTasks}
 
 /** The bounded collect every driver route decides with
   * ([[Bridge.collectUpTo]]), and the jobs the routed operators run.
@@ -42,6 +42,17 @@ class DriverRouteSpec extends SparkSpec {
     val (got, done) = SucceededTasks(spark)(Bridge.collectUpTo(df, 0))
     assert(got.isEmpty)
     assert(done < 16, s"$done of 16 tasks ran")
+  }
+
+  test("collectUpTo: a job cancelled past the cap ends with a reason that names the cap") {
+    val slow = udf((id: Long) => { if (id > 0) Thread.sleep(300); id })
+    val df = spark.range(0, 16, 1, 16).select(slow(col("id")).as("id"))
+    val (got, failures) = JobFailures(spark)(Bridge.collectUpTo(df, 0))
+    assert(got.isEmpty)
+    assert(Bridge.overflowReason(0) == "collectUpTo: more than 0 rows")
+    assert(failures.size == 1 && failures.head.contains(Bridge.overflowReason(0)), failures)
+    // within the cap nothing is cancelled
+    assert(JobFailures(spark)(Bridge.collectUpTo(spark.range(0, 4, 1, 2).toDF("id"), 10))._2.isEmpty)
   }
 
   test("bpeMerges: 4 merges on the sf0.01 fixture construct in at most 2 jobs") {

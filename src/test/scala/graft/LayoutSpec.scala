@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JobCount
-import graft.sources.{Layout, LayoutManifest}
+import org.apache.spark.sql.graft.{Bridge, JobCount, SucceededTasks}
+import graft.sources.{Layout, LayoutManifest, VectorStore}
 
 class LayoutSpec extends SparkSpec {
 
@@ -728,5 +730,138 @@ class LayoutSpec extends SparkSpec {
         .filter(_._2 > 0)
       assert(uses.map(_._2).sum == 1, s"$prop belongs to one identity definition: $uses")
     }
+  }
+
+  // ---- the manifest-backed read: file index, spans and id blooms ----
+
+  /** `n` rows keyed `k`, with a string `id` ("v<k>") and a 2-d embedding. */
+  private def keyed(from: Long, n: Long): DataFrame =
+    spark.range(from, from + n).select(col("id").as("k"),
+      concat(lit("v"), col("id").cast("string")).as("id"),
+      array(col("id").cast("float"), lit(1f)).as("embedding"))
+
+  /** An 8-file layout clustered on `k`, every file written through Layout. */
+  private def bloomedLayout(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_index_$name").toString
+    keyed(0, 800).coalesce(1).write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(spark, dir, Seq("k"))
+    Layout.replaceLayout(spark, dir, Layout.rangeCluster(keyed(0, 800), 8, "k"),
+      Seq("k"), Map.empty)
+    val files = LayoutManifest.current(spark, dir).get.files
+    assert(files.size == 8)
+    // every file's bloom is cached at commit and sized to its ~100 rows,
+    // not to Parquet's 1 MB default
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    files.foreach { e =>
+      val bytes = graft.sources.FileFacts.bloom(
+        fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, e.name))).map(_.bytes)
+      assert(bytes.exists(b => b > 0 && b <= 1024), s"${e.name}: bloom of $bytes bytes")
+    }
+    dir
+  }
+
+  /** The one file scan of `df`'s executed plan. */
+  private def scanOf(df: DataFrame): FileSourceScanExec =
+    df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+
+  /** Rows of `df` and how many files its scan read. */
+  private def readFiles(df: DataFrame): (Long, Long) = {
+    val rows = df.collect().length.toLong
+    (rows, scanOf(df).metrics("numFiles").value)
+  }
+
+  test("manifest index: a present id reads one task, an absent id none, a duplicate still throws") {
+    val dir = bloomedLayout("lookup")
+    val (got, tasks) = SucceededTasks(spark)(
+      VectorStore(LayoutManifest.readData(spark, dir)).getVector("v437"))
+    assert(got.toSeq == Seq(437f, 1f))
+    assert(tasks == 1, s"a present-id lookup over 8 files ran $tasks tasks")
+    val (err, none) = SucceededTasks(spark)(intercept[NoSuchElementException](
+      VectorStore(LayoutManifest.readData(spark, dir)).getVector("v-absent")))
+    assert(err.getMessage == "Unique ID does not exist.")
+    assert(none == 0, s"an absent-id lookup ran $none tasks")
+    // the same id appended again lives in two bloomed files: both are kept
+    Layout.appendCommitted(keyed(437, 1), dir)
+    intercept[IllegalStateException](
+      VectorStore(LayoutManifest.readData(spark, dir)).getVector("v437"))
+  }
+
+  test("manifest index: files without a bloom are kept; a range on a stat column reads the spanning files") {
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_index_plain").toString
+    Layout.rangeCluster(keyed(0, 800), 8, "k").write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(sp, dir, Seq("k"))
+    val m = LayoutManifest.current(sp, dir).get
+    assert(m.files.size == 8)
+    // plain write.parquet stores no bloom: an id lookup reads every file
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("id") === "v437")) == ((1L, 8L)))
+    // the manifest spans prune a range, an IN list and an equality on `k`
+    val spanning = m.files.count { e => val (lo, hi) = e.stats("k"); lo <= 260 && hi >= 150 }
+    assert(spanning > 0 && spanning < 8)
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k").between(150, 260))) ==
+      ((111L, spanning.toLong)))
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k").isin(3, 4, 5))) == ((3L, 1L)))
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k") === 5000)) == ((0L, 0L)))
+    // a column the manifest holds no span for prunes nothing
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("embedding")(0) > 100f)) ==
+      ((699L, 8L)))
+  }
+
+  test("manifest index: a layout deleted and re-created at version 0 reads its new rows") {
+    // one file name, two contents: the caches are keyed by file identity,
+    // so the first layout's bloom can never prune the second's ids
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_index_recreate").toString
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), sp.sparkContext.hadoopConfiguration)
+    def create(from: Long, n: Long): Unit = {
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      val stage = java.nio.file.Files.createTempDirectory("graft_index_stage").toString + "/s"
+      keyed(from, n).coalesce(1).write.option("parquet.bloom.filter.enabled#id", "true")
+        .parquet(stage)
+      val part = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
+        .find(_.getPath.getName.endsWith(".parquet")).get.getPath
+      fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
+      assert(fs.rename(part, new org.apache.hadoop.fs.Path(dir, "data.parquet")))
+      assert(Layout.commitLayout(sp, dir, Seq("k")) == 0L)
+    }
+    create(0, 100)
+    assert(VectorStore(LayoutManifest.readData(sp, dir)).getVector("v7").toSeq == Seq(7f, 1f))
+    create(1000, 150)
+    val again = LayoutManifest.readData(sp, dir)
+    assert(again.count() == 150)
+    assert(VectorStore(again).getVector("v1007").toSeq == Seq(1007f, 1f))
+    intercept[NoSuchElementException](VectorStore(again).getVector("v7"))
+  }
+
+  test("manifest index: readData equals spark.read.parquet of the live files in schema, rows and size") {
+    val dir = bloomedLayout("equal")
+    Layout.appendCommitted(keyed(800, 40), dir)
+    val files = LayoutManifest.current(spark, dir).get.files
+      .map(e => LayoutManifest.dataPath(dir, e.name))
+    val ours = LayoutManifest.readData(spark, dir)
+    val theirs = spark.read.parquet(files: _*)
+    assert(ours.schema == theirs.schema)
+    assert(ours.collect().map(_.toString).sorted.toSeq == theirs.collect().map(_.toString).sorted.toSeq)
+    assert(ours.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      theirs.queryExecution.optimizedPlan.stats.sizeInBytes)
+    def paths(df: DataFrame) = df.inputFiles.map(f => new java.net.URI(f).getPath).toSet
+    assert(paths(ours) == paths(theirs) && paths(ours).size == files.size)
+  }
+
+  test("manifest index: explain names the layout, its version and live files; a lookup reads one file") {
+    val dir = bloomedLayout("explain")
+    val v = LayoutManifest.current(spark, dir).get.version
+    val lookup = LayoutManifest.readData(spark, dir).filter(col("id") === "v12").select("embedding")
+    val index = scanOf(lookup).relation.location
+    val manifest = LayoutManifest.manifestPath(dir, v)
+    assert(manifest.toString == s"$dir/_graft/manifest-$v.tsv")
+    assert(index.toString == s"ManifestFileIndex[$dir v$v, 8 files]")
+    assert(index.rootPaths.head == manifest)
+    val plan = lookup.queryExecution.explainString(FormattedMode)
+    assert(plan.contains(s"Location: ManifestFileIndex [$manifest, ... 8 entries]"), plan)
+    assert(Bridge.collectUpTo(lookup, 1).map(_.length).contains(1))
+    assert(scanOf(lookup).metrics("numFiles").value == 1)
   }
 }

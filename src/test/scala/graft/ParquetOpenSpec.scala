@@ -163,6 +163,33 @@ class ParquetOpenSpec extends SparkSpec {
       s"open Parquet with graft.sources.Parquet.read (no schema-inference job): $offenders")
   }
 
+  /** The bodies of `defs` in `source`, from each `def` to the next scaladoc. */
+  private def defBodies(source: String): Map[String, String] = {
+    val starts = """\n  (?:private(?:\[\w+\])? )?def (\w+)""".r.findAllMatchIn(source).toSeq
+    starts.map { m =>
+      val end = source.indexOf("\n  /**", m.end) match { case -1 => source.length; case i => i }
+      m.group(1) -> source.substring(m.start, end)
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  test("manifest reads build their relation from the manifest, never through spark.read") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/sources/LayoutManifest.scala"))
+    val bodies = defBodies(src)
+    val reading = """spark\s*\.\s*read\b|Parquet\s*\.\s*read\(""".r
+    Seq("readData", "readDataAt", "relation").foreach { d =>
+      val body = bodies.getOrElse(d, fail(s"LayoutManifest.$d not found"))
+      assert(reading.findFirstIn(body).isEmpty, s"LayoutManifest.$d opens through spark.read")
+    }
+  }
+
+  test("Layout writes layout data only through stageIn, so every committed file carries the id bloom") {
+    val src = Files.readString(Paths.get("src/main/scala/graft/sources/Layout.scala"))
+    val writers = defBodies(src).collect {
+      case (d, body) if """\.write\b""".r.findFirstIn(body).nonEmpty => d }.toSet
+    // the bloom sidecar lives under _graft/ and is not layout data
+    assert(writers == Set("stageIn", "writeSidecarDf"), s"writes outside stageIn: $writers")
+  }
+
   test("no program code under graft runs jobs below the Dataset API") {
     // the one bounded collect (org.apache.spark.sql.graft.Bridge.collectUpTo)
     // is the only place that executes a physical plan or submits a job itself

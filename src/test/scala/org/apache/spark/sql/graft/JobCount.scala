@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.Success
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs `body` starts from the calling thread. Jobs are
@@ -56,5 +56,25 @@ object SucceededTasks {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId) && e.reason == Success) n.incrementAndGet()
     })(body)
+  }
+}
+
+/** The failure messages of the jobs `body` starts from the calling thread
+  * that did not succeed (a cancelled job fails with its cancel reason),
+  * tagged and drained like [[JobCount]].
+  */
+object JobFailures {
+  def apply[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val (r, _) = JobCount.tagged(spark)((group, _) => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (JobCount.inGroup(e, group)) jobs.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = e.jobResult match {
+        case JobFailed(err) if jobs.contains(e.jobId) => failures.add(err.getMessage)
+        case _ =>
+      }
+    })(body)
+    (r, failures.toArray(Array.empty[String]).toSeq)
   }
 }
