@@ -161,7 +161,7 @@ private[graft] object FileFacts {
   }
 
   // bounds: footers by count (KBs each), blooms by their bytes
-  private val footers = new Lru[Key, ParquetMetadata](4096, _ => 1L)
+  private val footers = new Lru[Key, ParquetMetadata](1024, _ => 1L)
   private val blooms = new Lru[Key, IdBloom](64L << 20, _.bytes)
 
   def bloom(st: FileStatus): Option[IdBloom] = blooms.get(key(st))

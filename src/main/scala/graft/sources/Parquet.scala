@@ -14,8 +14,9 @@ import scala.util.control.NonFatal
   * (`mergeSchemasInParallel`) before any data is read, even for a single
   * file. Without `mergeSchema`, Spark's rule is "the first data file's
   * footer, in path order", so this reads that footer on the driver with
-  * Spark's own conversion ([[Bridge.parquetFileSchema]]) and opens the
-  * files under that schema: the same DataFrame, and no job.
+  * Spark's own conversion ([[FileFacts.schema]], which caches the footer by
+  * file identity) and opens the files under that schema: the same
+  * DataFrame, and no job.
   *
   * Spark's inference stays wherever the footer cannot reproduce it: input
   * that is not a flat file or flat directory of `.parquet` files
@@ -44,8 +45,7 @@ object Parquet {
     if (paths.isEmpty || spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) return None
     val conf = Bridge.hadoopConf(spark)
     flatParquetFiles(conf, paths).filter(_.nonEmpty).flatMap { files =>
-      val first = files.minBy(_.getPath.toString)
-      try Some(Bridge.parquetFileSchema(spark, first, conf))
+      try Some(FileFacts.schema(spark, files, conf))
       catch { case NonFatal(_) => None }
     }
   }

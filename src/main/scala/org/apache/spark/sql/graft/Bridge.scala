@@ -35,22 +35,17 @@ object Bridge {
   def hadoopConf(spark: SparkSession): Configuration =
     classic(spark).sessionState.newHadoopConf()
 
-  /** The Spark schema of one Parquet file, converted exactly as Spark's
-    * schema inference converts each footer: the session conf's
-    * binary-as-string, INT96, NTZ-inference and nanosAsLong rules, with the
-    * Spark row-metadata schema winning when the writer stored one. All
-    * fields nullable, as every file-source relation reports them.
-    */
-  def parquetFileSchema(spark: SparkSession, file: FileStatus,
-      conf: Configuration): StructType =
-    parquetSchema(spark, file, parquetFooter(file, conf))
-
   /** One Parquet file's footer without its row groups: what a schema needs. */
   def parquetFooter(file: FileStatus, conf: Configuration): ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
 
-  /** [[parquetFileSchema]] from a footer already read. */
+  /** The Spark schema of one Parquet file from its footer `meta`, converted
+    * exactly as Spark's schema inference converts each footer: the session
+    * conf's binary-as-string, INT96, NTZ-inference and nanosAsLong rules,
+    * with the Spark row-metadata schema winning when the writer stored one.
+    * All fields nullable, as every file-source relation reports them.
+    */
   def parquetSchema(spark: SparkSession, file: FileStatus,
       meta: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
