@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   *    and a 100k-task job whose tasks mostly read a footer and exit. The
   *    manifest is tiny (one entry per file) and lives on the driver, so
   *    every prune, delete and compaction decision over it is plain Scala,
-  *    not a job. Reads prune there too: [[LayoutManifest.readData]]'s
-  *    scan asks its file index for files, and the index keeps only those
-  *    whose spans, and whose Parquet bloom on `id` (written by every
-  *    write here, through [[stageIn]]), can match the scan's filters.
+  *    not a job. Span pruning is [[prunedRead]]'s and [[prunedReadIn]]'s.
+  *    Point reads prune in the scan itself: [[LayoutManifest.readData]]'s
+  *    file index keeps only the files whose Parquet bloom on `id` (written
+  *    by every write here, through [[stageIn]]) can hold a looked-up id.
   *  - COMPACTION: streaming ingest and fine-grained writes leave files far
   *    below the scan's `maxPartitionBytes`, and task-scheduling overhead
   *    then dominates reads. Compaction bin-packs by TOTAL BYTES (not file

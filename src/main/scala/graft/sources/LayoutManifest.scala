@@ -43,8 +43,8 @@ import scala.util.control.NonFatal
   * Reads: [[readData]]/[[readDataAt]] open exactly one version's files as
   * a Parquet relation over a [[ManifestFileIndex]] (no listing, no
   * inference job). The index drops, while Spark plans the scan, each file
-  * whose spans or whose `id` bloom prove it holds no matching row, and
-  * keeps every file it knows nothing about.
+  * whose `id` bloom proves it holds no looked-up id, and keeps every file
+  * it knows nothing about.
   *
   * Format: a tiny TSV (dependency-free, human-inspectable), one file per
   * version under `path/_graft/manifest-<version>.tsv`. The commit is the
@@ -371,45 +371,33 @@ object LayoutManifest {
 
   /** Read exactly the files the current manifest lists (the isolated-reader
     * contract: a rewrite in progress — new files renamed in but not yet
-    * committed — is invisible).
+    * committed — is invisible). Falls back to a plain directory read when no
+    * manifest exists (legacy layout).
     *
-    * The DataFrame is a Parquet relation over a [[ManifestFileIndex]] of
-    * the listed files: no directory listing, no schema-inference job, and
-    * the schema from one footer the commit path usually cached already.
-    * When Spark plans the scan, the index keeps only the files that can
-    * match its filters: by manifest span for `=`, `IN` and ranges on
-    * integer stat columns, and by each file's Parquet bloom on `id` for
-    * `=` and `IN` (the blooms [[Layout]]'s writes store, cached on the
-    * driver at commit). A file with no span or no known bloom is always
+    * With a manifest, the DataFrame is a Parquet relation over a
+    * [[ManifestFileIndex]] of the listed files: no directory listing, no
+    * schema-inference job, and the schema from one footer the commit path
+    * usually cached already. When Spark plans the scan, the index keeps
+    * only the files whose Parquet bloom on `id` can hold an `=` or `IN`
+    * value of the scan's filters (the blooms [[Layout]]'s writes store,
+    * cached on the driver at commit). A file with no known bloom is always
     * kept, so a lookup of an absent id over bloomed files runs no task.
-    * A layout with no manifest reads its flat directory of `.parquet`
-    * files the same way, unversioned and unpruned; any other directory
-    * shape throws (open it with [[Parquet.read]]).
     */
   def readData(spark: SparkSession, path: String): DataFrame =
     current(spark, path) match {
       case Some(m) if m.files.nonEmpty => relation(spark, path, m)
       case Some(_) =>
         throw new IllegalStateException(s"manifest at $path lists no files")
-      case None =>
-        val files = Parquet.flatParquetFiles(Bridge.hadoopConf(spark), Seq(path))
-          .filter(_.nonEmpty).getOrElse(throw new IllegalStateException(
-            s"no committed manifest at $path, and it is not a flat directory " +
-              "of .parquet files — open it with Parquet.read"))
-        relation(spark, ManifestFileIndex(path, None, files, Map.empty))
+      case None => Parquet.read(spark, path)
     }
 
   /** The [[readData]] relation over the files of manifest `m`. */
   private def relation(spark: SparkSession, path: String, m: Manifest): DataFrame = {
     val f = fs(spark, path)
-    relation(spark, ManifestFileIndex(path, Some(m.version),
-      m.files.map(e => f.getFileStatus(new Path(path, e.name))),
-      m.files.map(e => e.name -> e.stats).toMap))
+    val files = m.files.map(e => f.getFileStatus(new Path(path, e.name)))
+    Bridge.parquetRelation(spark, ManifestFileIndex(path, m.version, files),
+      FileFacts.schema(spark, files, Bridge.hadoopConf(spark)))
   }
-
-  private def relation(spark: SparkSession, index: ManifestFileIndex): DataFrame =
-    Bridge.parquetRelation(spark, index,
-      FileFacts.schema(spark, index.files, Bridge.hadoopConf(spark)))
 
   /** A SPECIFIC committed version, if still retained. */
   def at(spark: SparkSession, path: String, version: Long): Option[Manifest] = {

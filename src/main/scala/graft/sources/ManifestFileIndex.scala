@@ -22,25 +22,22 @@ import scala.util.control.NonFatal
 /** The file index of a [[LayoutManifest.readData]] scan: exactly the files
   * one manifest version lists, with their statuses, and no directory
   * listing. Spark calls [[listFiles]] with the scan's data filters while it
-  * plans the scan; a file is dropped only when it provably holds no
-  * matching row:
-  *  - the file's manifest span of an integer column excludes every value
-  *    of an `=`, `IN` or range predicate on it;
-  *  - the file's Parquet bloom on the key column `id` ([[FileFacts]])
-  *    rejects every value of an `=` or `IN` predicate.
-  * A file with no span or no known bloom is kept. A dropped file gets no
-  * task, and when every file is dropped the scan has no partitions.
+  * plans the scan; a file is dropped only when its Parquet bloom on the
+  * key column `id` ([[FileFacts]]) rejects every value of an `=` or `IN`
+  * predicate on `id`. A file with no known bloom is kept. A dropped file
+  * gets no task, and when every file is dropped the scan has no
+  * partitions. Span pruning stays with the callers that range over a stat
+  * column ([[Layout.prunedRead]], [[Layout.prunedReadIn]]).
   *
   * Spark prints the index as the scan's `Location`: the class name and
   * [[rootPaths]], which are the manifest file (naming layout and version)
   * followed by the live files (`... N entries` counts them).
   */
-private[sources] final case class ManifestFileIndex(layout: String,
-    version: Option[Long], files: Seq[FileStatus],
-    spans: Map[String, Map[String, (Long, Long)]]) extends FileIndex {
+private[sources] final case class ManifestFileIndex(layout: String, version: Long,
+    files: Seq[FileStatus]) extends FileIndex {
 
   override def rootPaths: Seq[Path] =
-    version.map(LayoutManifest.manifestPath(layout, _)).toSeq ++ files.map(_.getPath)
+    LayoutManifest.manifestPath(layout, version) +: files.map(_.getPath)
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
@@ -57,8 +54,7 @@ private[sources] final case class ManifestFileIndex(layout: String,
 
   override def partitionSchema: StructType = new StructType()
 
-  override def toString: String =
-    s"ManifestFileIndex[$layout ${version.fold("unversioned")(v => s"v$v")}, ${files.size} files]"
+  override def toString: String = s"ManifestFileIndex[$layout v$version, ${files.size} files]"
 
   /** False only when no row of `f` can satisfy `e`. */
   private def mayMatch(e: Expression, f: FileStatus): Boolean = e match {
@@ -69,48 +65,16 @@ private[sources] final case class ManifestFileIndex(layout: String,
     case In(a: Attribute, list) if list.forall(Value.unapply(_).isDefined) =>
       mayHold(f, a, list.flatMap(Value.unapply))
     case InSet(a: Attribute, set) => mayHold(f, a, set.toSeq.filter(_ != null))
-    case LessThan(a: Attribute, Value(v)) => within(f, a, v)((lo, _, x) => lo < x)
-    case LessThanOrEqual(a: Attribute, Value(v)) => within(f, a, v)((lo, _, x) => lo <= x)
-    case GreaterThan(a: Attribute, Value(v)) => within(f, a, v)((_, hi, x) => hi > x)
-    case GreaterThanOrEqual(a: Attribute, Value(v)) => within(f, a, v)((_, hi, x) => hi >= x)
-    case LessThan(Value(v), a: Attribute) => within(f, a, v)((_, hi, x) => hi > x)
-    case LessThanOrEqual(Value(v), a: Attribute) => within(f, a, v)((_, hi, x) => hi >= x)
-    case GreaterThan(Value(v), a: Attribute) => within(f, a, v)((lo, _, x) => lo < x)
-    case GreaterThanOrEqual(Value(v), a: Attribute) => within(f, a, v)((lo, _, x) => lo <= x)
     case _ => true
   }
 
-  /** Whether `f` may hold a row whose `a` is one of `values`. */
-  private def mayHold(f: FileStatus, a: Attribute, values: Seq[Any]): Boolean =
-    span(f, a).forall { case (lo, hi) =>
-      values.exists(v => integral(v).forall(x => lo <= x && x <= hi)) } &&
-      (a.name != FileFacts.KeyColumn ||
-        FileFacts.bloom(f).forall(b => values.exists(b.mightContain)))
-
-  private def within(f: FileStatus, a: Attribute, v: Any)(
-      ok: (Long, Long, Long) => Boolean): Boolean =
-    (span(f, a), integral(v)) match {
-      case (Some((lo, hi)), Some(x)) => ok(lo, hi, x)
-      case _ => true
-    }
-
-  /** The manifest span of `a` in `f`, for integer columns (whose spans are
-    * exact values; other types' spans are casts).
+  /** Whether `f` may hold a row whose `a` is one of `values`: the bloom
+    * answers only for `id` of a type the writer blooms, whose Spark values
+    * hash as the stored ones.
     */
-  private def span(f: FileStatus, a: Attribute): Option[(Long, Long)] =
-    a.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        spans.get(f.getPath.getName).flatMap(_.get(a.name))
-      case _ => None
-    }
-
-  private def integral(v: Any): Option[Long] = v match {
-    case x: java.lang.Long => Some(x)
-    case x: java.lang.Integer => Some(x.toLong)
-    case x: java.lang.Short => Some(x.toLong)
-    case x: java.lang.Byte => Some(x.toLong)
-    case _ => None
-  }
+  private def mayHold(f: FileStatus, a: Attribute, values: Seq[Any]): Boolean =
+    a.name != FileFacts.KeyColumn || !FileFacts.bloomable(a.dataType) ||
+      FileFacts.bloom(f).forall(b => values.exists(b.mightContain))
 
   /** A non-null constant of a predicate, as Spark's internal value. */
   private object Value {

@@ -787,7 +787,7 @@ class LayoutSpec extends SparkSpec {
       VectorStore(LayoutManifest.readData(spark, dir)).getVector("v437"))
   }
 
-  test("manifest index: files without a bloom are kept; a range on a stat column reads the spanning files") {
+  test("manifest index: files without a bloom are kept; prunedRead reads the files spanning a range") {
     val sp = spark
     val dir = java.nio.file.Files.createTempDirectory("graft_index_plain").toString
     Layout.rangeCluster(keyed(0, 800), 8, "k").write.mode("overwrite").parquet(dir)
@@ -796,16 +796,44 @@ class LayoutSpec extends SparkSpec {
     assert(m.files.size == 8)
     // plain write.parquet stores no bloom: an id lookup reads every file
     assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("id") === "v437")) == ((1L, 8L)))
-    // the manifest spans prune a range, an IN list and an equality on `k`
+    // the manifest spans prune a range in the one span pruner, prunedRead
     val spanning = m.files.count { e => val (lo, hi) = e.stats("k"); lo <= 260 && hi >= 150 }
     assert(spanning > 0 && spanning < 8)
-    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k").between(150, 260))) ==
+    assert(readFiles(Layout.prunedRead(sp, dir, m, "k", 150, 260).filter(col("k").between(150, 260))) ==
       ((111L, spanning.toLong)))
-    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k").isin(3, 4, 5))) == ((3L, 1L)))
-    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("k") === 5000)) == ((0L, 0L)))
-    // a column the manifest holds no span for prunes nothing
-    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("embedding")(0) > 100f)) ==
-      ((699L, 8L)))
+  }
+
+  test("manifest index: an id the writer does not bloom by its Spark value is never pruned") {
+    // a TIMESTAMP_MILLIS `id` is an INT64 column whose bloom hashes millis,
+    // while Spark's timestamp value is micros: probing it would drop the file
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_index_ts").toString
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val was = sp.conf.getOption(tsType)
+    sp.conf.set(tsType, "TIMESTAMP_MILLIS")
+    try sp.range(0, 40).select(col("id").as("k"), timestamp_seconds(col("id")).as("id"))
+      .coalesce(1).write.mode("overwrite").option("parquet.bloom.filter.enabled#id", "true")
+      .parquet(dir)
+    finally was.fold(sp.conf.unset(tsType))(sp.conf.set(tsType, _))
+    Layout.commitLayout(sp, dir, Seq("k"))
+    val file = LayoutManifest.current(sp, dir).get.files.head.name
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), sp.sparkContext.hadoopConfiguration)
+    assert(graft.sources.FileFacts.bloom(fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, file))).nonEmpty)
+    val ts = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(17))
+    assert(readFiles(LayoutManifest.readData(sp, dir).filter(col("id") === lit(ts))) == ((1L, 1L)))
+  }
+
+  test("readData: a layout with no manifest reads its directory through Parquet.read") {
+    val sp = spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_index_legacy").toString
+    keyed(0, 30).withColumn("part", col("k") % 3).write.mode("overwrite").partitionBy("part")
+      .parquet(dir)
+    val legacy = LayoutManifest.readData(sp, dir)
+    assert(legacy.count() == 30 && legacy.columns.contains("part"))
+    val missing = intercept[org.apache.spark.sql.AnalysisException](
+      LayoutManifest.readData(sp, s"$dir/absent"))
+    assert(missing.getMessage.contains("PATH_NOT_FOUND"), missing.getMessage)
   }
 
   test("manifest index: a layout deleted and re-created at version 0 reads its new rows") {

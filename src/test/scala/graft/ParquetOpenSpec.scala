@@ -176,10 +176,17 @@ class ParquetOpenSpec extends SparkSpec {
     val src = Files.readString(Paths.get("src/main/scala/graft/sources/LayoutManifest.scala"))
     val bodies = defBodies(src)
     val reading = """spark\s*\.\s*read\b|Parquet\s*\.\s*read\(""".r
-    Seq("readData", "readDataAt", "relation").foreach { d =>
-      val body = bodies.getOrElse(d, fail(s"LayoutManifest.$d not found"))
-      assert(reading.findFirstIn(body).isEmpty, s"LayoutManifest.$d opens through spark.read")
+    def body(d: String) = bodies.getOrElse(d, fail(s"LayoutManifest.$d not found"))
+    // a committed manifest's files are opened only by `relation`
+    Seq("readData", "readDataAt").foreach { d =>
+      assert(body(d).linesIterator.exists(_.trim == "case Some(m) if m.files.nonEmpty => relation(spark, path, m)"),
+        s"LayoutManifest.$d opens a manifest's files other than through relation")
     }
+    assert(reading.findFirstIn(body("relation")).isEmpty, "LayoutManifest.relation opens through spark.read")
+    assert(reading.findFirstIn(body("readDataAt")).isEmpty, "LayoutManifest.readDataAt opens through spark.read")
+    // the one directory read is readData's fallback for a layout with no manifest
+    val fallback = body("readData").linesIterator.filter(l => reading.findFirstIn(l).nonEmpty).map(_.trim).toSeq
+    assert(fallback == Seq("case None => Parquet.read(spark, path)"), fallback)
   }
 
   test("Layout writes layout data only through stageIn, so every committed file carries the id bloom") {
