@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{InSet, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+
+import scala.collection.immutable.HashSet
 
 /** A per-request constant that generated code reads from the plan's
   * `references` array instead of spelling it into the Java source.
@@ -53,4 +55,15 @@ case class BoundParam(value: Any, dataType: DataType) extends LeafExpression {
 object BoundParam {
   def param(v: Double): Column = Bridge.column(BoundParam(v, DoubleType))
   def param(v: Long): Column = Bridge.column(BoundParam(v, LongType))
+
+  /** `c` (cast to `long`) is one of `values`, as an `InSet`: Parquet pushes
+    * it down and prunes partitions as it does `isin`'s `In`, but generated
+    * code reads the set from the plan's references, where `In` spells every
+    * value into the code. The set is always a `HashSet`: the code casts the
+    * reference to the set's class, and `toSet` gives sets of up to 4
+    * values classes of their own (`Set1`..`Set4`). So a new value set, of
+    * any size, compiles nothing. Null when `c` is null.
+    */
+  def longIn(c: Column, values: Iterable[Long]): Column =
+    Bridge.column(InSet(Bridge.expression(c.cast(LongType)), HashSet.from[Any](values)))
 }

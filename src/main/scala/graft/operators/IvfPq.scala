@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
+import graft.functions.BoundParam
 import graft.functions.BoundParam.param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -146,7 +147,7 @@ object IvfPq {
           Pq.adcCol(col("pq_codes"), lutFlat, cb.ks) + param(n2))
     }
     indexed
-      .filter(IvfSearch.probeFilter(col("list_id"), probes))
+      .filter(BoundParam.longIn(col("list_id"), probes))
       .withColumn("adist", adist)
       .withColumn("id", id)
       .orderBy(asc("adist"), asc("id"))

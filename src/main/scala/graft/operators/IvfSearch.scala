@@ -1,12 +1,9 @@
 package graft.operators
 
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{BoundParam, VectorFunctions => VF}
 import graft.sources.{Layout, LayoutManifest}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.LongType
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
   * centroid-partitioned scale path complementing sign-LSH ([[AnnSearch]]).
@@ -108,15 +105,6 @@ object IvfSearch {
       (ct.normSq - 2.0 * acc, ct.cid)
     }.sorted.take(nprobe).map(_._2)
 
-  /** Row filter to the probed lists, as an `InSet` over `long` ids: Parquet
-    * pushes it down and prunes `list_id` partitions as it does `isin`'s
-    * `In`, but generated code reads the set from the plan's references,
-    * where `In` spells every id into the code. So a new probe set compiles
-    * nothing.
-    */
-  def probeFilter(listId: Column, probes: Seq[Long]): Column =
-    Bridge.column(InSet(Bridge.expression(listId.cast(LongType)), probes.toSet[Any]))
-
   /** Approximate top-k: prune to the probed inverted lists, exact cosine
     * ranking inside them (TakeOrderedAndProject — no global sort).
     */
@@ -130,7 +118,7 @@ object IvfSearch {
       nprobe: Int = 4): DataFrame = {
     val probes = probeLists(query, centroids, nprobe)
     indexed
-      .filter(probeFilter(col("list_id"), probes))
+      .filter(BoundParam.longIn(col("list_id"), probes))
       .withColumn("score", VF.cosineTo(vec, query))
       .select(id.as("id"), col("score"))
       .orderBy(desc("score"), asc("id"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Physical-layout operators — Z-order clustering, zone-map (per-file
   * min/max) manifests with planning-time file pruning, and small-file
@@ -253,26 +254,20 @@ object Layout {
   /** Phase 1 of every rewrite, and the one way this file writes layout
     * data: write `df` to a dot-prefixed temp dir inside the layout, rename
     * each part in as `<tag>_<name>`, drop the temp dir. The renamed files
-    * stay invisible orphans until a manifest commit lists them. When `df`
-    * has a top-level `id` column, each file carries a Parquet bloom filter
-    * on it, which the read's file index probes ([[FileFacts]]). Parquet
-    * sizes a bloom to a declared distinct count (1 MB when none is given);
-    * the adaptive writer instead keeps candidates from 1 MB halving down
-    * and stores the smallest that still fits the values it saw at 1 %
-    * false positives: 1 KB up to 500 rows (its floor), 16 KB at 10k.
-    * Returns the new files' names.
+    * stay invisible orphans until a manifest commit lists them. The write
+    * takes [[Parquet.writeOptions]] with the key: a top-level `id` column
+    * gets a Parquet bloom filter, which the read's file index probes
+    * ([[FileFacts]]), and neither `id` nor the elements of vector columns
+    * are dictionary-encoded. Parquet would drop those dictionaries at the
+    * first page anyway (unique ids, barely repeating floats) and write the
+    * values PLAIN, so on store data the files are byte-identical and only
+    * the encoding CPU is saved. Returns the new files' names.
     */
   private def stageIn(df: DataFrame, path: String, prefix: String): Seq[String] = {
     val fs = LayoutManifest.fs(df.sparkSession, path)
     val tag = prefix + java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(path, s".stage_$tag")
-    val key = FileFacts.KeyColumn
-    val bloom = df.schema.find(_.name == key).exists(f => FileFacts.bloomable(f.dataType))
-    df.write.options(if (!bloom) Map.empty[String, String] else Map(
-        s"parquet.bloom.filter.enabled#$key" -> "true",
-        "parquet.bloom.filter.adaptive.enabled" -> "true", // applies to bloomed columns only
-        s"parquet.bloom.filter.candidates.number#$key" -> "16"))
-      .parquet(tmp.toString)
+    df.write.options(Parquet.writeOptions(df, keyed = true)).parquet(tmp.toString)
     val names = fs.listStatus(tmp).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map { s =>
@@ -303,24 +298,72 @@ object Layout {
     * id-clustered layout — the full-table rewrite (or full anti-join
     * rewrite) this replaces is ~six orders of magnitude more IO.
     *
-    * Mechanics: [[deleteRowsIn]] on the id column itself. The tombstone
-    * ids are collected once (the rewrite broadcasts them anyway, so they
-    * are driver-sized) and pruned by membership in each file's span; the
-    * affected files alone are read, anti-joined against the
-    * broadcast tombstones, and swapped in via the [[LayoutManifest]] commit
-    * protocol (see [[rewriteWithout]]): no crash point loses a surviving
-    * row, and a concurrent manifest reader sees either the old or the new
-    * complete file set, never a mix.
+    * Mechanics: the tombstone ids are taken to the driver, up to
+    * [[TombstoneCap]] rows ([[heldIds]]), and pruned by membership in each
+    * file's span; the affected files alone are read, filtered by the held
+    * ids (no join, so the rewrite is one write job), and swapped in via
+    * the [[LayoutManifest]] commit protocol (see [[rewriteWithout]]): no
+    * crash point loses a surviving row, and a concurrent manifest reader
+    * sees either the old or the new complete file set, never a mix. Past
+    * the cap, every file is rewritten through a broadcast anti-join with
+    * the tombstones. Rows with a null `idCol` survive either way.
     * Returns (filesTotal, filesRewritten, rowsDeleted).
     */
   def deleteRows(spark: SparkSession, path: String, idCol: String,
-                 tombstones: DataFrame): (Int, Int, Long) = {
-    // deduplicated by the membership prune; a local tombstone frame
-    // collects with no job
-    val ids = tombstones.select(tombstones(tombstones.columns.head).cast("long"))
-      .collect().collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSeq
-    deleteRowsIn(spark, path, idCol, ids, idCol, tombstones)
+                 tombstones: DataFrame): (Int, Int, Long) =
+    deleteRowsUpTo(spark, path, idCol, tombstones, TombstoneCap)
+
+  /** [[deleteRows]] with the tombstone cap as a parameter, so the past-cap
+    * route can be exercised on small data.
+    */
+  private[graft] def deleteRowsUpTo(spark: SparkSession, path: String, idCol: String,
+      tombstones: DataFrame, cap: Int): (Int, Int, Long) = {
+    val snap = snapshot(spark, path, Seq(idCol))
+    val (affected, survivors) = deletePlan(snap, idCol, tombstones, cap)(ids =>
+      filesSpanning(snap, idCol, ids.toSeq))
+    rewriteWithout(spark, path, snap, affected, idCol, survivors)
   }
+
+  /** The most tombstone rows a delete takes to the driver: 1M longs, ~8 MB
+    * as the rows arrive, a few tens of MB as the filter's hash set. A
+    * larger delete rewrites every file through a broadcast anti-join.
+    */
+  private[graft] val TombstoneCap: Int = 1 << 20
+
+  /** The non-null ids of `tombstones`' first column as longs, or None when
+    * it has more than `cap` rows. A local frame is already on the driver
+    * and collects with no job; any other goes through [[Bridge.collectUpTo]].
+    */
+  private def heldIds(tombstones: DataFrame, cap: Int): Option[Set[Long]] = {
+    val ids = tombstones.select(tombstones(tombstones.columns.head).cast("long"))
+    val rows =
+      if (Bridge.isLocal(ids)) Some(ids.collect()).filter(_.length <= cap)
+      else Bridge.collectUpTo(ids, cap)
+    rows.map(_.collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet)
+  }
+
+  /** What a delete by `tombstones` rewrites, and how it keeps a file's
+    * surviving rows. With the ids held ([[heldIds]]): the files `prune`
+    * names, filtered by `NOT coalesce(idCol IN ids, false)`, an `InSet`
+    * that generated code reads as a reference, so a new id set compiles
+    * nothing, and a null id survives as it does under the anti-join. Past
+    * `cap`: every file, anti-joined with the broadcast tombstones.
+    */
+  private def deletePlan(snap: LayoutManifest.Manifest, idCol: String,
+      tombstones: DataFrame, cap: Int)(prune: Set[Long] => Seq[LayoutManifest.FileEntry])
+      : (Seq[LayoutManifest.FileEntry], DataFrame => DataFrame) =
+    heldIds(tombstones, cap) match {
+      case Some(ids) => (prune(ids), _.filter(
+        !coalesce(graft.functions.BoundParam.longIn(col(idCol), ids), lit(false))))
+      case None => (snap.files, antiJoin(idCol, tombstones))
+    }
+
+  /** Survivors of a rewrite: the rows whose `idCol` is not among the
+    * tombstones' first column, through a broadcast left anti-join.
+    */
+  private[graft] def antiJoin(idCol: String, tombstones: DataFrame): DataFrame => DataFrame =
+    _.join(broadcast(tombstones.select(tombstones(tombstones.columns.head).cast("long").as(idCol))
+      .distinct()), Seq(idCol), "left_anti")
 
   /** Targeted deletion on a layout CLUSTERED BY A DIFFERENT COLUMN than
     * the delete key — the ANN-index forget shape
@@ -330,22 +373,24 @@ object Layout {
     * rewrite everything. The caller resolves the tombstones' CLUSTER values
     * (`clusterValues` — a pure function of the vector, or a lookup against
     * the id-clustered primary store) and files are pruned by MEMBERSHIP of
-    * those values in each file's span; the rewrite then anti-joins on the
-    * true id column as usual. Spans come from the write-path snapshot: the
-    * committed manifest (no scan), or a bootstrap when none is committed.
+    * those values in each file's span; the rewrite then anti-joins the
+    * distributed tombstones on the true id column. Spans come from the
+    * write-path snapshot: the committed manifest (no scan), or a bootstrap
+    * when none is committed.
     */
   def deleteRowsIn(spark: SparkSession, path: String, clusterCol: String,
                    clusterValues: Seq[Long], idCol: String,
                    tombstones: DataFrame): (Int, Int, Long) = {
     val snap = snapshot(spark, path, Seq(clusterCol))
     rewriteWithout(spark, path, snap, filesSpanning(snap, clusterCol, clusterValues),
-      idCol, tombstones)
+      idCol, antiJoin(idCol, tombstones))
   }
 
   /** Shared delete mechanics under the [[LayoutManifest]] commit protocol.
     * Phases, in crash-safety order:
-    *  1. read ONLY `affected`, anti-join the broadcast tombstones on
-    *     `idCol`, write the survivors to a dot-prefixed temp dir, rename
+    *  1. read ONLY `affected`, keep the rows `survivors` keeps (a filter
+    *     by held ids or a tombstone anti-join on `idCol`), write them to a
+    *     dot-prefixed temp dir, rename
     *     them into the layout dir under fresh unique names. A crash here
     *     leaves the old manifest pointing at the intact old files — the new
     *     names are orphans [[LayoutManifest.gc]] reclaims; NOTHING has been
@@ -369,18 +414,15 @@ object Layout {
   private[graft] def rewriteWithout(spark: SparkSession, path: String,
       snapshot: LayoutManifest.Manifest,
       affected: Seq[LayoutManifest.FileEntry], idCol: String,
-      tombstones: DataFrame, crashPoint: Int = 0): (Int, Int, Long) = {
-    val tsCol = tombstones.columns.head
+      survivors: DataFrame => DataFrame, crashPoint: Int = 0): (Int, Int, Long) = {
     val total = snapshot.files.size
     if (affected.isEmpty) return (total, 0, 0L)
     val gone = affected.map(_.name).toSet
     // the manifest already carries exact per-file row counts — summing the
     // affected entries replaces a COUNT read of the affected files
     val nBefore = affected.map(_.rows).sum
-    val kept = Parquet.read(spark,
-        affected.map(e => LayoutManifest.dataPath(path, e.name)): _*)
-      .join(broadcast(tombstones.select(tombstones(tsCol).cast("long").as(idCol))
-        .distinct()), Seq(idCol), "left_anti")
+    val kept = survivors(Parquet.read(spark,
+      affected.map(e => LayoutManifest.dataPath(path, e.name)): _*))
     // phase 1, at the affected-file granularity (no global shuffle)
     val newNames = stageIn(kept.coalesce(affected.size), path, "rw")
     if (crashPoint == 1) return (total, affected.size, -1L)
@@ -736,17 +778,19 @@ object Layout {
         s"no bloom sidecar for v${m.version}/$colName at $path — run " +
           "writeBloomSidecar after the last commit"))
     val fps = values.distinct.map(graft.functions.Bloom.mix64).toArray
-    val hit = org.apache.spark.sql.graft.Bridge.column(
+    val hit = Bridge.column(
       graft.functions.BloomAnyMightContainExpr(
-        org.apache.spark.sql.graft.Bridge.expression(col("words")),
-        org.apache.spark.sql.graft.Bridge.expression(col("k")), fps))
+        Bridge.expression(col("words")),
+        Bridge.expression(col("k")), fps))
     side.filter(hit).select("file").collect()
       .map(r => LayoutManifest.dataPath(path, r.getString(0)))
   }
 
   /** Targeted deletion by BARE IDS on a layout where id spans cannot prune
-    * (clustered by another column): bloom-sidecar membership names the
-    * candidate files (≈ |hit files| + fpp·F), only those are rewritten, and
+    * (clustered by another column): bloom-sidecar membership of the held
+    * ids ([[heldIds]], up to [[TombstoneCap]] rows) names the candidate
+    * files (≈ |hit files| + fpp·F), only those are rewritten (past the cap,
+    * all of them, as in [[deleteRows]]), and
     * the sidecar is maintained INCREMENTALLY for the new version — one
     * bloom pass over just the rewritten files, untouched files' rows carry
     * over. Returns (filesTotal, filesRewritten, rowsDeleted).
@@ -754,12 +798,11 @@ object Layout {
   def deleteRowsBloom(spark: SparkSession, path: String, idCol: String,
       tombstones: DataFrame, fpp: Double = 0.01): (Int, Int, Long) = {
     val snapshot = LayoutManifest.committed(spark, path)
-    val tsCol = tombstones.columns.head
-    val ids = tombstones.select(tombstones(tsCol).cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val hit = bloomPrunedFiles(spark, path, idCol, ids).map(f => new Path(f).getName).toSet
-    val affected = snapshot.files.filter(e => hit(e.name))
-    val result = rewriteWithout(spark, path, snapshot, affected, idCol, tombstones)
+    val (affected, survivors) = deletePlan(snapshot, idCol, tombstones, TombstoneCap) { ids =>
+      val hit = bloomPrunedFiles(spark, path, idCol, ids.toSeq).map(f => new Path(f).getName).toSet
+      snapshot.files.filter(e => hit(e.name))
+    }
+    val result = rewriteWithout(spark, path, snapshot, affected, idCol, survivors)
     if (affected.nonEmpty) {
       // maintain the sidecar at the NEW version: re-bloom only the
       // rewritten files; every untouched file's row carries over WITHOUT

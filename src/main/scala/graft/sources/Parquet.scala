@@ -4,8 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructType}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** The one way the engine opens Parquet.
@@ -48,6 +49,46 @@ object Parquet {
       try Some(FileFacts.schema(spark, files, conf))
       catch { case NonFatal(_) => None }
     }
+  }
+
+  /** The writer options of an engine write of `df`, the one place the
+    * engine decides how Parquet encodes what it writes.
+    *
+    * Vector elements (the float/double leaf of every top-level
+    * `ARRAY<FLOAT|DOUBLE>` column, `embedding.list.element`) skip the
+    * dictionary. Parquet would otherwise hash every value into one and, on
+    * vectors whose values barely repeat, drop it at the first page, when
+    * it fails the compression check (or passes 1 MB), and re-encode the
+    * buffered values as PLAIN: the same bytes, after a hashing pass that
+    * only costs CPU. The leaf paths come from
+    * Spark's own write schema, so `writeLegacyFormat`'s spellings match.
+    *
+    * With `keyed`, a top-level key column `id` of a type the read's file
+    * index can probe ([[FileFacts.bloomable]]) also skips the dictionary
+    * (its values are unique in a layout, so Parquet drops that one too) and
+    * gets a Parquet bloom filter. Parquet sizes a bloom to a declared
+    * distinct count (1 MB when none is given); the adaptive writer instead
+    * keeps candidates from 1 MB halving down and stores the smallest that
+    * still fits the values it saw at 1 % false positives: 1 KB up to 500
+    * rows (its floor), 16 KB at 10k. Writes whose ids repeat (the
+    * streaming upsert log) pass `keyed = false`.
+    */
+  def writeOptions(df: DataFrame, keyed: Boolean): Map[String, String] = {
+    val vectors = df.schema.fields.filter(_.dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }).map(_.name).toSet
+    val leaves = if (vectors.isEmpty) Nil
+      else Bridge.parquetWriteSchema(df.sparkSession, df.schema).getColumns.asScala
+        .map(_.getPath).filter(p => vectors(p.head)).map(_.mkString("."))
+    val key = FileFacts.KeyColumn
+    val bloomed = keyed && df.schema.find(_.name == key).exists(f => FileFacts.bloomable(f.dataType))
+    val bloom = if (!bloomed) Map.empty[String, String] else Map(
+      s"parquet.bloom.filter.enabled#$key" -> "true",
+      "parquet.bloom.filter.adaptive.enabled" -> "true", // applies to bloomed columns only
+      s"parquet.bloom.filter.candidates.number#$key" -> "16")
+    bloom ++ (leaves ++ (if (bloomed) Seq(key) else Nil))
+      .map(p => s"parquet.enable.dictionary#$p" -> "false")
   }
 
   /** Names Spark's file listing skips (InMemoryFileIndex's hidden rule). */

@@ -108,10 +108,14 @@ final case class VectorStore(df: DataFrame) {
 
   /** Persist (reference `persist_to_disk`, vector_database.py:538-548);
     * `shardSize` mirrors the sharded variants' rows-per-pickle
-    * (sharded_vector_database.py:9) as a Parquet file-sizing knob.
+    * (sharded_vector_database.py:9) as a Parquet file-sizing knob. The
+    * embedding's elements skip Parquet's dictionary
+    * ([[Parquet.writeOptions]]); `id` gets no bloom, a store file is not a
+    * manifest layout's.
     */
   def persist(path: String, shardSize: Int = 5000): Unit =
-    df.write.mode("overwrite").option("maxRecordsPerFile", shardSize.toLong).parquet(path)
+    df.write.mode("overwrite").option("maxRecordsPerFile", shardSize.toLong)
+      .options(Parquet.writeOptions(df, keyed = false)).parquet(path)
 }
 
 object VectorStore {

@@ -44,10 +44,13 @@ object Streaming {
     queryName.fold(w)(w.queryName).foreachBatch(f).start()
   }
 
-  /** The idempotent batch write of the sink contract above. */
+  /** The idempotent batch write of the sink contract above. Vector
+    * elements skip Parquet's dictionary ([[Parquet.writeOptions]]); ids get
+    * no bloom, since a sink's batches may repeat them.
+    */
   private def overwriteBatch(df: DataFrame, batchId: Long, path: String, leading: String*): Unit =
     df.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
+      .write.options(Parquet.writeOptions(df, keyed = false)).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(leading :+ "batch_id": _*)
       .parquet(path)

@@ -6,13 +6,15 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
@@ -51,6 +53,12 @@ object Bridge {
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       new ParquetToSparkSchemaConverter(classic(spark).sessionState.conf)).asNullable
 
+  /** The Parquet schema Spark's writer gives `schema` under the session's
+    * conf (`writeLegacyFormat` decides how arrays and maps are spelled).
+    */
+  def parquetWriteSchema(spark: SparkSession, schema: StructType): MessageType =
+    new SparkToParquetSchemaConverter(classic(spark).sessionState.conf).convert(schema)
+
   /** Spark's own schema inference over `files` (one job), for the
     * `mergeSchema` case a single footer cannot answer.
     */
@@ -65,6 +73,13 @@ object Bridge {
       dataSchema: StructType): DataFrame =
     Dataset.ofRows(classic(spark), LogicalRelation(HadoopFsRelation(index,
       StructType(Nil), dataSchema, None, new ParquetFileFormat, Map.empty)(spark)))
+
+  /** Whether `df` optimizes to rows already on the driver, so `collect()`
+    * returns them without a job (`Dataset.isLocal` sees only an
+    * unoptimized `LocalRelation`, not one under `toDF`'s renames).
+    */
+  def isLocal(df: DataFrame): Boolean =
+    df.asInstanceOf[Dataset[_]].queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** All rows of `df` if it has at most `cap` of them, else `None`: the
     * bounded collect a driver route decides with. One job inside a SQL

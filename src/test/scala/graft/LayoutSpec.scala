@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{Bridge, JobCount, SucceededTasks}
 import graft.sources.{Layout, LayoutManifest, VectorStore}
+
+import scala.jdk.CollectionConverters._
 
 class LayoutSpec extends SparkSpec {
 
@@ -227,8 +232,8 @@ class LayoutSpec extends SparkSpec {
 
     // ---- crash AFTER phase 1 (new files renamed in, manifest NOT committed)
     val snap0 = LayoutManifest.current(sp, dir).get
-    Layout.rewriteWithout(sp, dir, snap0, affectedOf(snap0), "doc_id", tomb,
-      crashPoint = 1)
+    Layout.rewriteWithout(sp, dir, snap0, affectedOf(snap0), "doc_id",
+      Layout.antiJoin("doc_id", tomb), crashPoint = 1)
     // the manifest reader sees the OLD COMPLETE table: nothing deleted, nothing lost
     assert(LayoutManifest.readData(sp, dir).count() == n)
     assert(LayoutManifest.readData(sp, dir)
@@ -241,7 +246,7 @@ class LayoutSpec extends SparkSpec {
     // ---- crash AFTER phase 2 (manifest committed, superseded files not GC'd)
     val snap1 = LayoutManifest.current(sp, dir).get
     val (_, rewritten, deleted) = Layout.rewriteWithout(sp, dir, snap1,
-      affectedOf(snap1), "doc_id", tomb, crashPoint = 2)
+      affectedOf(snap1), "doc_id", Layout.antiJoin("doc_id", tomb), crashPoint = 2)
     assert(rewritten >= 1 && deleted == 10L)
     // the manifest reader sees the NEW complete table: survivors only, no dupes
     val after = LayoutManifest.readData(sp, dir)
@@ -891,5 +896,134 @@ class LayoutSpec extends SparkSpec {
     assert(plan.contains(s"Location: ManifestFileIndex [$manifest, ... 8 entries]"), plan)
     assert(Bridge.collectUpTo(lookup, 1).map(_.length).contains(1))
     assert(scanOf(lookup).metrics("numFiles").value == 1)
+  }
+
+  // ---- write encoding: vector elements and the key skip the dictionary ----
+
+  /** (every leaf column path, the paths whose chunks have a dictionary page) of `file`. */
+  private def dictionaryPages(file: String): (Set[String], Set[String]) = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file), spark.sparkContext.hadoopConfiguration))
+    try {
+      val chunks = r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      (chunks.map(_.getPath.toDotString).toSet,
+        chunks.filter(_.hasDictionaryPage).map(_.getPath.toDotString).toSet)
+    } finally r.close()
+  }
+
+  /** `df` in one partition appended through appendCommitted to a fresh
+    * layout committed over one row of it; the appended file.
+    */
+  private def appendedFile(name: String, df: DataFrame): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_enc_$name").toString
+    df.limit(1).write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(spark, dir, Seq("k"))
+    Layout.appendCommitted(df.coalesce(1), dir)
+    val added = LayoutManifest.current(spark, dir).get.files.map(_.name).filter(_.startsWith("ap"))
+    assert(added.size == 1, s"appended files: $added")
+    LayoutManifest.dataPath(dir, added.head)
+  }
+
+  /** 1k rows over 8 distinct `embedding` vectors and 10 distinct ids: values
+    * that repeat enough for Parquet to keep a dictionary of its own accord.
+    */
+  private def repeating(elem: String): DataFrame =
+    spark.range(1000).select(col("id").as("k"),
+      (col("id") % 10).cast("string").as("id"),
+      (col("id") % 3).cast("int").as("label"),
+      transform(array((0 until 8).map(lit): _*),
+        i => ((col("id") % 8) * 8 + i).cast(elem)).as("embedding"))
+
+  test("appendCommitted writes repeating vector elements and ids without a dictionary page") {
+    val (leaves, dict) = dictionaryPages(appendedFile("repeat", repeating("float")))
+    assert(leaves.contains("embedding.list.element"), leaves)
+    assert(!dict.contains("embedding.list.element") && !dict.contains("id"), dict)
+    // a column outside the rule keeps Parquet's own choice
+    assert(dict.contains("label"), dict)
+  }
+
+  test("under writeLegacyFormat an ARRAY<DOUBLE> vector's legacy leaf gets no dictionary page") {
+    val key = "spark.sql.parquet.writeLegacyFormat"
+    spark.conf.set(key, "true")
+    val (leaves, dict) = try dictionaryPages(appendedFile("legacy", repeating("double")))
+      finally spark.conf.unset(key)
+    val vector = leaves.filter(_.startsWith("embedding."))
+    assert(vector.size == 1 && vector != Set("embedding.list.element"), leaves)
+    assert(dict.intersect(vector).isEmpty && dict.contains("label"), dict)
+  }
+
+  test("on store-shaped data appendCommitted writes the bytes of a plain write with the same bloom") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(101)
+    val raw = (0 until 4000).map(i => (rnd.nextLong() >>> 16,
+      Seq.fill(64)(rnd.nextGaussian().toFloat), s"""{"label": ${i % 10}}"""))
+      .toDF("k", "embedding", "metadata")
+    val store = VectorStore.ingest(raw, col("k"), col("embedding"), col("metadata"))
+      .withColumn("k", col("id").cast("long"))
+    val plain = java.nio.file.Files.createTempDirectory("graft_enc_plain").toString
+    store.coalesce(1).write.mode("overwrite").options(Map(
+        "parquet.bloom.filter.enabled#id" -> "true",
+        "parquet.bloom.filter.adaptive.enabled" -> "true",
+        "parquet.bloom.filter.candidates.number#id" -> "16"))
+      .parquet(plain)
+    val plainFile = new java.io.File(plain).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(plainFile.length == 1)
+    def md5(f: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))).toSeq
+    val ours = appendedFile("store", store)
+    assert(dictionaryPages(ours)._2.intersect(Set("id", "embedding.list.element")).isEmpty)
+    assert(md5(ours) == md5(plainFile.head.getPath))
+  }
+
+  // ---- deletes by held ids ----
+
+  /** `k` = 0 until 800 (and `nulls` rows whose `k` is null) with a payload
+    * `v`, in 8 files range-clustered on `k`, committed with `k` spans.
+    */
+  private def deleteLayout(name: String, nulls: Int = 0): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_del_$name").toString
+    val rows = spark.range(800).select(col("id").as("k"), col("id").as("v"))
+      .unionByName(spark.range(nulls).select(lit(null).cast("long").as("k"), (-col("id") - 1).as("v")))
+    Layout.rangeCluster(rows, 8, "k").write.mode("overwrite").parquet(dir)
+    Layout.commitLayout(spark, dir, Seq("k"))
+    dir
+  }
+
+  test("deleteRows of 200 ids from a local frame on 8 committed files runs one job") {
+    import testImplicits._
+    val dir = deleteLayout("jobs")
+    assert(LayoutManifest.current(spark, dir).get.files.size == 8)
+    val tomb = (0L until 800L by 4).toDF("k")
+    val ((total, rewritten, deleted), jobs) =
+      JobCount(spark)(Layout.deleteRows(spark, dir, "k", tomb))
+    assert((total, rewritten, deleted) == ((8, 8, 200L)))
+    assert(jobs == 1, s"$jobs jobs for one delete")
+    val live = LayoutManifest.readData(spark, dir).select("k").collect().map(_.getLong(0)).sorted
+    assert(live.toSeq == (0L until 800L).filter(_ % 4 != 0))
+  }
+
+  test("deleteRows keeps null ids, and past the tombstone cap deletes the same rows by anti-join") {
+    import testImplicits._
+    val tombstones = Seq(
+      "local" -> Seq(Some(3L), Some(3L), None, Some(401L), Some(799L), Some(5000L)).toDF("k"),
+      "distributed" -> spark.range(0, 800, 7).select(col("id").as("k")))
+    tombstones.foreach { case (what, tomb) =>
+      val ids = tomb.collect().filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+      val want = (-5L to -1L).map(v => (None, v)) ++
+        (0L until 800L).filterNot(ids).map(k => (Some(k), k))
+      val rewrites = Seq(Layout.TombstoneCap, 2).map { cap =>
+        val dir = deleteLayout(s"${what}_$cap", nulls = 5)
+        val (total, rewritten, deleted) = Layout.deleteRowsUpTo(spark, dir, "k", tomb, cap)
+        val live = LayoutManifest.readData(spark, dir).select("k", "v").collect()
+          .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).sortBy(_._2)
+        assert(live.toSeq == want, s"$what, cap $cap")
+        assert(deleted == ids.count(_ < 800), s"$what, cap $cap")
+        (total, rewritten)
+      }
+      // past the cap every file is rewritten; under it only the spanning ones
+      assert(rewrites(1)._2 == rewrites(1)._1, s"$what: $rewrites")
+      if (what == "local") assert(rewrites(0)._2 < rewrites(0)._1, s"$what: $rewrites")
+    }
   }
 }

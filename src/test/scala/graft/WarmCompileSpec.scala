@@ -269,4 +269,20 @@ class WarmCompileSpec extends SparkSpec {
       .map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum.toDouble, 40, qd, 10))
     assert(c == 0 && cw == 0, s"$c + $cw classes compiled for warm binary searches")
   }
+
+  test("deleteRows: a warm delete of new ids compiles nothing") {
+    val sp = spark
+    import sp.implicits._
+    val path = s"$dir/delete"
+    graft.sources.Layout.rangeCluster(spark.range(400).select(col("id").as("k"),
+      col("id").cast("string").as("id")), 4, "k").write.parquet(path)
+    graft.sources.Layout.commitLayout(spark, path, Seq("k"))
+    def delete(ids: Long*) = graft.sources.Layout.deleteRows(spark, path, "k", ids.toDF("k"))._3
+    // the warm-up repeats its delete: the second run rewrites the same
+    // files and deletes nothing
+    val (deleted, c) = warmThen(delete(1L, 2L, 3L), delete(100L, 200L, 201L, 300L))
+    assert(deleted == 4L)
+    assert(graft.sources.LayoutManifest.readData(spark, path).count() == 393L)
+    assert(c == 0, s"$c classes compiled for a warm delete")
+  }
 }
