@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.{VectorFunctions => VF}
-import graft.functions.BoundParam
+import graft.functions.{BoundParam, VectorFunctions => VF}
 import graft.functions.BoundParam.param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._

@@ -324,9 +324,10 @@ object Layout {
     rewriteWithout(spark, path, snap, affected, idCol, survivors)
   }
 
-  /** The most tombstone rows a delete takes to the driver: 1M longs, ~8 MB
-    * as the rows arrive, a few tens of MB as the filter's hash set. A
-    * larger delete rewrites every file through a broadcast anti-join.
+  /** The most tombstone rows a delete takes to the driver. At the cap the
+    * driver briefly holds 1M collected rows and two boxed sets of their ids
+    * (on the order of 100 MB); a larger delete rewrites every file through
+    * a broadcast anti-join instead.
     */
   private[graft] val TombstoneCap: Int = 1 << 20
 
@@ -390,8 +391,8 @@ object Layout {
     * Phases, in crash-safety order:
     *  1. read ONLY `affected`, keep the rows `survivors` keeps (a filter
     *     by held ids or a tombstone anti-join on `idCol`), write them to a
-    *     dot-prefixed temp dir, rename
-    *     them into the layout dir under fresh unique names. A crash here
+    *     dot-prefixed temp dir, rename them into the layout dir under
+    *     fresh unique names. A crash here
     *     leaves the old manifest pointing at the intact old files — the new
     *     names are orphans [[LayoutManifest.gc]] reclaims; NOTHING has been
     *     deleted.
@@ -778,10 +779,8 @@ object Layout {
         s"no bloom sidecar for v${m.version}/$colName at $path — run " +
           "writeBloomSidecar after the last commit"))
     val fps = values.distinct.map(graft.functions.Bloom.mix64).toArray
-    val hit = Bridge.column(
-      graft.functions.BloomAnyMightContainExpr(
-        Bridge.expression(col("words")),
-        Bridge.expression(col("k")), fps))
+    val hit = Bridge.column(graft.functions.BloomAnyMightContainExpr(
+      Bridge.expression(col("words")), Bridge.expression(col("k")), fps))
     side.filter(hit).select("file").collect()
       .map(r => LayoutManifest.dataPath(path, r.getString(0)))
   }
@@ -790,10 +789,10 @@ object Layout {
     * (clustered by another column): bloom-sidecar membership of the held
     * ids ([[heldIds]], up to [[TombstoneCap]] rows) names the candidate
     * files (≈ |hit files| + fpp·F), only those are rewritten (past the cap,
-    * all of them, as in [[deleteRows]]), and
-    * the sidecar is maintained INCREMENTALLY for the new version — one
-    * bloom pass over just the rewritten files, untouched files' rows carry
-    * over. Returns (filesTotal, filesRewritten, rowsDeleted).
+    * all of them, as in [[deleteRows]]), and the sidecar is maintained
+    * INCREMENTALLY for the new version — one bloom pass over just the
+    * rewritten files, untouched files' rows carry over.
+    * Returns (filesTotal, filesRewritten, rowsDeleted).
     */
   def deleteRowsBloom(spark: SparkSession, path: String, idCol: String,
       tombstones: DataFrame, fpp: Double = 0.01): (Int, Int, Long) = {

@@ -51,8 +51,9 @@ object Parquet {
     }
   }
 
-  /** The writer options of an engine write of `df`, the one place the
-    * engine decides how Parquet encodes what it writes.
+  /** The writer options of the engine's data writes of `df` (every
+    * [[Layout]] write, [[VectorStore.persist]], the streaming batch sinks):
+    * the one place that decides how Parquet encodes them.
     *
     * Vector elements (the float/double leaf of every top-level
     * `ARRAY<FLOAT|DOUBLE>` column, `embedding.list.element`) skip the
@@ -60,8 +61,8 @@ object Parquet {
     * vectors whose values barely repeat, drop it at the first page, when
     * it fails the compression check (or passes 1 MB), and re-encode the
     * buffered values as PLAIN: the same bytes, after a hashing pass that
-    * only costs CPU. The leaf paths come from
-    * Spark's own write schema, so `writeLegacyFormat`'s spellings match.
+    * only costs CPU. The leaf paths come from Spark's own write schema, so
+    * `writeLegacyFormat`'s spellings match.
     *
     * With `keyed`, a top-level key column `id` of a type the read's file
     * index can probe ([[FileFacts.bloomable]]) also skips the dictionary
